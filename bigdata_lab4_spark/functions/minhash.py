@@ -118,10 +118,10 @@ def _make_kernel(coeffs, prime, num_features):
         idxs = sorted(idx_set)
         # Vectorized min-fold (guide §4.2: vectorize inside the Python
         # boundary): 8 × |idxs| modular contributions as ONE int64
-        # matrix op instead of 8 Python generator folds. Exact — the
-        # largest intermediate (1 + 2^18) · a < 2^49 fits int64, so
-        # these are the same integers the scalar fold produced (pinned
-        # vs MinHashLSHModel.transform in tests/test_minhash_compat).
+        # matrix op instead of 8 Python generator folds. Exact, because
+        # no intermediate overflows int64 (asserted below), so these
+        # are the same integers as the scalar fold (pinned vs
+        # MinHashLSHModel.transform in tests/test_minhash_compat).
         v = np.array(idxs, dtype=np.int64) + 1
         sig = ((v[:, None] * _coeff_a + _coeff_b) % prime).min(axis=0).tolist()
         return idxs, sig
@@ -130,6 +130,7 @@ def _make_kernel(coeffs, prime, num_features):
 
     _coeff_a = _np.array([a for a, _ in coeffs], dtype=_np.int64)
     _coeff_b = _np.array([b for _, b in coeffs], dtype=_np.int64)
+    assert (1 + num_features) * int(_coeff_a.max()) + int(_coeff_b.max()) < 2**63
 
     return index, fingerprint
 

@@ -123,43 +123,52 @@ def l02_jaccard_pairs(spark, sf_dir):
     return scored.orderBy(F.desc("jaccard"), "d1", "d2").limit(20)
 
 
-def _lsh_salt_buckets(spark) -> int:
-    """Salt fan-out for the banded near-dup self-joins (guide §2.5).
+def _salted_band_join(spark, probe, build):
+    """Salted shuffled hash join of two band tables on (band, val) — the
+    candidate join of l02b and l07b (guide §2.5/§3.1). Each ``probe`` row
+    takes one salt from its ``d1``; each ``build`` row is replicated over
+    all k salts; the join key becomes (band, val, salt).
 
-    A hot (band, val) bucket is a single join KEY: AQE skew handling
-    splits oversized *partitions*, never one enormous key, so the hot
-    minhash/simhash buckets (one bucket held 1,582 docs at sf0.1) would
-    serialize their whole probe×build workload onto one reducer of a
-    plain shuffled join. Salting splits the key itself: the probe side
-    gets a deterministic ``xxhash64(doc_id) & (k-1)`` salt, the build
-    side is replicated across all k salt values, and the join key
-    becomes (band, val, salt) — every candidate pair still meets
-    exactly once (on the probe row's salt), so the pair set is
-    provably identical to the unsalted/broadcast join
-    (tests/test_minhash_compat.py pins this at sf0.1).
+    A hot (band, val) bucket is a single join key, and AQE skew handling
+    splits oversized partitions, never one key: unsalted, one reducer
+    would do a hot bucket's whole probe×build work. Every candidate pair
+    still meets exactly once (on its probe row's salt), so the pair set is
+    the unsalted join's — tests/test_minhash_compat.py checks both callers
+    against independent DuckDB references at sf0.1. k is the power of two
+    at or below clamp(defaultParallelism, 4, 16): it multiplies the build
+    side's shuffle bytes (band metadata, never payloads), so it stays
+    bounded and is not a function of cluster size.
 
-    k multiplies the build side's shuffle bytes (metadata-sized band
-    rows, never payloads), so it is a bounded constant — NOT a function
-    of cluster size — scaled down only when the session has fewer
-    cores than the default. Override per deployment with
-    ``spark.bigdata_lab4.lsh.saltBuckets`` (e.g. larger k for a corpus
-    with a single catastrophic bucket).
+    Conditions that must hold (executed plans pinned by
+    tests/test_plans.py::test_lsh_band_joins_runtime_single_fingerprint_pass):
 
-    Always a power of two: the probe salt is ``xxhash64(doc_id) &
-    (k-1)`` rather than ``pmod`` because Pmod is a *nullable*
-    expression — the equi-join then infers ``isnotnull(salt)``,
-    rewrites it through the projection and pushes it below the
-    fingerprint exchange, which makes the two self-join branches'
-    subtrees differ and silently disables AQE exchange reuse (the
-    fingerprint would be computed twice per run; the bitwise form is
-    non-nullable, nothing is inferred, and the branches stay
-    byte-identical below the band join — observed, not theory).
+    * The salt is ``xxhash64(d1) & (k-1)`` cast to int, which is
+      non-nullable. A nullable salt (``pmod``) makes the equi-join infer
+      ``isnotnull(salt)`` and push it below the callers' fingerprint
+      exchange; the two branches' subtrees then differ, the exchange is
+      not reused, and the fingerprint pass runs twice.
+    * Both sides are repartitioned by the join key at defaultParallelism.
+      REPARTITION_BY_NUM exchanges are exempt from AQE's byte-based
+      coalescing, which sees only the few MB of band rows — not the
+      millions of candidate probes downstream — and would merge the
+      verify stage onto a few cores.
+    * The SHUFFLE_HASH hint makes the probe side (k× smaller than the
+      replicated side) the hash table. The scale it assumes: one task's
+      memory holds a hot bucket's probe rows split k ways. The hint also
+      stops AQE from turning the join into a broadcast of the whole band
+      table, which is O(corpus) on every executor.
     """
-    v = spark.conf.get("spark.bigdata_lab4.lsh.saltBuckets", "")
-    k = max(1, int(v)) if v else max(4, min(16, spark.sparkContext.defaultParallelism))
+    par = spark.sparkContext.defaultParallelism
+    k = max(4, min(16, par))
     while k & (k - 1):  # round down to a power of two
         k &= k - 1
-    return k
+    probe = probe.withColumn(
+        "salt", F.xxhash64("d1").bitwiseAND(F.lit(k - 1)).cast("int")
+    )
+    build = build.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1))))
+    probe = probe.repartition(par, "band", "val", "salt")
+    build = build.repartition(par, "band", "val", "salt")
+    return probe.hint("shuffle_hash").join(build, ["band", "val", "salt"])
 
 
 #: A candidate pair collides in several bands but must be emitted once;
@@ -175,37 +184,29 @@ _MINHASH_FIRST_BAND = (
 )
 
 
-def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6, salt_buckets: int | None = None):
-    """Full (un-truncated) MinHash-LSH candidate pair set — the
-    helper both the registered query (top-50 view below) and the
-    recall tests (tests/test_llm.py) build on.
+def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6):
+    """Full (un-truncated) MinHash-LSH candidate pair set — the helper
+    behind the registered top-50 view below and the recall tests
+    (tests/test_llm.py).
 
-    Pair-for-pair identical to the previous
-    ``MinHashLSHModel.approxSimilarityJoin(feats, feats, threshold)``
-    formulation (same seeded signatures, same banded candidate set,
-    same strict ``< threshold`` on the same Jaccard doubles — proven by
-    tests/test_minhash_compat.py), but ~200× faster at sf0.1: the ML
-    implementation evaluated its ``keyDistance`` UDF per candidate-pair
-    *occurrence* (pre-``distinct``, so up to 8× per pair), boxing both
-    2^18-dim sparse vectors into Sets each time, on ONE task (the
-    1-file scan side of a broadcast join is never re-partitioned).
-    Here the per-document fingerprint is computed once, Arrow-batched
-    (functions/minhash.py); candidates come from a SALTED shuffled
-    equi-join on (band, minhash value, salt) — parallel, hot buckets
-    split across salts, no O(corpus) broadcast — with first-band dedup
-    and the index-set Jaccard fused in as native expressions, so only
-    true result pairs materialize."""
+    Pair-for-pair identical to ``MinHashLSHModel.approxSimilarityJoin``
+    on ``HashingTF`` features (same seeded signatures, same banded
+    candidates, same strict ``< threshold`` on the same Jaccard doubles):
+    tests/test_minhash_compat.py pins it against the model at sf0.001
+    and against an independent DuckDB reference at sf0.1. The
+    per-document fingerprint is computed once, Arrow-batched
+    (functions/minhash.py); candidates come from ``_salted_band_join``,
+    with first-band dedup and the index-set Jaccard as native
+    expressions, so only true result pairs materialize."""
     from bigdata_lab4_spark.functions.minhash import minhash_fingerprint_udf
 
     minhash_fingerprint = minhash_fingerprint_udf()
     d = load_table(spark, sf_dir, "documents")
-    # NOTE no filter on the UDF output: a filter referencing a
-    # UDF-computed column makes the optimizer evaluate the UDF twice —
-    # once below the pushed filter, once in the projection (guide §4.4;
-    # observed as 2 ArrowEvalPython nodes per join branch). Zero-token
-    # documents need no explicit filter anyway: their empty ``sig``
-    # yields no rows at the posexplode, so they can never join —
-    # mirroring MinHashLSH's rejection of empty vectors.
+    # No filter on the UDF output: a filter referencing a UDF-computed
+    # column makes the optimizer evaluate the UDF twice, below the pushed
+    # filter and in the projection (guide §4.4). Zero-token documents
+    # need no filter: their empty ``sig`` yields no band rows, mirroring
+    # MinHashLSH's rejection of empty vectors.
     # Explicit isnotnull(doc_id): the d1<d2 pair filter makes the join
     # infer exactly this predicate on the two band branches; stating it
     # on the SHARED subtree keeps the dictionary branch's scan
@@ -218,59 +219,45 @@ def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6, salt_buckets: int |
         F.col("f.idx").alias("idx"),
         # Minhash values are ((1+e)·a + b) mod 2038074743 < 2^31, so the
         # int cast is lossless; it halves the signature bytes on every
-        # band row — including the salt-replicated build side (§2.3
-        # "narrower types"). Join equality and the first-band compares
-        # see the same values as int32.
+        # band row, including the salt-replicated build side.
         F.col("f.sig").cast("array<int>").alias("sig"),
     )
-    # The corpus arrives as few large files (sf0.1: ONE row-group →
-    # one partition), and every plan downstream of a 1-partition scan
-    # runs on one task — including the O(candidate-pairs) join probe,
-    # which is exactly how approxSimilarityJoin ended up single-task
-    # for 8 minutes. Spreading the *fingerprints* (≈200 B/doc — never
-    # the document bodies, guide §2.3/§8) across the session's
-    # parallelism bounds the probe work per task. Explicit N, not AQE:
-    # coalescing is byte-based and cannot see that 10 MB of band rows
-    # explodes into ~25M joined candidates downstream.
+    # The corpus arrives as few large files (sf0.1: one row-group, one
+    # partition), and every plan downstream of a 1-partition scan runs
+    # on one task. Spreading the fingerprints (≈200 B/doc, never the
+    # document bodies) across the session's parallelism bounds the probe
+    # work per task. Explicit N, not AQE: coalescing is byte-based and
+    # cannot see that a few MB of band rows explode into millions of
+    # joined candidates downstream.
     fp = fp.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    # posexplode_OUTER on purpose: the non-outer generator makes the
-    # optimizer infer a ``size(sig) > 0`` filter and push it below the
-    # exchange — a filter referencing the UDF column, which re-triggers
-    # the §4.4 double evaluation this function just avoided. The outer
-    # variant infers nothing; an empty-sig document contributes one
-    # null (band, val) row that can never match the equi-join.
-    # r22: 64-bit SET MASKS for the per-pair verify (guide §1.2 "make
-    # the per-task work cheap once the shape is right"). The verify is
-    # |A∩B|/|A∪B| over HashingTF index sets; measured at sf0.1 the
-    # O(|A|+|B|) ``array_intersect`` per candidate pair was ~4.7 s of
-    # the 6.5 s total (12.35 M pairs — this corpus's 31-token
-    # vocabulary makes LSH non-selective). When the GLOBAL index
+    # posexplode_OUTER on purpose (below): the non-outer generator makes
+    # the optimizer infer a ``size(sig) > 0`` filter and push it below
+    # the exchange — a filter referencing the UDF column, which
+    # re-triggers the §4.4 double evaluation. The outer variant infers
+    # nothing; an empty-sig document contributes one null (band, val)
+    # row that can never match the equi-join.
+    # 64-bit SET MASKS for the per-pair verify: when the GLOBAL index
     # dictionary fits 64 bits, each doc's index set becomes one BIGINT
-    # and the intersection one codegen'd ``bit_count(m1 & m2)`` —
-    # identical integers, hence bit-identical Jaccard doubles. The
-    # dictionary probe is BOUNDED at any scale: the 65 smallest
-    # distinct indices via distinct + TakeOrdered (never an unbounded
-    # collect); 65 rows ⇒ vocabulary > 64 ⇒ masks stay null and the
-    # exact array path runs unchanged (pinned by
+    # and |A∩B| one codegen'd ``bit_count(m1 & m2)`` — the same integers,
+    # hence bit-identical Jaccard doubles. The dictionary probe is
+    # bounded at any scale: the 65 smallest distinct indices via
+    # distinct + TakeOrdered; 65 rows ⇒ vocabulary > 64 ⇒ masks stay
+    # null and the exact array path runs (pinned by
     # tests/test_minhash_compat.py::test_mask_fallback_above_64_vocab).
-    # As a bonus the replicated build side of the salted join below
-    # ships an 8-byte mask instead of the index array.
     # explode_OUTER + nulls-last, not explode: the non-outer generator
     # infers size(idx)>0 / isnotnull(idx) filters that push below the
     # fingerprint exchange, making this subtree differ from the band
-    # branches' and silently disabling the exchange reuse that keeps
-    # the Arrow fingerprint pass single-evaluated. The one null row an
-    # empty corpus contributes sorts last, so it can only occupy a
-    # limit slot when fewer than 65 distinct indices exist — and
-    # collect_list drops it — so the dictionary stays complete exactly
-    # when it is trusted.
+    # branches' and disabling the exchange reuse that keeps the Arrow
+    # fingerprint pass single-evaluated. The one null row an empty
+    # corpus contributes sorts last, so it can only occupy a limit slot
+    # when fewer than 65 distinct indices exist — and collect_list drops
+    # it — so the dictionary stays complete exactly when it is trusted.
     # The when() is a value-level no-op (doc_id is non-null by the fp
     # filter, sig is never null from the UDF) whose only job is to
     # REFERENCE doc_id and sig: column pruning otherwise narrows this
     # branch's copy of the fingerprint exchange to [idx], the subtree
-    # stops being byte-identical to the band branches', and the
-    # exchange is materialized twice — i.e. the Arrow fingerprint pass
-    # runs again just to list distinct indices.
+    # stops being byte-identical to the band branches', and the Arrow
+    # fingerprint pass runs again just to list distinct indices.
     vocab = (
         fp.select(
             F.explode_outer(
@@ -331,8 +318,8 @@ def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6, salt_buckets: int |
     # |A∩B| / |A∪B| over HashingTF index sets — exactly
     # MinHashLSHModel.keyDistance (intersection/union sizes as doubles,
     # 1 - i/u), exact integers so the doubles are bit-identical —
-    # popcount over the masks when the dictionary fits, the original
-    # array intersection otherwise (lazy CASE branch, never both).
+    # popcount over the masks when the dictionary fits, the array
+    # intersection otherwise (lazy CASE branch, never both).
     inter = (
         F.when(
             F.col("m1").isNull(), F.size(F.array_intersect("i1", "i2"))
@@ -341,48 +328,8 @@ def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6, salt_buckets: int |
         .cast("double")
     )
     union = F.col("n1") + F.col("n2") - inter
-    # SALTED SHUFFLED band join (r22, guide §2.5/§3.1). The r21 form
-    # broadcast the full corpus band table — fine at sf0.1, an
-    # O(corpus) driver/executor OOM at cluster scale. A *plain*
-    # shuffled join is no answer either: it partitions by the skewed
-    # (band, val) key and one hot minhash bucket is a single key AQE
-    # cannot split (observed: leaving the strategy to AQE's estimates
-    # of a Python-UDF subtree flipped runs between ~4 s and ~50 s).
-    # Salting fixes the key itself — see _lsh_salt_buckets — and the
-    # SHUFFLE_HASH hint on the probe side (the k× smaller side of
-    # every (band, val, salt) partition) pins the build side and stops
-    # AQE from converting the join back to an unbounded broadcast.
-    # Both branches still hang below the ONE doc_id exchange above, so
-    # at runtime the Arrow fingerprint pass executes once and the
-    # second branch reads a ReusedExchange (pinned by
-    # tests/test_plans.py::
-    # test_lsh_band_joins_runtime_single_fingerprint_pass).
-    # salt_buckets=0/1 keeps the legacy broadcast join — used only by
-    # the equivalence test to prove the pair sets identical at sf0.1.
-    n_salt = _lsh_salt_buckets(spark) if salt_buckets is None else int(salt_buckets)
-    if n_salt >= 2:
-        a = a.withColumn(
-            "salt", F.xxhash64("d1").bitwiseAND(F.lit(n_salt - 1)).cast("int")
-        )
-        b = b.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        # Explicit join-key repartition at the session's parallelism:
-        # AQE's byte-based partition coalescing sees only the few MB of
-        # fingerprint metadata crossing this exchange, not the
-        # millions of candidate probes generated downstream of it, and
-        # merges the pair-verify stage onto a handful of cores
-        # (measured: ~2x slower at sf0.1). REPARTITION_BY_NUM
-        # exchanges are exempt from coalescing; the width still
-        # derives from defaultParallelism, never a constant.
-        par = spark.sparkContext.defaultParallelism
-        a = a.repartition(par, "band", "val", "salt")
-        b = b.repartition(par, "band", "val", "salt")
-        joined = a.hint("shuffle_hash").join(b, ["band", "val", "salt"])
-    else:
-        joined = a.join(F.broadcast(b), ["band", "val"])
     scored = (
-        joined
+        _salted_band_join(spark, a, b)
         .filter(F.col("d1") < F.col("d2"))
         .filter(F.expr(_MINHASH_FIRST_BAND))
         .select(
@@ -395,8 +342,7 @@ def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6, salt_buckets: int |
             # TWICE per candidate — once for the filter, once for the
             # rounded output (no cross-operator CSE). One unused
             # non-deterministic column keeps the filter above, so the
-            # intersection is evaluated exactly once per pair
-            # (measured 11.8 s → 7.4 s at sf0.1).
+            # intersection is evaluated exactly once per pair.
             F.monotonically_increasing_id().alias("_no_pushdown"),
         )
     )
@@ -485,21 +431,6 @@ def l03_knn_exact(spark, sf_dir):
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10)
 
 
-def _brp_unit_vectors(model):
-    """The fitted ``BucketedRandomProjectionLSHModel``'s seeded random
-    unit vectors as plain Python lists (numHashTables × dim doubles —
-    bounded at any corpus size), or ``None`` when the session exposes
-    no py4j bridge (Spark Connect). ``randUnitVectors`` is a
-    ``private[ml]`` accessor, which compiles to a public method, so the
-    classic-session bridge can call it; the ``None`` path keeps the
-    ``model.transform`` pipeline (same rows — tests/test_llm.py)."""
-    try:
-        juvs = model._java_obj.randUnitVectors()
-        return [list(juvs[i].toArray()) for i in range(len(juvs))]
-    except Exception:
-        return None
-
-
 @query(
     "l03b_ann_lsh",
     oracle=None,  # bucketed-random-projection candidates are seed-specific
@@ -508,84 +439,37 @@ def _brp_unit_vectors(model):
     "Recall vs l03_knn_exact is asserted in tests/test_llm.py.",
 )
 def l03b_ann_lsh(spark, sf_dir):
-    # r21: same seeded model, same buckets, same distances — but the
-    # candidate join and the euclidean verify are native expressions
-    # instead of approxSimilarityJoin's per-pair-occurrence Scala UDF +
-    # distinct over full vector rows (the pattern that cost l02b 8
-    # minutes; here the 5-row query side bounds the damage locally,
-    # but the shape still shuffled candidate pairs carrying BOTH
-    # vectors and verified before dedup). sqrt(Σ(x−y)²) as a
-    # sequential zip_with/aggregate fold reproduces Vectors.sqdist's
-    # loop order exactly (proven by full-pair equality vs the replaced
-    # implementation at sf0.001/0.01/0.1 before committing). Pair
-    # dedup across the 4 hash tables is the same first-collision-table
-    # filter l02b/l07b use — no distinct shuffle.
-    #
-    # r22: the hashes themselves go native too — the last per-row JVM
-    # UDF chain (array_to_vector → LSHModel.transform →
-    # vector_to_array) is gone from the hot path (guide §4.1). The
-    # seeded model's hash is floor(dot(v, u_t) / bucketLength) over
-    # numHashTables random unit vectors that depend only on
-    # (seed, input dim): fit() reads nothing but one row's dimension,
-    # so the vectors are extracted once on the driver (4 × dim
-    # doubles — bounded at ANY corpus size) and embedded as literals.
-    # The sequential zip_with/aggregate dot fold lands on the same
-    # doubles as the JVM's gemv accumulation, and floor() on the same
-    # bucket ids — pinned value-for-value against model.transform at
-    # sf0.001/0.01/0.1 (tests/test_llm.py::
-    # test_ann_lsh_native_hashes_match_model_transform), so buckets,
-    # candidate set and distances are bit-identical to the r21 form.
-    # Sessions without a py4j bridge (Spark Connect) keep the
-    # model.transform path — same rows by the same test.
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    bucket_length = 2.0
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="vec",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=4,
-        seed=42,
+    # The seeded model's hashes, natively: floor(dot(v, u_t) / 2.0) over
+    # the pinned BRP_UNIT_VECTORS (functions/embeddings.py) — no fit job,
+    # no per-row JVM UDF, no py4j call.
+    # sqrt(Σ(x−y)²) as a sequential zip_with/aggregate fold reproduces
+    # Vectors.sqdist's loop order exactly. Pair dedup across the 4 hash
+    # tables is the same first-collision-table filter l02b/l07b use — no
+    # distinct shuffle.
+    from bigdata_lab4_spark.functions.embeddings import (
+        BRP_UNIT_VECTORS,
+        brp_hashes_col,
     )
-    model = lsh.fit(
-        e.limit(1).select(array_to_vector("embedding").alias("vec"))
+
+    dim = len(BRP_UNIT_VECTORS[0])
+    # A null or wrong-size embedding fails the query: zip_with would pad
+    # it with nulls, and its null buckets would leave the join silently.
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.when(
+            F.coalesce(F.size("embedding"), F.lit(-1)) != dim,
+            F.raise_error(
+                F.format_string(
+                    f"l03b_ann_lsh: embedding of vec_id %s has dim %s, expected {dim}",
+                    F.col("vec_id"),
+                    F.size("embedding"),
+                )
+            ),
+        )
+        .otherwise(F.col("embedding"))
+        .alias("embedding"),
     )
-    unit_vectors = _brp_unit_vectors(model)
-
-    if unit_vectors is not None:
-        sig = e.select(
-            "vec_id",
-            "embedding",
-            F.array(
-                *[
-                    F.floor(
-                        F.aggregate(
-                            F.zip_with(
-                                "embedding",
-                                F.array(*[F.lit(x) for x in uv]),
-                                lambda x, y: x.cast("double") * y,
-                            ),
-                            F.lit(0.0),
-                            lambda s, v: s + v,
-                        )
-                        / F.lit(bucket_length)
-                    ).cast("double")
-                    for uv in unit_vectors
-                ]
-            ).alias("sig"),
-        )
-    else:
-        from pyspark.ml.functions import vector_to_array
-
-        sig = model.transform(
-            e.withColumn("vec", array_to_vector("embedding"))
-        ).select(
-            "vec_id",
-            "embedding",
-            F.transform("hashes", lambda v: vector_to_array(v)[0]).alias("sig"),
-        )
+    sig = e.select("vec_id", "embedding", brp_hashes_col("embedding", 2.0).alias("sig"))
     bands = sig.select(
         "vec_id", "embedding", "sig",
         F.posexplode_outer("sig").alias("tbl", "bucket"),
@@ -840,18 +724,7 @@ def l06_embedding_math(spark, sf_dir):
 #: identically by Spark and DuckDB (UTF-8 bytes), and 15 hex chars =
 #: 60 bits fit a signed BIGINT on both engines, so the whole
 #: fingerprint — unlike seeded MinHash (l02b) — is bit-for-bit
-#: reproducible in the oracle. All Catalyst higher-order functions,
-#: JVM-side.
-#:
-#: Shape matters (opt guide §1.2 "per-task work"): the token-hash
-#: array appears exactly ONCE, and the per-bit majority vote is a
-#: single fold over it carrying a 60-counter accumulator. The naive
-#: per-bit formulation (transform(sequence(0,59), i -> filter(hs,
-#: …))) references ``hs`` twice per bit; higher-order functions are
-#: interpreted (no codegen, no common-subexpression elimination), so
-#: after CollapseProject inlines ``hs`` the tokenize+md5 work ran
-#: ~120× per row — measured 42.7 s for l07b at sf0.1 vs ~1 s for
-#: this single-pass form (OPTIMIZATION_r21.md).
+#: reproducible in the oracle.
 def simhash_fingerprints(spark, sf_dir):
     """(doc_id, fp) for every non-null document — shared by l07,
     l07b and the recall tests.
@@ -861,17 +734,10 @@ def simhash_fingerprints(spark, sf_dir):
     as explode → codegen'd hash aggregate: per exploded token hash the
     60 ``(h >> i) & 1`` contributions feed 60 ``sum`` buffers plus a
     ``count``, partially aggregated map-side, so the one shuffle
-    carries 61 longs per document (guide §2.3). The previous
-    formulation folded a 60-counter struct accumulator over the token
-    array with ``aggregate``/``zip_with`` — higher-order lambdas are
-    interpreted (no codegen), allocate a fresh 60-element array per
-    token, and the whole corpus ran on the scan's single partition
-    (one row-group file ⇒ one task): 1.0 s at sf0.1 vs ~0.15 s for
-    this shape, and the aggregate leaves the fingerprints
-    hash-distributed across the session's shuffle partitions — which
-    downstream l07b needs anyway for a parallel candidate join.
+    carries 61 longs per document (guide §2.3) and leaves the
+    fingerprints hash-distributed for l07b's parallel candidate join.
     ``explode_outer`` + ``count(h)`` keep zero-token documents in the
-    result with fp = 0, exactly as the fold produced."""
+    result with fp = 0."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     h = (
         d.select(
@@ -959,20 +825,16 @@ def l07b_simhash_neardup(spark, sf_dir):
     return simhash_neardup_pairs(spark, sf_dir)
 
 
-def simhash_neardup_pairs(spark, sf_dir, salt_buckets: int | None = None):
+def simhash_neardup_pairs(spark, sf_dir):
     # Banded candidate JOIN on (band, val): 4 band rows of 16 bytes per
     # document — keys and metadata, never payloads (guide §2.3, §8).
     # The Hamming ≤ 6 verify and the first-band dedup (a pair is
     # emitted only from the FIRST band the two fingerprints collide
     # in — replaces a pair-distinct shuffle) run as join residual
     # conditions: codegen'd bit ops, evaluated per probe match, so
-    # only final result pairs materialize. The previous formulation
-    # collected each bucket with collect_list and generated the upper
-    # triangle inside an interpreted higher-order lambda — the hottest
-    # (band, val) bucket at sf0.1 held 1 582 docs ⇒ 1.25 M pairs
-    # generated single-threaded inside ONE row (a straggler AQE cannot
-    # split; guide §2.5): 4.1 s vs ~0.8 s for the join, which spreads
-    # the same probes across the fingerprint aggregate's partitioning.
+    # only final result pairs materialize. Both join branches hang below
+    # the fingerprint aggregate's exchange, which runs once (see
+    # _salted_band_join).
     fp = simhash_fingerprints(spark, sf_dir)
     bands = fp.select(
         "doc_id", "fp", F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band")
@@ -988,44 +850,8 @@ def simhash_neardup_pairs(spark, sf_dir, salt_buckets: int | None = None):
     b = bands.select(
         F.col("doc_id").alias("d2"), F.col("fp").alias("fp2"), "band", "val"
     )
-    # SALTED SHUFFLED band join (r22): the r21 broadcast of the whole
-    # corpus band table is an O(corpus) OOM at cluster scale, and a
-    # plain shuffled join lands each hot (band, val) bucket — a single
-    # key, 1,582 docs at sf0.1 — on one reducer AQE cannot split
-    # (guide §2.5). Salting splits the key: probe rows carry
-    # pmod(xxhash64(d1), k), the build side is replicated over all k
-    # salts, every pair meets exactly once, so the candidate set is
-    # identical (oracle hash-match + broadcast-vs-salted equality test
-    # at sf0.1). SHUFFLE_HASH on the probe side (k× smaller per
-    # partition) pins the build side and blocks AQE's broadcast
-    # conversion. The fingerprint aggregate below still computes once:
-    # both branches share its exchange (ReusedExchange at runtime).
-    # salt_buckets=0/1 keeps the legacy broadcast join for the
-    # equivalence test.
-    n_salt = _lsh_salt_buckets(spark) if salt_buckets is None else int(salt_buckets)
-    if n_salt >= 2:
-        a = a.withColumn(
-            "salt", F.xxhash64("d1").bitwiseAND(F.lit(n_salt - 1)).cast("int")
-        )
-        b = b.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        # Explicit join-key repartition at the session's parallelism:
-        # AQE's byte-based partition coalescing sees only the few MB of
-        # fingerprint metadata crossing this exchange, not the
-        # millions of candidate probes generated downstream of it, and
-        # merges the pair-verify stage onto a handful of cores
-        # (measured: ~2x slower at sf0.1). REPARTITION_BY_NUM
-        # exchanges are exempt from coalescing; the width still
-        # derives from defaultParallelism, never a constant.
-        par = spark.sparkContext.defaultParallelism
-        a = a.repartition(par, "band", "val", "salt")
-        b = b.repartition(par, "band", "val", "salt")
-        joined = a.hint("shuffle_hash").join(b, ["band", "val", "salt"])
-    else:
-        joined = a.join(F.broadcast(b), ["band", "val"])
     cand = (
-        joined
+        _salted_band_join(spark, a, b)
         .filter(F.col("d1") < F.col("d2"))
         .filter(
             F.expr(

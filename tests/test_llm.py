@@ -10,12 +10,18 @@ seeded (seed=42), so the measured recalls are deterministic.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 
 from bigdata_lab4_spark.queries.llm import minhash_lsh_pairs
 from bigdata_lab4_spark.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
+SF_DIRS = {
+    sf: os.path.join(os.path.dirname(SF_DIR), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")
+}
 
 
 @pytest.fixture(scope="module")
@@ -76,63 +82,70 @@ def test_ann_lsh_recall_at_10_vs_exact_knn(spark, queries):
     assert sum(recalls) / len(recalls) >= 0.8
 
 
-def test_ann_lsh_native_hashes_match_model_transform(spark, queries, monkeypatch):
-    """r22: l03b's bucket hashes are native floor(dot/bucketLength)
-    expressions over driver-extracted seeded unit vectors (no per-row
-    JVM UDF). Pin (a) the native signature value-for-value against
-    ``model.transform`` over the whole corpus, and (b) the registered
-    query's full output row-for-row against the Connect fallback path
-    (which IS the r21 model.transform pipeline)."""
+def test_ann_lsh_native_hashes_match_model_transform(spark):
+    """l03b's bucket hashes are native floor(dot/bucketLength)
+    expressions over the pinned ``BRP_UNIT_VECTORS``. Pin the constants
+    against a fitted seed-42 model's unit vectors, and the native hashes
+    value-for-value against ``model.transform`` at every SF."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector, vector_to_array
     from pyspark.sql import functions as F
 
-    import bigdata_lab4_spark.queries.llm as llm
     from bigdata_lab4_spark.catalog import load_table
-
-    e = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding", array_to_vector("embedding").alias("vec")
+    from bigdata_lab4_spark.functions.embeddings import (
+        BRP_UNIT_VECTORS,
+        brp_hashes_col,
     )
+
+    def vectors(sf_dir):
+        return load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding", array_to_vector("embedding").alias("vec")
+        )
+
     lsh = BucketedRandomProjectionLSH(
         inputCol="vec", outputCol="hashes", bucketLength=2.0, numHashTables=4, seed=42
     )
-    model = lsh.fit(e)
-    unit_vectors = llm._brp_unit_vectors(model)
-    assert unit_vectors is not None and len(unit_vectors) == 4
+    model = lsh.fit(vectors(SF_DIR))
+    juvs = model._java_obj.randUnitVectors()
+    assert [tuple(juvs[i].toArray()) for i in range(len(juvs))] == list(BRP_UNIT_VECTORS)
 
-    ref = model.transform(e).select(
-        "vec_id", F.transform("hashes", lambda v: vector_to_array(v)[0]).alias("sig")
-    )
-    nat = e.select(
-        "vec_id",
-        F.array(
-            *[
-                F.floor(
-                    F.aggregate(
-                        F.zip_with(
-                            "embedding",
-                            F.array(*[F.lit(x) for x in uv]),
-                            lambda x, y: x.cast("double") * y,
-                        ),
-                        F.lit(0.0),
-                        lambda s, v: s + v,
-                    )
-                    / F.lit(2.0)
-                ).cast("double")
-                for uv in unit_vectors
-            ]
-        ).alias("nsig"),
-    )
-    joined = ref.join(nat, "vec_id")
-    assert joined.count() == e.count()
-    assert joined.filter(F.expr("sig != nsig")).count() == 0
+    for sf_dir in SF_DIRS.values():
+        e = vectors(sf_dir)
+        ref = model.transform(e).select(
+            "vec_id", F.transform("hashes", lambda v: vector_to_array(v)[0]).alias("sig")
+        )
+        nat = e.select("vec_id", brp_hashes_col("embedding", 2.0).alias("nsig"))
+        joined = ref.join(nat, "vec_id")
+        assert joined.count() == e.count(), sf_dir
+        assert joined.filter(F.expr("sig != nsig")).count() == 0, sf_dir
 
-    native_rows = [tuple(r) for r in queries["l03b_ann_lsh"](spark, SF_DIR).collect()]
-    monkeypatch.setattr(llm, "_brp_unit_vectors", lambda m: None)
-    fallback_rows = [
-        tuple(r) for r in queries["l03b_ann_lsh"](spark, SF_DIR).collect()
-    ]
-    assert native_rows == fallback_rows
+
+#: (rows, sha256 prefix of the collected rows' repr) of l03b per SF,
+#: recorded from the implementation that fitted the model on every call.
+L03B_ROWS = {
+    "sf0.001": (2334, "3d9e5c2cd0caaef1"),
+    "sf0.01": (2322, "2e7ff03d86838f82"),
+    "sf0.1": (9310, "110eb1a329f371f6"),
+}
+
+
+def test_ann_lsh_rows_pinned(spark, queries):
+    """l03b's full output at every SF is row-for-row the fitted model's."""
+    for sf, want in L03B_ROWS.items():
+        rows = [tuple(r) for r in queries["l03b_ann_lsh"](spark, SF_DIRS[sf]).collect()]
+        got = (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()[:16])
+        assert got == want, sf
+
+
+def test_ann_lsh_rejects_wrong_dimension(spark, queries, tmp_path):
+    """An embedding that is not 64-dim fails the query loudly instead of
+    hashing into null buckets that the join drops without a word."""
+    spark.createDataFrame(
+        [(i, [0.1] * 63, 0) for i in range(8)],
+        "vec_id bigint, embedding array<float>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(Exception, match="has dim 63, expected 64"):
+        queries["l03b_ann_lsh"](spark, str(tmp_path)).collect()
 
 
 def test_ivf_ann_recall_at_10_vs_exact_knn(spark, queries):

@@ -10,10 +10,13 @@ each layer of that claim:
 2. index set → seeded 8-table minhash signature (embedded seed-42
    coefficients, HASH_PRIME modulus);
 3. the full candidate-pair set with Jaccard distances, against the
-   real ``approxSimilarityJoin`` at sf0.001.
+   real ``approxSimilarityJoin`` at sf0.001, and against a DuckDB
+   reference built from the public kernel at sf0.1.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -27,6 +30,7 @@ from bigdata_lab4_spark.functions.minhash import (
 from bigdata_lab4_spark.queries.llm import minhash_lsh_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
 
 TOKENS = ["hello", "world", "a", "ab", "abc", "abcd", "Ünïcode", "€uro", "日本語", ""]
 
@@ -107,41 +111,101 @@ def test_pairs_match_approx_similarity_join(spark):
     assert want == got
 
 
-def _multiset_equal(lhs, rhs, cols):
-    """Multiset equality of two DataFrames via one tagged union +
-    group-count pass (cheaper than two exceptAll evaluations — each
-    side is computed exactly once)."""
-    tagged = lhs.select(*cols).withColumn("_src", F.lit(1)).unionByName(
-        rhs.select(*cols).withColumn("_src", F.lit(2))
+def test_pairs_match_duckdb_reference_sf01(spark, tmp_path):
+    """The full pair set at sf0.1, the scale bench.py times, against
+    a reference built outside Spark: the public kernel
+    ``doc_fingerprint`` per document, then a DuckDB band self-join,
+    first-band dedup and exact index-set Jaccard. Pairs must match
+    exactly and distances within 1e-9."""
+    import re
+
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    docs = con.execute(
+        f"SELECT doc_id, text FROM '{SF01_DIR}/documents.parquet'"
+    ).fetchall()
+    cache: dict = {}
+    fps = []
+    for doc_id, text in docs:
+        # Spark's split on \s+ is Java's ASCII whitespace class.
+        toks = [t for t in re.split(r"\s+", text or "", flags=re.ASCII) if t]
+        if doc_id is not None and toks:
+            fps.append((doc_id, *doc_fingerprint(toks, cache)))
+    vocab = sorted({i for _, idxs, _ in fps for i in idxs})
+    # ≤ 63 distinct indices: each index set is an exact non-negative
+    # BIGINT mask, so |A∩B| is a popcount (per-pair list intersection
+    # is too slow at this pair count).
+    assert len(vocab) <= 63
+    bit = {i: 1 << n for n, i in enumerate(vocab)}
+    bands = pd.DataFrame(
+        [
+            (d, band, val, len(idxs), sum(bit[i] for i in idxs), *sig)
+            for d, idxs, sig in fps
+            for band, val in enumerate(sig)
+        ],
+        columns=["doc_id", "band", "val", "n", "mask", *[f"s{j}" for j in range(8)]],
     )
-    mismatch = (
-        tagged.groupBy(*cols)
-        .agg(
-            F.sum(F.when(F.col("_src") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("_src") == 2, 1).otherwise(0)).alias("n2"),
-        )
-        .filter("n1 != n2")
+    con.register("bands", bands)
+    first_band = " AND ".join(
+        f"(a.band <= {j} OR a.s{j} != b.s{j})" for j in range(7)
     )
-    return mismatch.count() == 0
+    con.execute(
+        f"""
+        CREATE TABLE ref AS
+        SELECT d1, d2, round(dist, 6) AS dist FROM (
+            SELECT a.doc_id AS d1, b.doc_id AS d2,
+                   1 - bit_count(a.mask & b.mask)
+                       / (a.n + b.n - bit_count(a.mask & b.mask)) AS dist
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.val = b.val AND a.doc_id < b.doc_id
+            WHERE {first_band})
+        WHERE dist < 0.6
+        """
+    )
+    out = str(tmp_path / "pairs")
+    minhash_lsh_pairs(spark, SF01_DIR).write.parquet(out)
+    con.execute(f"CREATE VIEW got AS SELECT * FROM '{out}/*.parquet'")
+    n_ref, n_spark, n_bad = con.execute(
+        """
+        SELECT (SELECT count(*) FROM ref), (SELECT count(*) FROM got),
+               (SELECT count(*)
+                FROM ref r FULL OUTER JOIN got s ON r.d1 = s.d1 AND r.d2 = s.d2
+                WHERE r.d1 IS NULL OR s.d1 IS NULL
+                   OR abs(r.dist - s.jaccard_dist) > 1e-9)
+        """
+    ).fetchone()
+    assert n_ref > 0 and n_spark == n_ref and n_bad == 0
 
 
-def test_salted_join_equals_broadcast_sf01(spark):
-    """r22: the salted shuffled band join (the scale-true default)
-    must produce the exact pair multiset of the legacy broadcast band
-    join it replaced — at sf0.1, the scale the driver benches."""
-    new = minhash_lsh_pairs(spark, "/root/testdata/sf0.1")
-    old = minhash_lsh_pairs(spark, "/root/testdata/sf0.1", salt_buckets=0)
-    assert _multiset_equal(new, old, ["d1", "d2", "jaccard_dist"])
+def test_simhash_pairs_match_oracle_sf01(spark, tmp_path):
+    """l07b's full result at sf0.1 is the same multiset as its DuckDB
+    oracle's — beyond the oracle suite's check at sf0.01."""
+    import duckdb
 
-
-def test_simhash_salted_equals_broadcast_sf01(spark):
-    """r22: same proof for the simhash banded near-dup join (l07b) —
-    beyond the DuckDB oracle's full-result check at sf0.001/0.01."""
+    import bigdata_lab4_spark.queries  # noqa: F401
     from bigdata_lab4_spark.queries.llm import simhash_neardup_pairs
+    from bigdata_lab4_spark.registry import REGISTRY
 
-    new = simhash_neardup_pairs(spark, "/root/testdata/sf0.1")
-    old = simhash_neardup_pairs(spark, "/root/testdata/sf0.1", salt_buckets=0)
-    assert _multiset_equal(new, old, ["d1", "d2", "hamming"])
+    out = str(tmp_path / "pairs")
+    simhash_neardup_pairs(spark, SF01_DIR).write.parquet(out)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF01_DIR}/documents.parquet'"
+    )
+    con.execute(f"CREATE TABLE want AS {REGISTRY['l07b_simhash_neardup'].oracle}")
+    con.execute(f"CREATE VIEW got AS SELECT d1, d2, hamming FROM '{out}/*.parquet'")
+    n_want, n_got, n_diff = con.execute(
+        """
+        SELECT (SELECT count(*) FROM want), (SELECT count(*) FROM got),
+               (SELECT count(*) FROM (
+                   (SELECT * FROM want EXCEPT ALL SELECT * FROM got)
+                   UNION ALL
+                   (SELECT * FROM got EXCEPT ALL SELECT * FROM want)))
+        """
+    ).fetchone()
+    assert n_want > 0 and n_got == n_want and n_diff == 0
 
 
 def test_mask_fallback_above_64_vocab(spark, tmp_path):
