@@ -4,11 +4,23 @@ contract (`/root/reference/src/app.py:67-138`)."""
 
 from __future__ import annotations
 
+import collections
+import contextlib
 import json
+import logging
+import sys
+import threading
 import urllib.request
 
+import pyarrow.parquet as pq
 import pytest
 
+from bigdata_lab4_spark import serving
+from bigdata_lab4_spark.engine import (
+    create_predictions_table,
+    insert_prediction,
+    top_k_predictions,
+)
 from bigdata_lab4_spark.ml.pipeline import (
     NEGATIVE,
     POSITIVE,
@@ -118,3 +130,113 @@ def test_invalid_limit_422_payloads_distinguish_type_and_range(served):
     assert code == 422
     assert out["detail"][0]["type"] == "value_error.number.not_ge"
     assert "greater than or equal" in out["detail"][0]["msg"]
+
+
+def test_predictions_on_fresh_store_is_empty_list(served):
+    """The store is created when the API starts, so ``/predictions/``
+    before any ``/predict/`` is an empty list, as in the reference —
+    not a 500 for a path that does not exist yet."""
+    code, out = _call(served, "POST", "/predictions/?limit=10")
+    assert code == 200 and out == {"predictions": []}
+
+
+def test_concurrent_predicts_store_every_acknowledged_row_once(spark, tiny_model, tmp_path):
+    """Concurrent appends to one store must not lose or duplicate a row:
+    the store's (message, prediction) multiset equals the acknowledged
+    responses."""
+    path = str(tmp_path / "preds")
+    api = SentimentAPI(spark, tiny_model, predictions_path=path)
+    server, _ = api.start_background()
+    port = server.server_address[1]
+    acked, lock = [], threading.Lock()
+
+    def client(c: int) -> None:
+        for i in range(8):
+            msg = f"{'great happy' if i % 2 else 'awful sad'} client{c} req{i}"
+            code, out = _call(port, "POST", "/predict/", {"message": msg})
+            if code == 200:
+                with lock:
+                    acked.append((msg, out["sentiment"]))
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+        server.shutdown()
+    assert not any(t.is_alive() for t in threads)
+    assert len(acked) == 32 and api.failed_appends == 0
+    stored = pq.read_table(path).to_pydict()
+    assert collections.Counter(zip(stored["message"], stored["prediction"])) == (
+        collections.Counter(acked)
+    )
+
+
+def test_failed_append_is_logged_counted_and_still_served(
+    spark, tiny_model, tmp_path, monkeypatch, caplog
+):
+    def broken(*args, **kwargs):
+        raise OSError("store unavailable")
+
+    monkeypatch.setattr(serving, "insert_prediction", broken)
+    api = SentimentAPI(spark, tiny_model, predictions_path=str(tmp_path / "preds"))
+    server, _ = api.start_background()
+    try:
+        with caplog.at_level(logging.WARNING, logger=serving.__name__):
+            code, out = _call(
+                server.server_address[1], "POST", "/predict/", {"message": "great happy"}
+            )
+    finally:
+        server.shutdown()
+    assert code == 200 and out == {"sentiment": POSITIVE}
+    assert api.failed_appends == 1
+    warnings = [r for r in caplog.records if r.name == serving.__name__]
+    assert len(warnings) == 1 and warnings[0].levelno == logging.WARNING
+    assert "audit append" in warnings[0].getMessage()
+    assert "store unavailable" in str(warnings[0].exc_info[1])
+
+
+@contextlib.contextmanager
+def _job_group(spark, name: str):
+    """Run the body's Spark jobs under job group ``name``; yields a
+    callable returning (jobs, tasks) of that group so far, read through
+    the public StatusTracker."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def shape() -> tuple[int, int]:
+        jobs = st.getJobIdsForGroup(name)
+        tasks = sum(
+            st.getStageInfo(sid).numTasks
+            for jid in jobs
+            for sid in st.getJobInfo(jid).stageIds
+        )
+        return len(jobs), tasks
+
+    sc.setJobGroup(name, name)
+    try:
+        yield shape
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_audit_append_is_one_task_and_topk_one_job(spark, tmp_path):
+    """The serving cost rests on this job shape: an append is one job of
+    one task (a parallelized one-row list runs ``defaultParallelism``
+    tasks), and a top-k read is one job (no schema-inference job)."""
+    path = str(tmp_path / "preds")
+    create_predictions_table(spark, path)
+    insert_prediction(spark, "warm up", "Positive sentiment", path)
+    with _job_group(spark, "test.insert_prediction") as shape:
+        insert_prediction(spark, "great movie", "Positive sentiment", path)
+    assert shape() == (1, 1)
+    with _job_group(spark, "test.top_k_predictions") as shape:
+        rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert shape()[0] == 1
+    assert [r["message"] for r in rows] == ["great movie", "warm up"]
