@@ -755,10 +755,9 @@ def simhash_fingerprints(spark, sf_dir):
     )
     counted = h.groupBy("doc_id").agg(
         F.count("h").alias("n"),
-        *[
-            F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"c{i}")
-            for i in range(60)
-        ],
+        # One SQL string per bit: built as Column chains, the 60 sums
+        # cost ~4,100 py4j round trips, most of this query's planning.
+        *[F.expr(f"sum(shiftright(h, {i}) & 1) AS c{i}") for i in range(60)],
     )
     fp_expr = " + ".join(
         f"IF(2 * coalesce(c{i}, CAST(0 AS BIGINT)) > n, "

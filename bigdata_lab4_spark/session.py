@@ -59,8 +59,10 @@ def get_spark(
         # zstd beats snappy on ratio at similar read speed (guide §6) for
         # everything the engine writes (predictions sink, streaming).
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # the driver testdata's events.ts is TIMESTAMP(NANOS) — read the
-        # physical int64; catalog.load_table converts to µs timestamps
+        # older testdata generations wrote events.ts as TIMESTAMP(NANOS),
+        # which the vectorized reader rejects — read the physical int64;
+        # catalog.load_table converts it to µs timestamps. Current files
+        # are TIMESTAMP(MICROS) and read unchanged under this conf.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     if extra_conf:

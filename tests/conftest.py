@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -31,3 +32,28 @@ def duck():
         )
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def job_group(spark, name: str):
+    """Run the body's Spark jobs under job group ``name``; yields a
+    callable returning (jobs, tasks) of that group so far, read through
+    the public StatusTracker."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def shape() -> tuple[int, int]:
+        jobs = st.getJobIdsForGroup(name)
+        tasks = sum(
+            st.getStageInfo(sid).numTasks
+            for jid in jobs
+            for sid in st.getJobInfo(jid).stageIds
+        )
+        return len(jobs), tasks
+
+    sc.setJobGroup(name, name)
+    try:
+        yield shape
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -5,7 +5,6 @@ contract (`/root/reference/src/app.py:67-138`)."""
 from __future__ import annotations
 
 import collections
-import contextlib
 import json
 import logging
 import sys
@@ -27,6 +26,7 @@ from bigdata_lab4_spark.ml.pipeline import (
     SentimentPipeline,
 )
 from bigdata_lab4_spark.serving import SentimentAPI
+from tests.conftest import job_group
 
 
 def _call(port: int, method: str, path: str, body: dict | None = None):
@@ -201,31 +201,6 @@ def test_failed_append_is_logged_counted_and_still_served(
     assert "store unavailable" in str(warnings[0].exc_info[1])
 
 
-@contextlib.contextmanager
-def _job_group(spark, name: str):
-    """Run the body's Spark jobs under job group ``name``; yields a
-    callable returning (jobs, tasks) of that group so far, read through
-    the public StatusTracker."""
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-
-    def shape() -> tuple[int, int]:
-        jobs = st.getJobIdsForGroup(name)
-        tasks = sum(
-            st.getStageInfo(sid).numTasks
-            for jid in jobs
-            for sid in st.getJobInfo(jid).stageIds
-        )
-        return len(jobs), tasks
-
-    sc.setJobGroup(name, name)
-    try:
-        yield shape
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def test_audit_append_is_one_task_and_topk_one_job(spark, tmp_path):
     """The serving cost rests on this job shape: an append is one job of
     one task (a parallelized one-row list runs ``defaultParallelism``
@@ -233,10 +208,10 @@ def test_audit_append_is_one_task_and_topk_one_job(spark, tmp_path):
     path = str(tmp_path / "preds")
     create_predictions_table(spark, path)
     insert_prediction(spark, "warm up", "Positive sentiment", path)
-    with _job_group(spark, "test.insert_prediction") as shape:
+    with job_group(spark, "test.insert_prediction") as shape:
         insert_prediction(spark, "great movie", "Positive sentiment", path)
     assert shape() == (1, 1)
-    with _job_group(spark, "test.top_k_predictions") as shape:
+    with job_group(spark, "test.top_k_predictions") as shape:
         rows = top_k_predictions(spark, limit=10, path=path).collect()
     assert shape()[0] == 1
     assert [r["message"] for r in rows] == ["great movie", "warm up"]
