@@ -64,6 +64,18 @@ def get_spark(
         # catalog.load_table converts it to µs timestamps. Current files
         # are TIMESTAMP(MICROS) and read unchanged under this conf.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Whole-stage codegen keeps its compiled classes in one JVM-wide
+        # LRU cache, 100 entries by default. One pass over the 89
+        # registered queries at sf0.001 compiles 659 distinct classes,
+        # and one pass of the six neardup queries (l01 … l07b) ~117, so
+        # with 100 entries each warm neardup pass recompiled 85-89 of its
+        # classes (Janino, then JIT). 1000 holds the whole registry with
+        # headroom (4-core host, pyspark 4.1.2). The cap is a static conf, read once per JVM when the first
+        # class is compiled: a JVM whose first session did not come
+        # from here (e.g. the vanilla-session driver contract) keeps
+        # Spark's 100. bench.py does not show the thrash: it repeats
+        # each query back to back, so its classes are still cached.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -8,6 +8,16 @@ import pytest
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 
+#: The LLM-data queries the benchmark's neardup workload runs.
+NEARDUP_QUERIES = (
+    "l01_exact_dedup",
+    "l02b_minhash_lsh",
+    "l03_knn_exact",
+    "l03c_ivf_ann",
+    "l07_simhash",
+    "l07b_simhash_neardup",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -15,17 +15,7 @@ from py4j.protocol import Py4JJavaError
 import bigdata_lab4_spark.queries  # noqa: F401  (registers every query)
 from bigdata_lab4_spark.catalog import SCHEMAS, TABLES, load_table, register_views
 from bigdata_lab4_spark.registry import REGISTRY
-from tests.conftest import SF_DIR, SF_DIR_SMOKE, job_group
-
-#: The LLM-data queries the benchmark's neardup workload runs.
-NEARDUP_QUERIES = (
-    "l01_exact_dedup",
-    "l02b_minhash_lsh",
-    "l03_knn_exact",
-    "l03c_ivf_ann",
-    "l07_simhash",
-    "l07b_simhash_neardup",
-)
+from tests.conftest import NEARDUP_QUERIES, SF_DIR, SF_DIR_SMOKE, job_group
 
 
 def test_schemas_cover_every_table_but_events():

@@ -215,3 +215,12 @@ def test_audit_append_is_one_task_and_topk_one_job(spark, tmp_path):
         rows = top_k_predictions(spark, limit=10, path=path).collect()
     assert shape()[0] == 1
     assert [r["message"] for r in rows] == ["great movie", "warm up"]
+
+
+def test_create_predictions_table_is_one_task(spark, tmp_path):
+    """Creating the store writes an empty relation from an empty RDD:
+    one job of one task, and no Python worker (an empty parallelized
+    list runs ``defaultParallelism`` tasks)."""
+    with job_group(spark, "test.create_predictions_table") as shape:
+        create_predictions_table(spark, str(tmp_path / "preds"))
+    assert shape() == (1, 1)
