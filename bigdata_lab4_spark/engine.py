@@ -10,10 +10,14 @@ mounted.
 
 from __future__ import annotations
 
-import os
+import datetime
 import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType, StringType, TimestampType
 
 from bigdata_lab4_spark.catalog import DEFAULT_SF_DIR, register_views
@@ -63,59 +67,68 @@ def top_k_predictions(
     return src.orderBy("timestamp", ascending=False).limit(limit)
 
 
-#: One lock per process around every create and append to a
-#: predictions store. Concurrent appends to one parquet path share its
-#: ``_temporary`` directory, and one job's commit deletes the other's
-#: uncommitted files; the serving threads (ThreadingHTTPServer) take
-#: turns instead.
-_STORE_LOCK = threading.Lock()
+#: Appends take unique file names and never conflict; the lock makes
+#: ``create_predictions_table``'s check-then-write atomic against every
+#: commit in the process. Re-entrant: the create commits while holding it.
+_STORE_LOCK = threading.RLock()
+
+#: ``PREDICTIONS_SCHEMA`` in the store's files: non-null UTC-microsecond
+#: timestamps, which Spark reads beside its own writer's INT96 files.
+_ARROW_SCHEMA = to_arrow_schema(PREDICTIONS_SCHEMA)
+
+
+def _store_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of a store, via the session's py4j bridge."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        raise TypeError(f"a predictions store needs a classic SparkSession, not {type(spark).__name__}")
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _write_store_file(spark: SparkSession, path: str, rows: list[dict]) -> None:
+    """Commit ``rows`` as one new parquet file under ``path``, with no
+    Spark job. pyarrow encodes one row group without dictionary, column
+    statistics or Arrow schema blob (in a one-row file each is only
+    footer bytes). The path's own Hadoop FileSystem writes a hidden temp
+    file and renames it to ``part-<uuid>.zstd.parquet``; readers skip
+    ``.`` names. On failure the temp file is deleted and the error raised."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA), buf, compression="zstd",
+                   use_dictionary=False, write_statistics=False, store_schema=False)
+    data = buf.getvalue().to_pybytes()
+    fs, jdir = _store_fs(spark, path)
+    name = uuid.uuid4().hex
+    tmp, part = jdir.suffix(f"/.{name}.tmp"), jdir.suffix(f"/part-{name}.zstd.parquet")
+    with _STORE_LOCK:
+        try:
+            out = fs.create(tmp, False)
+            try:
+                out.write(data)
+            finally:
+                out.close()
+            if not fs.rename(tmp, part):
+                raise OSError(f"could not rename {tmp} to {part}")
+        except Exception:
+            fs.delete(tmp, False)
+            raise
 
 
 def create_predictions_table(spark: SparkSession, path: str) -> None:
     """Create-if-not-exists for the predictions sink (SURVEY §2 S6),
     mirroring ``CREATE TABLE IF NOT EXISTS predictions``
     (`/root/reference/src/database.py:53-66`) — but as a parquet
-    directory any number of executors can append to, not a
-    single-node MergeTree.
+    directory of one file per append, not a single-node MergeTree.
 
-    The existence check goes through the Hadoop FileSystem API, so it
-    works on whatever filesystem ``path`` lives on (HDFS/S3A/local),
-    not just the driver's local disk. In-process concurrency is
-    serialized by ``_STORE_LOCK``; cross-process create-vs-append
-    races are out of scope here, matching the reference's single
-    ClickHouse DDL connection.
-
-    The empty table comes from an empty RDD: it has no partitions, so
-    no Python worker starts, and the write is one Spark job of one task
-    (the footer file). Parallelizing an empty Python list instead runs
-    ``defaultParallelism`` tasks and starts ``pyspark.daemon`` on a
-    fresh session; avoiding that took the serve benchmark's ``setup_s``
-    from 3.79 to 2.11 s (median of 10 runs each, 4-core host)."""
+    The check and the empty file go through the path's FileSystem
+    (HDFS/S3A/local): no Spark job. A session without a py4j bridge
+    (Spark Connect) raises ``TypeError`` here, at start-up. Cross-process
+    create-vs-append races are out of scope, as in the reference."""
+    fs, jpath = _store_fs(spark, path)
     with _STORE_LOCK:
-        jvm = getattr(spark, "_jvm", None)
-        if jvm is not None:
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.isDirectory(jpath):
-                for st in fs.listStatus(jpath):
-                    name = st.getPath().getName()
-                    if name.endswith(".parquet") or name == "_SUCCESS":
-                        return
-            rows = spark.sparkContext.emptyRDD()
-        else:
-            # Spark Connect sessions expose no py4j bridge (_jvm /
-            # _jsc are private classic-session API); fall back to a
-            # driver-local path check so the local-filesystem case
-            # keeps working. Remote filesystems under Connect would
-            # need a server-side DDL instead — out of scope, matching
-            # the reference's single ClickHouse DDL connection.
-            if os.path.isdir(path) and any(
-                n.endswith(".parquet") or n == "_SUCCESS"
-                for n in os.listdir(path)
-            ):
-                return
-            rows = []
-        spark.createDataFrame(rows, PREDICTIONS_SCHEMA).write.mode("overwrite").parquet(path)
+        names = [st.getPath().getName() for st in fs.listStatus(jpath)] if fs.isDirectory(jpath) else []
+        if not any(n.endswith(".parquet") or n == "_SUCCESS" for n in names):
+            _write_store_file(spark, path, [])
 
 
 def insert_prediction(
@@ -123,33 +136,20 @@ def insert_prediction(
 ) -> None:
     """Append one served prediction with a server-side timestamp
     (SURVEY §2 S7) — the reference's per-request insert
-    (`src/database.py:68-78`, called from `src/app.py:76`), with
-    ``current_timestamp()`` standing in for ClickHouse's
-    ``DEFAULT now()``.
+    (`src/database.py:68-78`, called from `src/app.py:76`), with the
+    driver's UTC clock, read once per append, for ``DEFAULT now()``.
 
-    The row is a one-row SQL relation with named parameters (no
-    string interpolation), so the append is one Spark job of one task
-    writing one parquet file; the append is committed when this
-    returns. The table is created once, by whoever opens the store
-    (:class:`~bigdata_lab4_spark.serving.SentimentAPI` at start-up);
-    an append to a missing path creates the directory.
+    The row is one file committed by :func:`_write_store_file` before
+    this returns: no Spark job, so no scheduling, writer set-up or job
+    commit per request. An append to a missing path creates the
+    directory; ``SentimentAPI`` creates the table once, at start-up.
 
-    Scale note: one row per write is the *serving* shape, exactly as
-    in the reference. On a 4-core host the append measured ~170 ms
-    warm (median of a traced ``perfbench`` serve run). Building the
-    row with ``createDataFrame`` instead parallelizes a one-row list:
-    a job of ``defaultParallelism`` tasks plus an empty file per
-    append, ~540 ms on the same host. Appends in one process take
-    turns on ``_STORE_LOCK``. A high-QPS deployment batches through
-    the streaming sink (`bigdata_lab4_spark.streaming`) instead —
-    parquet append amortizes across a micro-batch rather than paying
-    a file per request (SURVEY §4.3, row-at-a-time insert
-    anti-pattern).
+    Scale note: one row per file is the *serving* shape, as in the
+    reference. On a 4-core host the traced ``perfbench`` serve run
+    measured the append at 11–16 ms (~120 ms as a one-task Spark job). A
+    high-QPS deployment batches through the streaming sink
+    (`bigdata_lab4_spark.streaming`) instead, amortizing a file over a
+    micro-batch (SURVEY §4.3, row-at-a-time insert anti-pattern).
     """
-    row = spark.sql(
-        "SELECT current_timestamp() AS timestamp,"
-        " :message AS message, :prediction AS prediction",
-        args={"message": message, "prediction": prediction},
-    )
-    with _STORE_LOCK:
-        row.write.mode("append").parquet(path)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    _write_store_file(spark, path, [{"timestamp": now, "message": message, "prediction": prediction}])

@@ -27,16 +27,15 @@ scores against the broadcast-sized local parameter copy (O(classes ×
 max_features) floats) — no Spark job per request, so request latency
 is microseconds of Python, not a cluster round-trip. Only the audit
 trail touches storage: the per-request parquet append mirrors the
-reference's per-request ClickHouse insert. Each append is one Spark
-job of one task writing one file, committed before the response
-(~170 ms warm on a 4-core host); appends in one process take turns
-on the store's lock. The store is created once, when the API starts,
-so ``/predictions/`` on a fresh store is an empty list; creating it is
-one Spark job of one task and starts no Python worker (~1.7 s less
-start-up than parallelizing an empty list, on a 4-core host). A failed
-append is logged and counted (``failed_appends``), and the prediction
-is still served. A high-QPS deployment replaces the per-request
-append with the micro-batching streaming sink
+reference's per-request ClickHouse insert. Each append is one parquet
+file that the driver encodes and commits through the store's Hadoop
+FileSystem before the response, with no Spark job (11–16 ms on a
+4-core host); only ``/predictions/`` runs a Spark job. The store is created
+once, when the API starts, with no Spark job either, so
+``/predictions/`` on a fresh store is an empty list. A failed append is
+logged and counted (``failed_appends``), and the prediction is still
+served; every 500 is logged with its traceback. A high-QPS deployment
+replaces the per-request append with the micro-batching streaming sink
 (:mod:`bigdata_lab4_spark.streaming`).
 """
 
@@ -67,7 +66,8 @@ class SentimentAPI:
     the reference behaves the same when ClickHouse is unreachable
     (`src/app.py:62-65`: "Continuing without database support").
     With a store, the table is created here, once, as the reference
-    creates its table at start-up.
+    creates its table at start-up; a session without a py4j bridge
+    (Spark Connect) raises ``TypeError`` here.
 
     ``failed_appends`` counts the audit appends that raised.
     """
@@ -168,6 +168,7 @@ class SentimentAPI:
                     except Exception:
                         # reference: any failure → 500 "Prediction
                         # failed" (`src/app.py:85-87`)
+                        logger.exception("POST /predict/ failed")
                         self._json(500, {"detail": "Prediction failed"})
                 elif route == "/predictions":
                     raw = parse_qs(parsed.query).get("limit", ["10"])[0]
@@ -212,6 +213,7 @@ class SentimentAPI:
                     except LookupError:
                         self._json(503, {"detail": "Database not available"})
                     except Exception:
+                        logger.exception("POST /predictions/ failed")
                         self._json(500, {"detail": "Failed to fetch predictions"})
                 else:
                     self._json(404, {"detail": "Not Found"})

@@ -5,17 +5,21 @@ contract (`/root/reference/src/app.py:67-138`)."""
 from __future__ import annotations
 
 import collections
+import datetime
 import json
 import logging
+import os
 import sys
 import threading
 import urllib.request
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bigdata_lab4_spark import serving
+from bigdata_lab4_spark import engine, serving
 from bigdata_lab4_spark.engine import (
+    PREDICTIONS_SCHEMA,
     create_predictions_table,
     insert_prediction,
     top_k_predictions,
@@ -201,26 +205,157 @@ def test_failed_append_is_logged_counted_and_still_served(
     assert "store unavailable" in str(warnings[0].exc_info[1])
 
 
-def test_audit_append_is_one_task_and_topk_one_job(spark, tmp_path):
-    """The serving cost rests on this job shape: an append is one job of
-    one task (a parallelized one-row list runs ``defaultParallelism``
-    tasks), and a top-k read is one job (no schema-inference job)."""
+def test_audit_append_runs_no_job_and_topk_one_job(spark, tmp_path):
+    """The serving cost rests on this job shape: an append commits its
+    file from the driver and runs no Spark job, and a top-k read is one
+    job (no schema-inference job)."""
     path = str(tmp_path / "preds")
     create_predictions_table(spark, path)
     insert_prediction(spark, "warm up", "Positive sentiment", path)
     with job_group(spark, "test.insert_prediction") as shape:
         insert_prediction(spark, "great movie", "Positive sentiment", path)
-    assert shape() == (1, 1)
+    assert shape() == (0, 0)
     with job_group(spark, "test.top_k_predictions") as shape:
         rows = top_k_predictions(spark, limit=10, path=path).collect()
     assert shape()[0] == 1
     assert [r["message"] for r in rows] == ["great movie", "warm up"]
 
 
-def test_create_predictions_table_is_one_task(spark, tmp_path):
-    """Creating the store writes an empty relation from an empty RDD:
-    one job of one task, and no Python worker (an empty parallelized
-    list runs ``defaultParallelism`` tasks)."""
+def test_create_predictions_table_runs_no_job(spark, tmp_path):
+    """Creating the store writes its empty file from the driver: no
+    Spark job, so no task and no Python worker."""
     with job_group(spark, "test.create_predictions_table") as shape:
         create_predictions_table(spark, str(tmp_path / "preds"))
-    assert shape() == (1, 1)
+    assert shape() == (0, 0)
+
+
+def test_store_on_session_without_py4j_bridge_fails_at_start(tiny_model, tmp_path):
+    """A session with no py4j bridge (as under Spark Connect) cannot
+    reach the store's FileSystem: the API refuses it at start-up, not
+    on the first request."""
+
+    class BridgelessSession:
+        pass
+
+    with pytest.raises(TypeError, match="classic SparkSession"):
+        SentimentAPI(BridgelessSession(), tiny_model, predictions_path=str(tmp_path / "preds"))
+    assert not (tmp_path / "preds").exists()
+
+
+def test_predict_500_is_logged(served, caplog):
+    with caplog.at_level(logging.ERROR, logger=serving.__name__):
+        code, out = _call(served, "POST", "/predict/", {"message": ""})
+    assert code == 500 and out == {"detail": "Prediction failed"}
+    errors = [r for r in caplog.records if r.name == serving.__name__]
+    assert len(errors) == 1 and errors[0].levelno == logging.ERROR
+    assert "/predict/" in errors[0].getMessage() and errors[0].exc_info
+
+
+def test_predictions_500_is_logged(served, monkeypatch, caplog):
+    def broken(*args, **kwargs):
+        raise RuntimeError("scan failed")
+
+    monkeypatch.setattr(serving, "top_k_predictions", broken)
+    with caplog.at_level(logging.ERROR, logger=serving.__name__):
+        code, out = _call(served, "POST", "/predictions/?limit=10")
+    assert code == 500 and out == {"detail": "Failed to fetch predictions"}
+    errors = [r for r in caplog.records if r.name == serving.__name__]
+    assert len(errors) == 1 and errors[0].levelno == logging.ERROR
+    assert "/predictions/" in errors[0].getMessage()
+    assert "scan failed" in str(errors[0].exc_info[1])
+
+
+def test_awkward_messages_round_trip_exactly(spark, served, tmp_path):
+    """Messages come back byte-for-byte through the route and through
+    a plain parquet reader, newest first."""
+    path = str(tmp_path / "preds")  # the store ``served`` opened
+    msgs = [
+        "café naïve — 日本語",
+        "great 😀🎉 day",
+        'he said "great" and \'happy\'',
+        "great\nhappy",
+        "great happy " * 850,
+    ]
+    for m in msgs:
+        insert_prediction(spark, m, POSITIVE, path)
+    code, out = _call(served, "POST", "/predictions/?limit=10")
+    assert code == 200
+    assert [p["message"] for p in out["predictions"]] == msgs[::-1]
+    assert sorted(pq.read_table(path).column("message").to_pylist()) == sorted(msgs)
+
+
+class _FailingFs:
+    """A store FileSystem whose commit fails at ``step``."""
+
+    def __init__(self, fs, step: str) -> None:
+        self.fs, self.step = fs, step
+
+    def __getattr__(self, name):
+        return getattr(self.fs, name)
+
+    def create(self, path, overwrite):
+        out = self.fs.create(path, overwrite)
+        if self.step != "write":
+            return out
+
+        class Stream:
+            def write(self, data):
+                raise OSError("disk full")
+
+            def close(self):
+                out.close()
+
+        return Stream()
+
+    def rename(self, src, dst):
+        return False if self.step == "rename" else self.fs.rename(src, dst)
+
+
+@pytest.mark.parametrize("step", ["write", "rename"])
+def test_failed_commit_raises_and_leaves_no_file(spark, tmp_path, monkeypatch, step):
+    path = str(tmp_path / "preds")
+    create_predictions_table(spark, path)
+    insert_prediction(spark, "kept", POSITIVE, path)
+    before = sorted(os.listdir(path))
+    store_fs = engine._store_fs
+
+    def failing(spark, path):
+        fs, jpath = store_fs(spark, path)
+        return _FailingFs(fs, step), jpath
+
+    monkeypatch.setattr(engine, "_store_fs", failing)
+    with pytest.raises(OSError):
+        insert_prediction(spark, "lost", NEGATIVE, path)
+    # neither the part file nor the temp file (or their checksums) remain
+    assert sorted(os.listdir(path)) == before
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [r["message"] for r in rows] == ["kept"]
+
+
+def test_store_from_sparks_own_writer_keeps_working(spark, tmp_path):
+    """A store that already holds a file from Spark's parquet writer
+    (INT96 timestamps) reads back with the driver-written files, through
+    Spark and through pyarrow."""
+    path = str(tmp_path / "preds")
+    old = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    spark.createDataFrame([(old, "from spark", NEGATIVE)], PREDICTIONS_SCHEMA).coalesce(1).write.parquet(path)
+    (spark_file,) = [n for n in os.listdir(path) if n.endswith(".parquet")]
+    assert pq.ParquetFile(os.path.join(path, spark_file)).schema.column(0).physical_type == "INT96"
+    create_predictions_table(spark, path)  # the store exists: no empty file added
+    insert_prediction(spark, "first new", POSITIVE, path)
+    insert_prediction(spark, "second new", NEGATIVE, path)
+
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [r["message"] for r in rows] == ["second new", "first new", "from spark"]
+    assert rows[2]["timestamp"] == old
+    table = pq.read_table(path)
+    assert table.num_rows == 3
+    by_msg = dict(
+        zip(
+            table.column("message").to_pylist(),
+            table.column("timestamp").cast(pa.timestamp("us", tz="UTC")).to_pylist(),
+        )
+    )
+    # collected timestamps are naive local time; pyarrow's are UTC
+    for r in rows:
+        assert by_msg[r["message"]] == r["timestamp"].astimezone(datetime.timezone.utc)
