@@ -5,8 +5,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is forced through the full plan with a noop sink (no
-collect — measures engine throughput, not driver materialization).
+Each query is forced through the full plan with a noop sink by
+``tools/profile.py``'s timing loop: no collect, so it measures engine
+throughput, and the warm-up stays out of the samples.
 """
 
 from __future__ import annotations
@@ -14,9 +15,7 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,21 +59,13 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from bigdata_lab4_spark.session import get_spark
-    from bigdata_lab4_spark.registry import REGISTRY
-    import bigdata_lab4_spark.queries  # noqa: F401
+    from tools.profile import time_queries
 
     spark = get_spark(app_name="bigdata-lab4-bench")
 
-    # one throwaway action so the first measured query doesn't absorb
-    # JVM/codegen/filesystem warmup
-    from bigdata_lab4_spark.catalog import load_table
-
-    load_table(spark, sf_dir, "lineitem").count()
-
     # Median of N runs per query: single-run timings on a shared machine
-    # cannot distinguish load noise from real regressions (the r16→r17
-    # suite drifted +1 s with zero code change). N defaults to 5;
-    # override with SPARK_GRAFT_BENCH_RUNS (min 1).
+    # cannot distinguish load noise from real regressions. N defaults to
+    # 5; override with SPARK_GRAFT_BENCH_RUNS (min 1).
     try:
         runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     except ValueError:
@@ -82,31 +73,15 @@ def main() -> None:
         # default methodology rather than crash before printing JSON
         runs = 5
 
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    total = 0.0
-    for name in HEADLINE:
-        fn = REGISTRY[name].fn
-        # warm the input file listing/footers out of the measurement once
-        df = fn(spark, sf_dir)
-        samples: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        med = statistics.median(samples)
-        timings[name] = round(med, 3)
-        spreads[name] = round(max(samples) - min(samples), 3)
-        total += med
-
+    medians, spreads = time_queries(spark, sf_dir, HEADLINE, runs)
     print(
         json.dumps(
             {
                 "metric": "declared-query suite wall-clock (median of %d)" % runs,
-                "value": round(total, 3),
+                "value": round(sum(medians.values()), 3),
                 "unit": "sec",
-                "queries": timings,
-                "spread": spreads,
+                "queries": {n: round(v, 3) for n, v in medians.items()},
+                "spread": {n: round(v, 3) for n, v in spreads.items()},
                 "runs": runs,
                 "sf": sf,
             }

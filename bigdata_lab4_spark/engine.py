@@ -41,29 +41,19 @@ def run_sql(spark: SparkSession, sql: str, sf_dir: str = DEFAULT_SF_DIR) -> Data
     return spark.sql(sql)
 
 
-def top_k_predictions(
-    spark: SparkSession,
-    table: str = "predictions",
-    limit: int = 10,
-    path: str | None = None,
-) -> DataFrame:
+def top_k_predictions(spark: SparkSession, path: str, limit: int = 10) -> DataFrame:
     """The reference's one real query, parameterized (no string
     interpolation — SURVEY §7.5): last-k rows newest first
     (`/root/reference/src/database.py:80-88`). Spark plans this as
     TakeOrderedAndProject — no global sort materialized.
 
-    ``path`` reads a parquet predictions table written by
-    :func:`insert_prediction` with the known ``PREDICTIONS_SCHEMA``
-    (no schema-inference job: one Spark job per call); without it,
-    ``table`` resolves through the session catalog (temp view /
-    warehouse table).
+    ``path`` is a parquet predictions store written by
+    :func:`insert_prediction`, read with the known ``PREDICTIONS_SCHEMA``
+    (no schema-inference job: one Spark job per call).
     """
     if not isinstance(limit, int) or limit < 0:
         raise ValueError("limit must be a non-negative int")
-    if path:
-        src = spark.read.schema(PREDICTIONS_SCHEMA).parquet(path)
-    else:
-        src = spark.table(table)
+    src = spark.read.schema(PREDICTIONS_SCHEMA).parquet(path)
     return src.orderBy("timestamp", ascending=False).limit(limit)
 
 

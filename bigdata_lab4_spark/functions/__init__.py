@@ -4,7 +4,6 @@ from bigdata_lab4_spark.functions.text import (
     tokens_col,
 )
 from bigdata_lab4_spark.functions.embeddings import (
-    cosine_col,
     dot_col,
     l2_norm_col,
 )
@@ -13,7 +12,6 @@ __all__ = [
     "PUNCTUATION",
     "clean_text_col",
     "tokens_col",
-    "cosine_col",
     "dot_col",
     "l2_norm_col",
 ]

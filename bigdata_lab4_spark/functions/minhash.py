@@ -1,12 +1,10 @@
 """MinHash fingerprints bit-compatible with Spark ML's
 ``HashingTF(numFeatures=2^18)`` → ``MinHashLSH(seed=42, numHashTables=8)``.
 
-Why this exists (OPTIMIZATION_r21.md): ``LSHModel.approxSimilarityJoin``
-evaluates its Jaccard ``keyDistance`` UDF per *candidate pair occurrence*
-(its filter is pushed below the pair-dedup ``distinct``), boxing both
-sparse vectors into Scala Sets each time — measured 8+ minutes on ONE
-task at sf0.1 (the probe side of the broadcast join inherits the 1-file
-scan's single partition). The replacement (queries/llm.py::
+Why this exists: ``LSHModel.approxSimilarityJoin`` evaluates its
+Jaccard ``keyDistance`` UDF per *candidate pair occurrence* (its filter
+is pushed below the pair-dedup ``distinct``), boxing both sparse vectors
+into Scala Sets each time. The replacement (queries/llm.py::
 minhash_lsh_pairs) keeps the exact same candidate set and distances but
 computes them from per-document index arrays with native expressions;
 only the per-document fingerprint (token → HashingTF index → 8 minhash

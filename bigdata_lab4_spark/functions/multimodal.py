@@ -82,17 +82,29 @@ def with_asset_columns(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_payload(payload: bytes, mime: str) -> bytes:
-    """STUB decoder. Real image/audio/video decoding needs codec
-    libraries this container doesn't ship; the ``text/plain`` branch
-    is the deterministic identity so the surrounding plumbing stays
-    fully testable."""
-    if mime != "text/plain":
-        raise NotImplementedError(
-            f"no decoder for mime {mime!r}: image/audio/video codecs "
-            "are stubbed in this environment (SURVEY §2 L5)"
-        )
-    return payload
+def _make_decoder():
+    """Build the stub decoder. A nested def, like
+    ``functions/minhash.py::_make_kernel``: cloudpickle cannot resolve it
+    as a module attribute, so a worker closure that captures it ships it
+    by value."""
+
+    def decode(payload: bytes, mime: str) -> bytes:
+        """STUB decoder. Real image/audio/video decoding needs codec
+        libraries the package does not depend on; the ``text/plain``
+        branch is the deterministic identity so the surrounding plumbing
+        stays fully testable."""
+        if mime != "text/plain":
+            raise NotImplementedError(
+                f"no decoder for mime {mime!r}: image/audio/video codecs "
+                "are stubbed (SURVEY §2 L5)"
+            )
+        return payload
+
+    return decode
+
+
+#: The public decoder; both worker closures ship this same function.
+decode_payload = _make_decoder()
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
@@ -110,15 +122,14 @@ def extract_features(assets: DataFrame) -> DataFrame:
     )
 
     # The worker closure is deliberately SELF-CONTAINED: it captures
-    # only an int and does its own imports, so cloudpickle ships it
-    # fully by value. Referencing module globals (decode_payload)
-    # would pickle them as `(bigdata_lab4_spark…, name)` lookups and
-    # crash any executor that doesn't have the package on its
-    # PYTHONPATH — the driver contract gives no --py-files hook, and
-    # on a real cluster the same failure appears whenever the code
-    # ships only to the driver. The inlined branch mirrors
-    # :func:`decode_payload` (kept public for direct use/tests).
-    chunk_bytes = CHUNK_BYTES
+    # only an int and the nested decoder and does its own imports, so
+    # cloudpickle ships it fully by value. A module-level function
+    # would pickle as a `(bigdata_lab4_spark…, name)` lookup and crash
+    # any executor that doesn't have the package on its PYTHONPATH —
+    # the `__spark_entry__` contract gives no --py-files hook, and on a
+    # real cluster the same failure appears whenever the package is
+    # installed only where the session starts.
+    chunk_bytes, decode = CHUNK_BYTES, decode_payload
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -126,15 +137,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
         import pandas as _pd
 
         for pdf in batches:
-            decoded = []
-            for p, m in zip(pdf["payload"], pdf["mime"]):
-                if m != "text/plain":
-                    raise NotImplementedError(
-                        f"no decoder for mime {m!r}: image/audio/video "
-                        "codecs are stubbed in this environment "
-                        "(SURVEY §2 L5)"
-                    )
-                decoded.append(bytes(p))
+            decoded = [decode(bytes(p), m) for p, m in zip(pdf["payload"], pdf["mime"])]
             yield _pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -183,7 +186,7 @@ def sample_frames(assets: DataFrame) -> DataFrame:
     flat = assets.select(
         "doc_id", F.col("meta.mime").alias("mime"), F.col("meta.n_bytes").alias("n_bytes")
     )
-    frame_bytes, frame_step = FRAME_BYTES, FRAME_STEP
+    frame_bytes, frame_step, decode = FRAME_BYTES, FRAME_STEP, decode_payload
 
     def expand_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
@@ -191,12 +194,7 @@ def sample_frames(assets: DataFrame) -> DataFrame:
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_len": []}
             for d, m, n in zip(pdf["doc_id"], pdf["mime"], pdf["n_bytes"]):
-                if m != "text/plain":
-                    raise NotImplementedError(
-                        f"no decoder for mime {m!r}: image/audio/video "
-                        "codecs are stubbed in this environment "
-                        "(SURVEY §2 L5)"
-                    )
+                decode(b"", m)  # only the mime check: frames need just n_bytes
                 n_frames = (int(n) + frame_bytes - 1) // frame_bytes
                 for i in range(0, n_frames, frame_step):
                     out["doc_id"].append(d)

@@ -158,15 +158,19 @@ def j03_broadcast_join(spark, sf_dir):
     "count 0; result is the lineitems-per-order histogram.",
 )
 def j04_left_outer(spark, sf_dir):
-    # r22: lineitem is pre-aggregated to per-order counts BEFORE the
-    # outer join (guide §2.3 "aggregate before you shuffle") — the
-    # partial aggregation collapses map-side, so the shuffle carries
-    # one (orderkey, count) row per order instead of every raw
-    # lineitem row (~4x fewer rows at any scale), and the aggregate's
-    # exchange doubles as the join-side distribution. The r21 attempt
-    # without a strategy hint lost locally because the planner built a
-    # broadcast over the 600k-key count table; SHUFFLE_HASH bounds the
-    # build to a per-partition hash and measured 0.82→0.39 s at sf0.1.
+    # lineitem is pre-aggregated to per-order counts BEFORE the outer
+    # join (guide §2.3 "aggregate before you shuffle") — the partial
+    # aggregation collapses map-side, so the shuffle carries one
+    # (orderkey, count) row per order instead of every raw lineitem row
+    # (~4x fewer rows at any scale), and the aggregate's exchange
+    # doubles as the join-side distribution. Without a strategy hint
+    # the planner broadcasts the count table, which grows with orders;
+    # SHUFFLE_HASH builds one hash table per shuffle partition instead.
+    # Scale the hint assumes: the build is one (orderkey, count) row per
+    # order, 1.5 M × SF rows (buildDataSize 9.6 MB at sf0.1), and each
+    # partition's share of it fits one task's execution memory. Past
+    # that the task fails out of memory: a hash join's build side cannot
+    # spill, and AQE does not turn a hinted SHJ into a sort-merge join.
     # count("l_orderkey") ≡ per-group row count here: an equi-join
     # never matches a null l_orderkey, so unmatched orders take the
     # coalesce(0) and matched groups count only joined rows, exactly
@@ -198,9 +202,13 @@ def j04b_full_outer(spark, sf_dir):
     # Full outer can never broadcast; the planner's default is SMJ with
     # two full sorts. SHUFFLE_HASH on customer (the 10× smaller TPC-H
     # side, bounded per partition after the shuffle) drops both sorts —
-    # the r21 win, now a per-query hint instead of the engine-wide
-    # preferSortMergeJoin=false default it used to rely on (guide §3.1;
-    # the global default risked SHJ on unbounded builds elsewhere).
+    # a per-query hint, not an engine-wide preferSortMergeJoin=false,
+    # which would risk SHJ on unbounded builds elsewhere (guide §3.1).
+    # Scale the hint assumes: the build is customer's c_custkey,
+    # 150 k × SF rows, and each partition's share of it fits one task's
+    # execution memory. Past that the task fails out of memory: a hash
+    # join's build side cannot spill, and AQE does not turn a hinted SHJ
+    # into a sort-merge join.
     j = c.hint("shuffle_hash").join(o, c.c_custkey == o.o_custkey, "outer")
     return j.agg(
         F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0)).alias("cust_only"),

@@ -294,7 +294,7 @@ def f08_grouped_agg_udaf(spark, sf_dir):
     # aggregates in one agg() — two aggs + a broadcast join on the
     # (4-row) group keys keeps both paths visible in one plan.
     #
-    # r22: both aggs consume ONE explicit key-partitioned exchange of
+    # Both aggs consume ONE explicit key-partitioned exchange of
     # the pruned (keys, quantity) rows instead of scanning lineitem
     # twice. The grouped-agg UDF must ship every raw value to its
     # group's reducer anyway (no partial aggregation exists for it),
@@ -302,11 +302,10 @@ def f08_grouped_agg_udaf(spark, sf_dir):
     # same exchange (ReusedExchange at runtime — the distribution
     # satisfies both groupBys) halves the table scans at any scale for
     # the price of the native side reading shuffle output instead of
-    # parquet. Measured at sf0.1: 0.81 → 0.91 s (the second scan is
-    # cheaper locally than re-reading the 600 k-row shuffle), accepted
-    # for the scan halving — at 100 TB one full pass over the fact
-    # table dwarfs a re-read of an already-materialized shuffle
-    # (guide §1.3 napkin math: R drops by half, S unchanged).
+    # parquet. Locally the second scan is cheaper than re-reading the
+    # shuffle, but at 100 TB one full pass over the fact table dwarfs
+    # a re-read of an already-materialized shuffle (guide §1.3 napkin
+    # math: R drops by half, S unchanged).
     shared = li.select(
         *keys, F.col("l_quantity").cast("double").alias("q")
     ).repartition(*keys)

@@ -66,14 +66,18 @@ def s01_csv_scan(spark, sf_dir):
     doc="S8 generic SQL passthrough (ref: execute_query, src/database.py:41-51) "
     "— a TPC-H Q3-shaped query through spark.sql over the mounted views. "
     "The Spark text hints both joins SHUFFLE_HASH with the filtered "
-    "side as the build (r21 found the planner's size estimates picked "
+    "side as the build: unhinted, the planner's size estimates can pick "
     "LINEITEM — the big fact table — as the hash build side, backwards "
-    "at any scale; r22 replaced the BROADCAST hints with SHUFFLE_HASH: "
-    "a broadcast hint bypasses the size threshold entirely, and the "
-    "filtered customer⋈orders side is still billions of rows at 100 TB "
-    "— guide §3.1. SHUFFLE_HASH keeps the build-side choice, bounds "
-    "memory to a per-partition build, and measured FASTER locally too: "
-    "0.67→0.44 s at sf0.1, the broadcast build was single-threaded). "
+    "at any scale; a BROADCAST hint would bypass the size threshold "
+    "entirely, and the filtered customer⋈orders side is still billions "
+    "of rows at 100 TB — guide §3.1. SHUFFLE_HASH keeps the build-side "
+    "choice and bounds memory to a per-partition build. Scale the hints "
+    "assume: the builds are the BUILDING customers (~30 k × SF rows) "
+    "and their open orders (~100 k × SF rows, buildDataSize 4.7 MB at "
+    "sf0.1), and each partition's share fits one task's execution "
+    "memory. Past that the task fails out of memory: a hash join's "
+    "build side cannot spill, and AQE does not turn a hinted SHJ into "
+    "a sort-merge join. "
     "Hints don't change semantics; the oracle runs the unhinted text "
     "and the results are hash-identical.",
 )

@@ -48,14 +48,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # r22: preferSortMergeJoin=false is NOT set engine-wide any more
-        # — SHJ requires every per-partition build side to fit in memory
-        # and AQE will not convert a chosen SHJ back to SMJ, so a global
-        # default trades sorts for potential OOMs on 100 TB skewed
-        # builds. The queries where the hash join is the deliberate
-        # choice carry their own SHUFFLE_HASH hints (j04, j04b, s08,
-        # l02b, l07b), each with a bounded-build-side argument at the
-        # hint site (guide §3.1).
+        # preferSortMergeJoin=false is NOT set engine-wide: SHJ requires
+        # every per-partition build side to fit in memory and AQE will
+        # not convert a chosen SHJ back to SMJ, so a global default
+        # trades sorts for potential OOMs on 100 TB skewed builds. The
+        # queries where the hash join is the deliberate choice carry
+        # their own SHUFFLE_HASH hints (j04, j04b, s08, l02b, l07b), each
+        # with a bounded-build-side argument at the hint site (guide
+        # §3.1).
         # zstd beats snappy on ratio at similar read speed (guide §6) for
         # everything the engine writes (predictions sink, streaming).
         .config("spark.sql.parquet.compression.codec", "zstd")

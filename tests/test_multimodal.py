@@ -12,6 +12,7 @@ from bigdata_lab4_spark.functions.multimodal import (
     CHUNK_BYTES,
     decode_payload,
     extract_features,
+    sample_frames,
     with_asset_columns,
 )
 from tests.conftest import SF_DIR
@@ -56,8 +57,8 @@ def test_extract_features_schema_and_chunking(spark):
 
 def test_undecodable_mime_fails_loudly(spark):
     """A payload with a stubbed mime must error at execution, not
-    silently pass through — guards against the stub being widened
-    without a real decoder."""
+    silently pass through, in both mapInPandas workers — guards
+    against the stub being widened without a real decoder."""
     from pyspark.sql import functions as F
 
     docs = spark.createDataFrame([(1, "abc", "unit")], ["doc_id", "text", "source"])
@@ -69,19 +70,15 @@ def test_undecodable_mime_fails_loudly(spark):
             F.col("meta.source").alias("source"),
         ),
     )
-    with pytest.raises(Exception, match="no decoder for mime"):
-        extract_features(assets).collect()
+    for worker in (extract_features, sample_frames):
+        with pytest.raises(Exception, match="no decoder for mime"):
+            worker(assets).collect()
 
 
 def test_sample_frames_expansion_and_map_only_plan(spark):
     """sample_frames is a 1→N expanding map: known payload sizes give
     exact frame counts/offsets, and the plan stays shuffle-free."""
     from pyspark.sql import Row
-
-    from bigdata_lab4_spark.functions.multimodal import (
-        sample_frames,
-        with_asset_columns,
-    )
 
     docs = spark.createDataFrame(
         [

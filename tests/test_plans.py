@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_DIR
+from tools.profile import final_plan
 
 
 def plan_of(df) -> str:
@@ -150,10 +151,7 @@ def test_grouped_agg_udaf_scans_once_at_runtime(spark):
     from bigdata_lab4_spark.registry import REGISTRY
     import bigdata_lab4_spark.queries  # noqa: F401
 
-    df = REGISTRY["f08_grouped_agg_udaf"].fn(spark, SF_DIR)
-    qe = df._jdf.queryExecution()
-    qe.executedPlan().execute().count()
-    final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+    final = final_plan(REGISTRY["f08_grouped_agg_udaf"].fn(spark, SF_DIR))
     assert final.count("Scan parquet") == 1
     assert "ReusedExchange" in final
 
@@ -374,10 +372,7 @@ def test_lsh_band_joins_runtime_single_fingerprint_pass(spark):
     import bigdata_lab4_spark.queries  # noqa: F401
 
     for name, n_arrow in [("l02b_minhash_lsh", 1), ("l07b_simhash_neardup", 0)]:
-        df = REGISTRY[name].fn(spark, SF_DIR)
-        qe = df._jdf.queryExecution()
-        qe.executedPlan().execute().count()  # run THIS QueryExecution
-        final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+        final = final_plan(REGISTRY[name].fn(spark, SF_DIR))
         assert final.count("ArrowEvalPython") == n_arrow, name
         assert "ReusedExchange" in final, name
         assert "ShuffledHashJoin" in final, name
