@@ -25,7 +25,7 @@ This is the reference's whole job, re-expressed Spark-first:
   scores driver-local from the fitted parameters (vocab, idf, NB
   log-odds), no Spark job per request.
 
-Scale notes: training is two aggregations (TF-IDF fit) plus Spark
+Scale notes: training is one aggregation (TF-IDF fit) plus Spark
 ML's distributed NB sufficient-stats pass; scoring is a pure-JVM
 ``transform``. Nothing here densifies the feature matrix — the
 reference's ``.toarray()`` (`src/utils.py:13`) is exactly what caps
@@ -132,14 +132,10 @@ class SentimentModel:
         max_features) — a few hundred KB, the standard broadcast-model
         serving pattern."""
         if self._local is None:
-            stop: frozenset[str] = frozenset()
-            for st in self.tfidf_model._pm.stages:
-                if hasattr(st, "getStopWords") and st.hasParam("stopWords"):
-                    stop = frozenset(st.getStopWords())
             self._local = {
                 "vocab": self.tfidf_model.vocabulary_,
                 "idf": self.tfidf_model.idf_,
-                "stop": stop,
+                "stop": self.tfidf_model.stop_words_,
                 "pi": list(self.nb_model.pi.toArray()),
                 "theta": self.nb_model.theta.toArray().tolist(),
             }
@@ -226,13 +222,7 @@ class SentimentPipeline:
         max_features: int = 5000,
         stop_words: str | None = "english",
         alpha: float = 1.0,
-        fit_prior: bool = True,
     ) -> None:
-        if not fit_prior:
-            # Spark ML NB always estimates class priors from data —
-            # sklearn's fit_prior=True, the reference's configured
-            # value (`config.ini`, `src/train.py:36`).
-            raise ValueError("fit_prior=False is not supported")
         self.text_col = text_col
         self.label_col = label_col
         self.max_features = max_features

@@ -13,17 +13,17 @@ sklearn semantics reproduced (all public, from the sklearn docs):
 * tokenization: lowercase, then ``(?u)\\b\\w\\w+\\b`` (tokens of two
   or more word chars);
 * vocabulary: top ``max_features`` terms by **corpus term
-  frequency** (total count across all docs — not document
-  frequency, which is what Spark's ``CountVectorizer(vocabSize=…)``
-  would rank by); index order alphabetical, like sklearn's
-  ``vocabulary_``;
+  frequency**, ties at the cut broken by term; indices alphabetical,
+  like sklearn's ``vocabulary_``. Spark's ``CountVectorizer(vocabSize=…)``
+  ranks by corpus tf too, but indexes by rank and breaks ties by
+  partition order, so the vocabulary is built here;
 * smooth idf: ``idf(t) = ln((1+N)/(1+df(t))) + 1`` — note the ``+1``
   offset that `pyspark.ml.feature.IDF` (``ln((N+1)/(df+1))``) lacks
   (SURVEY §7.5);
 * L2 row normalization.
 
-Execution is Spark-first: fitting is two distributed aggregations
-(per-doc term counts, then per-term ``(corpus_tf, df)``), and the
+Execution is Spark-first: fitting is one term-keyed aggregation
+(corpus term frequency and document frequency together), and the
 fitted transform is a pure-JVM ``PipelineModel`` of
 ``RegexTokenizer → [StopWordsRemover] → CountVectorizerModel →
 ElementwiseProduct(idf) → Normalizer(p=2)`` — no Python in the
@@ -41,7 +41,6 @@ BASELINE.md), not bitwise.
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import (
@@ -60,9 +59,7 @@ from pyspark.sql import functions as F
 TOKEN_PATTERN = r"(?U)\b\w\w+\b"
 
 
-def _tokenizer_stages(
-    input_col: str, stop_words: str | Sequence[str] | None
-) -> tuple[list, str]:
+def _tokenizer_stages(input_col: str, stop_words: str | None) -> tuple[list, str]:
     """Tokenize(+stop-filter) stages shared by fit and transform.
 
     Returns the stage list and the name of the final token column.
@@ -77,17 +74,8 @@ def _tokenizer_stages(
         )
     ]
     token_col = "__tokens_raw"
-    if stop_words is not None:
-        words = (
-            StopWordsRemover.loadDefaultStopWords("english")
-            if stop_words == "english"
-            else list(stop_words)
-        )
-        stages.append(
-            StopWordsRemover(
-                inputCol=token_col, outputCol="__tokens", stopWords=words
-            )
-        )
+    if stop_words == "english":  # StopWordsRemover's default list
+        stages.append(StopWordsRemover(inputCol=token_col, outputCol="__tokens"))
         token_col = "__tokens"
     return stages, token_col
 
@@ -97,6 +85,9 @@ class SklearnTfidfModel:
     after ``fit``): a thin wrapper over a pure-JVM ``PipelineModel``.
 
     ``vocabulary_`` / ``idf_`` mirror the sklearn attribute names.
+    ``stop_words_`` is the list removed before counting: sklearn's
+    ``get_stop_words()``, not its ``stop_words_`` (the terms the
+    ``max_features`` cut dropped).
     """
 
     def __init__(self, pipeline_model: PipelineModel) -> None:
@@ -116,6 +107,12 @@ class SklearnTfidfModel:
             s for s in self._pm.stages if isinstance(s, ElementwiseProduct)
         )
         return list(ewp.getScalingVec().toArray())
+
+    @property
+    def stop_words_(self) -> frozenset[str]:
+        """Words removed before counting; empty for ``stop_words=None``."""
+        sw = [s for s in self._pm.stages if isinstance(s, StopWordsRemover)]
+        return frozenset(sw[0].getStopWords()) if sw else frozenset()
 
     @property
     def output_col(self) -> str:
@@ -146,12 +143,12 @@ class SklearnTfidf:
     Fit plan (all distributed, shuffle-light):
 
     1. tokenize + stop-filter (map-only, codegen);
-    2. corpus term frequency: ``explode(tokens)`` →
-       ``groupBy(term).count()`` — partial aggregation map-side;
-    3. document frequency: ``explode(array_distinct(tokens))`` →
-       ``groupBy(term).count()``, joined with (2) on term — both
-       sides shuffle one row per term, never document bodies;
-    4. top-``max_features`` by ``(corpus_tf desc, term asc)`` —
+    2. one term-keyed aggregation: each document emits
+       ``(term, tf=1, df=0)`` per token and ``(term, tf=0, df=1)``
+       per distinct token, and ``groupBy(term)`` sums both —
+       partial aggregation map-side, so the one shuffle carries one
+       row per term per partition, never document bodies;
+    3. top-``max_features`` by ``(corpus_tf desc, term asc)`` —
        ``TakeOrderedAndProject``, no global sort.
 
     The only driver-side materialization is the fitted parameter set
@@ -164,10 +161,12 @@ class SklearnTfidf:
         input_col: str = "text",
         output_col: str = "features",
         max_features: int = 5000,
-        stop_words: str | Sequence[str] | None = "english",
+        stop_words: str | None = "english",
     ) -> None:
         if max_features < 1:
             raise ValueError("max_features must be >= 1")
+        if stop_words not in ("english", None):
+            raise ValueError(f"stop_words must be 'english' or None: {stop_words!r}")
         self.input_col = input_col
         self.output_col = output_col
         self.max_features = max_features
@@ -181,24 +180,24 @@ class SklearnTfidf:
         if n_docs == 0:
             raise ValueError("cannot fit TF-IDF on an empty DataFrame")
 
-        # Two term-keyed aggregations (corpus term frequency, document
-        # frequency), joined on term — both shuffle one row per term
-        # (per distinct doc-term for df), never whole documents.  No
-        # doc id needed: per-doc distinctness comes from
-        # array_distinct before the explode.
-        tf = (
-            tokens.select(F.explode(F.col(token_col)).alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("corpus_tf"))
-        )
-        dfreq = (
+        # One (term, tf, df) row per token and per distinct token of its
+        # document, summed by one aggregation; no doc id needed.
+        def rows(arr, tf, df):
+            return F.transform(
+                arr,
+                lambda t: F.struct(
+                    t.alias("term"), F.lit(tf).alias("tf"), F.lit(df).alias("df")
+                ),
+            )
+
+        toks = F.col(token_col)
+        term_stats = (
             tokens.select(
-                F.explode(F.array_distinct(F.col(token_col))).alias("term")
+                F.inline(F.concat(rows(toks, 1, 0), rows(F.array_distinct(toks), 0, 1)))
             )
             .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
+            .agg(F.sum("tf").alias("corpus_tf"), F.sum("df").alias("df"))
         )
-        term_stats = tf.join(dfreq, "term")
         # Fitted-parameter collect: ≤ max_features rows (see class doc).
         top = (
             term_stats.orderBy(F.desc("corpus_tf"), F.asc("term"))

@@ -7,7 +7,8 @@ first-class: tumbling / sliding / session windows over `events.ts`,
 computed in batch (oracle-checkable — window starts are exchanged as
 epoch seconds, sidestepping engine timestamp-formatting differences).
 :mod:`bigdata_lab4_spark.streaming` re-runs the same logical queries
-through Structured Streaming with watermarks.
+through Structured Streaming with watermarks; T1 is its
+``tumbling_event_counts`` run on the batch table.
 
 Scale notes: window aggregation is a single hash-agg keyed on
 (window, dims) — partial aggregation happens map-side, so 100 TB of
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.catalog import load_table
 from bigdata_lab4_spark.registry import query
+from bigdata_lab4_spark.streaming.windows import tumbling_event_counts
 
 
 @query(
@@ -38,22 +40,8 @@ from bigdata_lab4_spark.registry import query
     "hour boundaries ≡ date_trunc('hour'). Start exchanged as epoch seconds.",
 )
 def t01_tumbling_window(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
-        )
-        .select(
-            F.col("window.start").cast("long").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-            "avg_value",
-        )
-    )
+    # The streaming T4 aggregation; its watermark is a no-op on a batch frame.
+    return tumbling_event_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(

@@ -1,10 +1,10 @@
 """Streaming event-time windows: watermark + late data (T4) and the
 append sink (T6).
 
-Design notes (SURVEY §2.9): the *logical* query is identical to the
-batch ``t01_tumbling_window`` (`queries/events.py`) — groupBy
-``window('ts', …)`` — so correctness is checked by comparing emitted
-windows against the batch plan over the same files
+Design notes (SURVEY §2.9): the batch ``t01_tumbling_window``
+(`queries/events.py`) runs :func:`tumbling_event_counts` itself —
+groupBy ``window('ts', …)`` — so correctness is checked by comparing
+emitted windows against the batch plan over the same rows
 (tests/test_streaming.py).  What streaming adds is state semantics:
 
 * ``withWatermark('ts', …)`` bounds the aggregation state — without
@@ -61,10 +61,10 @@ def tumbling_event_counts(
     window: str = "1 hour",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """The batch ``t01_tumbling_window`` plan with a watermark —
-    same output columns, so batch and streaming results compare
-    row-for-row. State per (window, event_type) is dropped once the
-    watermark passes the window end."""
+    """Per-(window, event_type) count, sum and mean of ``value`` — the
+    T1 query in batch, where ``withWatermark`` is a no-op. On a stream,
+    state per (window, event_type) is dropped once the watermark
+    passes the window end."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")

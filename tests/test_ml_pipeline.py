@@ -143,8 +143,3 @@ def test_train_test_split_deterministic(spark):
     assert a_train.count() + a_test.count() == 1000
     with pytest.raises(ValueError):
         train_test_split(df, test_size=1.5)
-
-
-def test_fit_prior_false_rejected():
-    with pytest.raises(ValueError, match="fit_prior"):
-        SentimentPipeline(fit_prior=False)

@@ -11,6 +11,7 @@ import math
 import pytest
 
 from bigdata_lab4_spark.ml import SklearnTfidf, SklearnTfidfModel
+from tests.conftest import job_group
 
 DOCS = [
     ("apple banana apple",),
@@ -66,12 +67,28 @@ def test_max_features_ranked_by_corpus_tf(corpus):
 
 
 def test_stop_words_and_short_tokens_dropped(spark):
-    df = spark.createDataFrame([("The cat and a dog sat",)], ["text"])
+    # The second doc has no tokens left after stop-word removal; sklearn
+    # still counts it in N, so every idf is ln((1+2)/(1+1)) + 1.
+    df = spark.createDataFrame([("The cat and a dog sat",), ("The and a",)], ["text"])
     model = SklearnTfidf(input_col="text", stop_words="english").fit(df)
     vocab = set(model.vocabulary_)
     assert "the" not in vocab and "and" not in vocab  # stop words
     assert "a" not in vocab  # sklearn token pattern needs >=2 chars
     assert {"cat", "dog", "sat"} <= vocab
+    assert model.idf_ == pytest.approx([math.log(3 / 2) + 1] * len(vocab), abs=1e-9)
+    assert {"the", "and"} <= model.stop_words_
+    assert _fit(df).stop_words_ == frozenset()
+    with pytest.raises(ValueError, match="stop_words"):
+        SklearnTfidf(stop_words=["cat"])
+
+
+def test_fit_runs_one_aggregation(spark, corpus):
+    """``tokens.count()`` and the term-keyed aggregation with its
+    top-``max_features`` collect run a shuffle-map job and a result job
+    each; a second aggregation joined on term would add two more."""
+    with job_group(spark, "test.tfidf_fit") as shape:
+        _fit(corpus)
+    assert shape()[0] == 4
 
 
 def test_save_load_roundtrip(corpus, tmp_path):

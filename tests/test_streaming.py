@@ -19,15 +19,30 @@ from bigdata_lab4_spark.engine import (
     insert_prediction,
     top_k_predictions,
 )
+from bigdata_lab4_spark.queries.events import t03_session_window
 from bigdata_lab4_spark.streaming import (
+    dedup_events_stream,
     read_events_stream,
     run_available_now,
+    sessionize_stream,
     tumbling_event_counts,
 )
 
 
-def _ts(h: int, m: int) -> datetime:
-    return datetime(2026, 1, 15, h, m, tzinfo=timezone.utc)
+def _ts(h: int, m: int, s: int = 0) -> datetime:
+    return datetime(2026, 1, 15, h, m, s, tzinfo=timezone.utc)
+
+
+def _write_batches(spark, src: str, files: list, cols: list[str]) -> None:
+    """One parquet directory per micro-batch under ``src``, stamped
+    oldest-first: a ``maxFilesPerTrigger=1`` replay follows
+    modification time."""
+    for i, rows in enumerate(files):
+        path = os.path.join(src, f"f{i}")
+        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(path)
+        for root, _, names in os.walk(path):
+            for n in names:
+                os.utime(os.path.join(root, n), (1000 + i, 1000 + i))
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +68,6 @@ def stream_result(spark, tmp_path_factory):
     """
     base = tmp_path_factory.mktemp("stream")
     src = str(base / "events_src")
-    os.makedirs(src)
     cols = ["ts", "event_type", "value"]
     files = [
         [( _ts(10, 0), "click", 1.0), (_ts(10, 30), "click", 2.0), (_ts(10, 59), "view", 10.0)],
@@ -62,14 +76,7 @@ def stream_result(spark, tmp_path_factory):
         [( _ts(10, 20), "click", 100.0)],  # late: window already emitted
         [( _ts(16, 0), "view", 1.0)],
     ]
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(
-            os.path.join(src, f"f{i}")
-        )
-        # oldest-first replay order follows modification time
-        for root, _, names in os.walk(os.path.join(src, f"f{i}")):
-            for n in names:
-                os.utime(os.path.join(root, n), (1000 + i, 1000 + i))
+    _write_batches(spark, src, files, cols)
 
     stream = read_events_stream(
         spark, src + "/*/", max_files_per_trigger=1
@@ -185,7 +192,6 @@ def dedup_result(spark, tmp_path_factory):
     """
     base = tmp_path_factory.mktemp("dedup_stream")
     src = str(base / "events_src")
-    os.makedirs(src)
     cols = ["event_id", "ts", "event_type", "value"]
     files = [
         [(1, _ts(10, 0), "click", 1.0), (2, _ts(10, 5), "view", 2.0)],
@@ -193,15 +199,7 @@ def dedup_result(spark, tmp_path_factory):
         [(3, _ts(11, 1), "click", 3.0), (4, _ts(13, 0), "click", 4.0)],
         [(1, _ts(14, 0), "click", 9.0)],
     ]
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(
-            os.path.join(src, f"f{i}")
-        )
-        for root, _, names in os.walk(os.path.join(src, f"f{i}")):
-            for n in names:
-                os.utime(os.path.join(root, n), (1000 + i, 1000 + i))
-
-    from bigdata_lab4_spark.streaming import dedup_events_stream
+    _write_batches(spark, src, files, cols)
 
     stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
     out, cp = str(base / "out"), str(base / "cp")
@@ -245,7 +243,6 @@ def session_result(spark, tmp_path_factory):
     """
     base = tmp_path_factory.mktemp("session_stream")
     src = str(base / "events_src")
-    os.makedirs(src)
     cols = ["user_id", "ts", "value"]
     files = [
         [(1, _ts(10, 0), 1.0), (1, _ts(10, 10), 2.0), (2, _ts(10, 5), 5.0)],
@@ -254,15 +251,7 @@ def session_result(spark, tmp_path_factory):
         [(3, _ts(14, 0), 1.0)],
         [(4, _ts(15, 0), 2.0)],
     ]
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(
-            os.path.join(src, f"f{i}")
-        )
-        for root, _, names in os.walk(os.path.join(src, f"f{i}")):
-            for n in names:
-                os.utime(os.path.join(root, n), (1000 + i, 1000 + i))
-
-    from bigdata_lab4_spark.streaming import sessionize_stream
+    _write_batches(spark, src, files, cols)
 
     stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
     sess = sessionize_stream(stream.withWatermark("ts", "10 minutes"))
@@ -289,3 +278,43 @@ def test_sessions_close_in_band_and_by_timeout(session_result):
 def test_open_session_not_emitted(session_result):
     # u4's 15:00 session was still open when the stream drained
     assert all(r["user_id"] != 4 for r in session_result)
+
+
+def test_stream_sessions_equal_batch_session_window(spark, tmp_path):
+    """T3 two ways on the same rows: every session ``sessionize_stream``
+    closes equals a row of ``t03_session_window``'s ``session_window``,
+    on (user_id, n_events, sum_value). Timestamps are whole seconds
+    (the stream truncates to seconds, t03 keeps fractions). u1's
+    10:30:00 event comes exactly 30 minutes after its 10:00:00 one and
+    stays in the same session in both; 11:00:01 opens a new one. The
+    u9 event only moves the watermark so the others close; its own
+    session is still open when the stream drains."""
+    files = [
+        [(1, _ts(10, 0), 1.25), (2, _ts(10, 5, 7), 2.5), (2, _ts(10, 20, 13), 0.75),
+         (1, _ts(10, 30), 3.0), (3, _ts(10, 45, 59), 4.5)],
+        [(1, _ts(11, 0, 1), 5.25), (2, _ts(12, 0), 6.0), (3, _ts(12, 15, 59), 1.0)],
+        [(9, _ts(23, 0), 7.0)],
+    ]
+    cols = ["user_id", "ts", "value"]
+    src = str(tmp_path / "events_src")
+    _write_batches(spark, src, files, cols)
+    sf_dir = str(tmp_path / "sf")
+    spark.createDataFrame([r for rows in files for r in rows], cols).write.parquet(
+        os.path.join(sf_dir, "events.parquet")
+    )
+
+    stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
+    sess = sessionize_stream(stream.withWatermark("ts", "10 minutes"))
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    run_available_now(sess, out, cp)
+    streamed = sorted(
+        (r["user_id"], r["n_events"], round(r["sum_value"], 2))
+        for r in spark.read.parquet(out).collect()
+    )
+    batch = sorted(
+        (r["user_id"], r["n_events"], r["sum_value"])
+        for r in t03_session_window(spark, sf_dir).collect()
+    )
+    assert streamed == [(1, 1, 5.25), (1, 2, 4.25), (2, 1, 6.0), (2, 2, 3.25),
+                        (3, 1, 1.0), (3, 1, 4.5)]
+    assert batch == sorted(streamed + [(9, 1, 7.0)])
