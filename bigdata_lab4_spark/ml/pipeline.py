@@ -55,6 +55,10 @@ POSITIVE, NEGATIVE, UNKNOWN = (
     "Unknown sentiment",
 )
 
+#: Laplace smoothing of the reference's ``MultinomialNB(alpha=1.0)``
+#: (`src/train.py:36-42`).
+NB_ALPHA = 1.0
+
 _CLEAN_URL = re.compile(r"http\S+|www\S+")
 _CLEAN_MENTION = re.compile(r"@\w+")
 _CLEAN_HASHTAG = re.compile(r"#\w+")
@@ -221,13 +225,11 @@ class SentimentPipeline:
         label_col: str = "label",
         max_features: int = 5000,
         stop_words: str | None = "english",
-        alpha: float = 1.0,
     ) -> None:
         self.text_col = text_col
         self.label_col = label_col
         self.max_features = max_features
         self.stop_words = stop_words
-        self.alpha = alpha
 
     def fit(
         self, train_df: DataFrame, tfidf_fit_df: DataFrame | None = None
@@ -252,7 +254,7 @@ class SentimentPipeline:
             train_df.withColumn("__clean", clean_text_col(self.text_col))
         ).withColumn("__label_d", F.col(self.label_col).cast("double"))
         nb = NaiveBayes(
-            smoothing=self.alpha,
+            smoothing=NB_ALPHA,
             modelType="multinomial",
             featuresCol="features",
             labelCol="__label_d",

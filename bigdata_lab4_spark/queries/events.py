@@ -6,9 +6,9 @@ ingest→transform→append one row at a time
 first-class: tumbling / sliding / session windows over `events.ts`,
 computed in batch (oracle-checkable — window starts are exchanged as
 epoch seconds, sidestepping engine timestamp-formatting differences).
-:mod:`bigdata_lab4_spark.streaming` re-runs the same logical queries
-through Structured Streaming with watermarks; T1 is its
-``tumbling_event_counts`` run on the batch table.
+Each window is defined once, in :mod:`bigdata_lab4_spark.streaming.windows`;
+T1–T3 run that definition on the batch table, and the streaming tests
+run it on a replayed stream.
 
 Scale notes: window aggregation is a single hash-agg keyed on
 (window, dims) — partial aggregation happens map-side, so 100 TB of
@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.catalog import load_table
 from bigdata_lab4_spark.registry import query
-from bigdata_lab4_spark.streaming.windows import tumbling_event_counts
+from bigdata_lab4_spark.streaming.windows import (
+    session_event_counts,
+    sliding_event_counts,
+    tumbling_event_counts,
+)
 
 
 @query(
@@ -40,7 +44,6 @@ from bigdata_lab4_spark.streaming.windows import tumbling_event_counts
     "hour boundaries ≡ date_trunc('hour'). Start exchanged as epoch seconds.",
 )
 def t01_tumbling_window(spark, sf_dir):
-    # The streaming T4 aggregation; its watermark is a no-op on a batch frame.
     return tumbling_event_counts(load_table(spark, sf_dir, "events"))
 
 
@@ -60,16 +63,7 @@ def t01_tumbling_window(spark, sf_dir):
     "assignment arithmetically (floor(ts/slide)·slide − k·slide).",
 )
 def t02_sliding_window(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes"))
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("window.start").cast("long").alias("window_start"),
-            "n",
-            "sum_value",
-        )
-    )
+    return sliding_event_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -100,20 +94,7 @@ def t02_sliding_window(spark, sf_dir):
     "(lag → new-session flag → running count → group).",
 )
 def t03_session_window(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.round(F.col("session_window.start").cast("double"), 6).alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return session_event_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(

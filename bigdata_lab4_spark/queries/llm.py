@@ -184,16 +184,21 @@ _MINHASH_FIRST_BAND = (
 )
 
 
-def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6):
+#: ``approxSimilarityJoin``'s distance threshold: pairs with Jaccard
+#: distance strictly below it are emitted.
+MINHASH_THRESHOLD = 0.6
+
+
+def minhash_lsh_pairs(spark, sf_dir):
     """Full (un-truncated) MinHash-LSH candidate pair set — the helper
     behind the registered top-50 view below and the recall tests
     (tests/test_llm.py).
 
     Pair-for-pair identical to ``MinHashLSHModel.approxSimilarityJoin``
     on ``HashingTF`` features (same seeded signatures, same banded
-    candidates, same strict ``< threshold`` on the same Jaccard doubles):
-    tests/test_minhash_compat.py pins it against the model at sf0.001
-    and against an independent DuckDB reference at sf0.1. The
+    candidates, same strict ``< MINHASH_THRESHOLD`` on the same Jaccard
+    doubles): tests/test_minhash_compat.py pins it against the model at
+    sf0.001 and against an independent DuckDB reference at sf0.1. The
     per-document fingerprint is computed once, Arrow-batched
     (functions/minhash.py); candidates come from ``_salted_band_join``,
     with first-band dedup and the index-set Jaccard as native
@@ -347,14 +352,18 @@ def minhash_lsh_pairs(spark, sf_dir, threshold: float = 0.6):
         )
     )
     return (
-        scored.filter(F.col("jaccard_dist") < threshold)
+        scored.filter(F.col("jaccard_dist") < MINHASH_THRESHOLD)
         .select("d1", "d2", F.round("jaccard_dist", 6).alias("jaccard_dist"))
     )
 
 
 @query(
     "l02b_minhash_lsh",
-    oracle=None,  # LSH candidate set is seed/implementation-specific
+    # The signatures hash tokens with HashingTF's murmur3 (tail mix
+    # included), which DuckDB has no function for. The full pair set is
+    # checked instead against MinHashLSH and against a DuckDB join over
+    # fingerprints from the Python reference (tests/test_minhash_compat.py).
+    oracle=None,
     doc="L2 MinHash-LSH near-dup, the 100 TB path: tokens → HashingTF "
     "index set → seeded 8-band minhash signature → banded candidate "
     "join → exact index-set Jaccard verify. Bit-compatible with "
@@ -431,9 +440,50 @@ def l03_knn_exact(spark, sf_dir):
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10)
 
 
+def _l03b_oracle() -> str:
+    """l03b in DuckDB: the same seed-42 unit vectors, written with
+    ``repr`` (bit-exact doubles), so the constants have one source.
+    ``list_reduce`` takes no initial value; ``0 + a₁ = a₁``, so its
+    left fold lands on the same doubles as Spark's ``aggregate(…, 0D, …)``."""
+    from bigdata_lab4_spark.functions.embeddings import BRP_UNIT_VECTORS
+
+    def fold(pair_expr: str, other: str) -> str:
+        return (
+            f"list_reduce(list_transform(list_zip(embedding, {other}), "
+            f"s -> {pair_expr}), (a, b) -> a + b)"
+        )
+
+    dot = "CAST(s[1] AS DOUBLE) * s[2]"
+    buckets = ", ".join(
+        f"floor({fold(dot, '[' + ', '.join(map(repr, uv)) + ']')} / 2.0)"
+        for uv in BRP_UNIT_VECTORS
+    )
+    diff = "(CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))"
+    sq = f"{diff} * {diff}"
+    return f"""
+        WITH sig AS (
+            SELECT vec_id, embedding, [{buckets}] AS sig FROM embeddings
+        ), bands AS (
+            SELECT vec_id, embedding, sig, t.tbl, sig[t.tbl + 1] AS bucket
+            FROM sig, (VALUES (0), (1), (2), (3)) AS t(tbl)
+        ), pairs AS (
+            SELECT q.vec_id AS qid, c.vec_id AS cid, q.embedding AS qe,
+                   c.embedding AS embedding
+            FROM bands c JOIN bands q ON c.tbl = q.tbl AND c.bucket = q.bucket
+            WHERE q.vec_id < 5 AND c.vec_id != q.vec_id
+              AND (c.tbl < 1 OR c.sig[1] != q.sig[1])
+              AND (c.tbl < 2 OR c.sig[2] != q.sig[2])
+              AND (c.tbl < 3 OR c.sig[3] != q.sig[3])
+        ), dists AS (
+            SELECT qid, cid, sqrt({fold(sq, 'qe')}) AS dist FROM pairs
+        )
+        SELECT qid, cid, round(dist, 6) AS dist FROM dists WHERE dist < 4.0
+    """
+
+
 @query(
     "l03b_ann_lsh",
-    oracle=None,  # bucketed-random-projection candidates are seed-specific
+    oracle=_l03b_oracle(),
     doc="L3 ANN via BucketedRandomProjectionLSH(seed=42) — the IVF/LSH-style "
     "scale path: hash both sides into buckets, join within buckets only. "
     "Recall vs l03_knn_exact is asserted in tests/test_llm.py.",

@@ -19,7 +19,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "bigdata-lab4-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -31,10 +30,9 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        # At 100 TB this is overridden per-deployment; for local[N]
-        # match the core count so post-shuffle tasks don't fragment.
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    # At 100 TB this is overridden per-deployment (``extra_conf``); for
+    # local[N] match the core count so post-shuffle tasks don't fragment.
+    shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = (
         SparkSession.builder.master(master)

@@ -1,18 +1,22 @@
-"""Streaming event-time windows: watermark + late data (T4) and the
-append sink (T6).
+"""Event-time windows, one definition each for batch and stream: T1
+tumbling, T2 sliding and T3 session windows, the watermark and
+late-data policy (T4), stateful dedup (T5) and the append sink (T6).
 
-Design notes (SURVEY §2.9): the batch ``t01_tumbling_window``
-(`queries/events.py`) runs :func:`tumbling_event_counts` itself —
-groupBy ``window('ts', …)`` — so correctness is checked by comparing
-emitted windows against the batch plan over the same rows
-(tests/test_streaming.py).  What streaming adds is state semantics:
+Design notes (SURVEY §2.9): the batch queries ``t01_tumbling_window``,
+``t02_sliding_window`` and ``t03_session_window`` (`queries/events.py`)
+run :func:`tumbling_event_counts`, :func:`sliding_event_counts` and
+:func:`session_event_counts` on the batch table, and the streaming
+tests run the same functions on a replayed stream, so the two
+definitions cannot drift apart. Each applies :data:`WATERMARK`, which
+Spark drops from batch plans. What streaming adds is state semantics:
 
 * ``withWatermark('ts', …)`` bounds the aggregation state — without
   it a 100 TB/day stream accumulates windows forever;
 * rows older than the watermark are dropped (late-data policy);
 * append output mode emits each window exactly once, when the
   watermark passes its end — which is what makes a parquet sink
-  (immutable files) a valid target.
+  (immutable files) a valid target. A session window ends at its
+  last event plus :data:`SESSION_GAP_S`.
 
 The file source is the test harness's stand-in for Kafka: same
 micro-batch execution, same state store, same watermark movement.
@@ -26,6 +30,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+#: How far behind the newest event time a row may arrive and still count.
+WATERMARK = "10 minutes"
+
+#: T3's inactivity gap, shared with the custom sessionizer (T7,
+#: `streaming/stateful.py`): a session closes when no event of its user
+#: follows the last one within this many seconds.
+SESSION_GAP_S = 30 * 60
+
+#: Bound on one drain of :func:`run_available_now`.
+_DRAIN_TIMEOUT_S = 300
 
 
 def read_events_stream(
@@ -45,8 +60,8 @@ def read_events_stream(
     mutating ``spark.sql.session.timeZone`` as a side effect leaks
     into every other query on the session): timezone semantics belong
     to the session owner — the engine's factory pins UTC, and the
-    epoch-aligned tumbling windows downstream are timezone-independent
-    for instant-typed ``ts`` columns anyway.
+    epoch-aligned windows downstream are timezone-independent for
+    instant-typed ``ts`` columns anyway.
     """
     if schema is None:
         schema = spark.read.parquet(path).schema
@@ -56,18 +71,13 @@ def read_events_stream(
     return reader.parquet(path)
 
 
-def tumbling_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Per-(window, event_type) count, sum and mean of ``value`` — the
-    T1 query in batch, where ``withWatermark`` is a no-op. On a stream,
-    state per (window, event_type) is dropped once the watermark
-    passes the window end."""
+def tumbling_event_counts(events: DataFrame) -> DataFrame:
+    """T1: per-(1-hour window, event_type) count, sum and mean of
+    ``value``. On a stream, state per (window, event_type) is dropped
+    once the watermark passes the window end."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -83,15 +93,45 @@ def tumbling_event_counts(
     )
 
 
-def dedup_events_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming stateful dedup (T5's streaming form):
-    ``dropDuplicatesWithinWatermark`` — the batch
-    ``t05_dedup``'s ``dropDuplicates(['event_id'])`` with BOUNDED
-    state.
+def sliding_event_counts(events: DataFrame) -> DataFrame:
+    """T2: count and sum of ``value`` per 1-hour window sliding every
+    15 minutes; each event lands in 4 overlapping windows."""
+    return (
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "15 minutes"))
+        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select(
+            F.col("window.start").cast("long").alias("window_start"),
+            "n",
+            "sum_value",
+        )
+    )
+
+
+def session_event_counts(events: DataFrame) -> DataFrame:
+    """T3: per-user sessions that close after :data:`SESSION_GAP_S` of
+    inactivity, via Spark's native ``session_window`` (mergeable state,
+    no global sort); start, event count and sum of ``value`` each."""
+    return (
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id", F.session_window("ts", f"{SESSION_GAP_S} seconds"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.round(F.col("session_window.start").cast("double"), 6).alias("session_start"),
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def dedup_events_stream(events: DataFrame) -> DataFrame:
+    """Streaming stateful dedup by ``event_id`` (T5's streaming form):
+    ``dropDuplicatesWithinWatermark`` — the batch ``t05_dedup``'s
+    ``dropDuplicates(['event_id'])`` with BOUNDED state.
 
     Plain streaming ``dropDuplicates`` keeps every key ever seen —
     unbounded state, a guaranteed OOM on a 100 TB/day stream.
@@ -102,24 +142,18 @@ def dedup_events_stream(
     is the right trade when duplicates come from retries/at-least-
     once sources, which cluster within seconds of the original.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
-def run_available_now(
-    df: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    output_mode: str = "append",
-    timeout_s: int = 300,
-) -> None:
+def run_available_now(df: DataFrame, out_path: str, checkpoint_path: str) -> None:
     """Drain all currently-available input through the query and
     append results to a parquet sink (T6), then stop.  The
     checkpoint directory carries the state store + watermark, so a
     rerun resumes exactly-once instead of recomputing."""
     q = (
-        df.writeStream.outputMode(output_mode)
+        df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
@@ -127,7 +161,7 @@ def run_available_now(
         .start()
     )
     try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"stream did not drain within {timeout_s}s")
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(f"stream did not drain within {_DRAIN_TIMEOUT_S}s")
     finally:
         q.stop()

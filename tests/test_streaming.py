@@ -1,5 +1,6 @@
-"""Streaming window tests (T4 watermark/late-data, T6 append sink)
-plus the predictions write path (S6/S7).
+"""Streaming window tests (T4 watermark/late-data, T6 append sink),
+stream-vs-batch equality of the shared T1–T3 definitions and of the
+T7 sessionizer, plus the predictions write path (S6/S7).
 
 The streaming scenario is built from hand-written parquet files so
 watermark movement is fully deterministic: three files replayed
@@ -10,7 +11,7 @@ batches; the watermark computed from batch N gates batch N+1.
 from __future__ import annotations
 
 import os
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -19,18 +20,27 @@ from bigdata_lab4_spark.engine import (
     insert_prediction,
     top_k_predictions,
 )
-from bigdata_lab4_spark.queries.events import t03_session_window
+from bigdata_lab4_spark.queries.events import t02_sliding_window, t03_session_window
 from bigdata_lab4_spark.streaming import (
     dedup_events_stream,
     read_events_stream,
     run_available_now,
+    session_event_counts,
     sessionize_stream,
+    sliding_event_counts,
     tumbling_event_counts,
 )
+from bigdata_lab4_spark.streaming.windows import SESSION_GAP_S
 
 
-def _ts(h: int, m: int, s: int = 0) -> datetime:
-    return datetime(2026, 1, 15, h, m, s, tzinfo=timezone.utc)
+def _ts(h: int, m: int, s: int = 0, us: int = 0) -> datetime:
+    return datetime(2026, 1, 15, h, m, s, us, tzinfo=timezone.utc)
+
+
+def _utc(t: datetime) -> datetime:
+    """A collected timestamp (naive, in the host's local zone) as an
+    aware UTC datetime."""
+    return t.astimezone(timezone.utc)
 
 
 def _write_batches(spark, src: str, files: list, cols: list[str]) -> None:
@@ -81,7 +91,7 @@ def stream_result(spark, tmp_path_factory):
     stream = read_events_stream(
         spark, src + "/*/", max_files_per_trigger=1
     )
-    agg = tumbling_event_counts(stream, window="1 hour", watermark="10 minutes")
+    agg = tumbling_event_counts(stream)
     out, cp = str(base / "out"), str(base / "cp")
     run_available_now(agg, out, cp)
     return spark.read.parquet(out).collect()
@@ -254,7 +264,7 @@ def session_result(spark, tmp_path_factory):
     _write_batches(spark, src, files, cols)
 
     stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
-    sess = sessionize_stream(stream.withWatermark("ts", "10 minutes"))
+    sess = sessionize_stream(stream)
     out, cp = str(base / "out"), str(base / "cp")
     run_available_now(sess, out, cp)
     return spark.read.parquet(out).collect()
@@ -262,16 +272,16 @@ def session_result(spark, tmp_path_factory):
 
 def test_sessions_close_in_band_and_by_timeout(session_result):
     got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"], r["sum_value"])
+        (r["user_id"], _utc(r["session_start"]), _utc(r["session_end"]),
+         r["n_events"], r["sum_value"])
         for r in session_result
     }
-    e = lambda h, m: int(_ts(h, m).timestamp())
     assert got == {
-        (1, e(10, 0), e(10, 10), 2, 3.0),   # in-band close (gap exceeded)
-        (2, e(10, 5), e(10, 5), 1, 5.0),    # timeout close
-        (3, e(11, 30), e(11, 30), 1, 7.0),  # timeout close
-        (1, e(12, 0), e(12, 0), 1, 3.0),    # second session, timeout
-        (3, e(14, 0), e(14, 0), 1, 1.0),    # closed by final no-data batch
+        (1, _ts(10, 0), _ts(10, 10), 2, 3.0),   # in-band close (gap exceeded)
+        (2, _ts(10, 5), _ts(10, 5), 1, 5.0),    # timeout close
+        (3, _ts(11, 30), _ts(11, 30), 1, 7.0),  # timeout close
+        (1, _ts(12, 0), _ts(12, 0), 1, 3.0),    # second session, timeout
+        (3, _ts(14, 0), _ts(14, 0), 1, 1.0),    # closed by final no-data batch
     }
 
 
@@ -280,41 +290,96 @@ def test_open_session_not_emitted(session_result):
     assert all(r["user_id"] != 4 for r in session_result)
 
 
-def test_stream_sessions_equal_batch_session_window(spark, tmp_path):
-    """T3 two ways on the same rows: every session ``sessionize_stream``
-    closes equals a row of ``t03_session_window``'s ``session_window``,
-    on (user_id, n_events, sum_value). Timestamps are whole seconds
-    (the stream truncates to seconds, t03 keeps fractions). u1's
-    10:30:00 event comes exactly 30 minutes after its 10:00:00 one and
-    stays in the same session in both; 11:00:01 opens a new one. The
-    u9 event only moves the watermark so the others close; its own
-    session is still open when the stream drains."""
-    files = [
-        [(1, _ts(10, 0), 1.25), (2, _ts(10, 5, 7), 2.5), (2, _ts(10, 20, 13), 0.75),
-         (1, _ts(10, 30), 3.0), (3, _ts(10, 45, 59), 4.5)],
-        [(1, _ts(11, 0, 1), 5.25), (2, _ts(12, 0), 6.0), (3, _ts(12, 15, 59), 1.0)],
-        [(9, _ts(23, 0), 7.0)],
-    ]
+#: Three micro-batches for the stream-vs-batch tests. u1's 10:30:00
+#: event comes exactly 30 minutes after its 10:00:00 one and stays in
+#: the same session; 11:00:01 opens a new one. u5's 10:30:00.5 event
+#: comes 1,800.5 s after its 10:00:00 one and opens a new session. The
+#: u9 event only moves the watermark (to 22:50) so the others close;
+#: its own session, and the sliding windows that hold only it, are
+#: still open when the stream drains.
+_EQUIV_FILES = [
+    [(1, _ts(10, 0), 1.25), (2, _ts(10, 5, 7), 2.5), (2, _ts(10, 20, 13), 0.75),
+     (1, _ts(10, 30), 3.0), (3, _ts(10, 45, 59), 4.5),
+     (5, _ts(10, 0), 1.0), (5, _ts(10, 30, 0, 500_000), 2.0)],
+    [(1, _ts(11, 0, 1), 5.25), (2, _ts(12, 0), 6.0), (3, _ts(12, 15, 59), 1.0)],
+    [(9, _ts(23, 0), 7.0)],
+]
+_FINAL_WATERMARK = _ts(23, 0) - timedelta(minutes=10)
+
+
+@pytest.fixture(scope="module")
+def equiv_events(spark, tmp_path_factory):
+    """(stream source dir, batch sf_dir) over the same ``_EQUIV_FILES``
+    rows."""
+    base = tmp_path_factory.mktemp("equiv")
     cols = ["user_id", "ts", "value"]
-    src = str(tmp_path / "events_src")
-    _write_batches(spark, src, files, cols)
-    sf_dir = str(tmp_path / "sf")
-    spark.createDataFrame([r for rows in files for r in rows], cols).write.parquet(
+    src = str(base / "events_src")
+    _write_batches(spark, src, _EQUIV_FILES, cols)
+    sf_dir = str(base / "sf")
+    spark.createDataFrame([r for rows in _EQUIV_FILES for r in rows], cols).write.parquet(
         os.path.join(sf_dir, "events.parquet")
     )
+    return src, sf_dir
 
+
+def _replay(spark, src: str, query, out_dir) -> list:
+    """Rows the streaming ``query`` emits over the replayed source."""
     stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
-    sess = sessionize_stream(stream.withWatermark("ts", "10 minutes"))
-    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    run_available_now(sess, out, cp)
+    out, cp = str(out_dir / "out"), str(out_dir / "cp")
+    run_available_now(query(stream), out, cp)
+    return spark.read.parquet(out).collect()
+
+
+def test_stream_sessions_equal_batch_session_window(spark, equiv_events, tmp_path):
+    """T3 two ways on the same rows: every session ``sessionize_stream``
+    closes equals a row of ``t03_session_window``'s ``session_window``,
+    on (user_id, n_events, sum_value), with the gap compared on exact
+    event times."""
+    src, sf_dir = equiv_events
     streamed = sorted(
         (r["user_id"], r["n_events"], round(r["sum_value"], 2))
-        for r in spark.read.parquet(out).collect()
+        for r in _replay(spark, src, sessionize_stream, tmp_path)
     )
     batch = sorted(
         (r["user_id"], r["n_events"], r["sum_value"])
         for r in t03_session_window(spark, sf_dir).collect()
     )
     assert streamed == [(1, 1, 5.25), (1, 2, 4.25), (2, 1, 6.0), (2, 2, 3.25),
-                        (3, 1, 1.0), (3, 1, 4.5)]
+                        (3, 1, 1.0), (3, 1, 4.5), (5, 1, 1.0), (5, 1, 2.0)]
     assert batch == sorted(streamed + [(9, 1, 7.0)])
+
+
+def test_stream_sliding_windows_equal_closed_batch_windows(spark, equiv_events, tmp_path):
+    """T2: the shared ``sliding_event_counts`` on the stream emits
+    exactly the ``t02_sliding_window`` rows whose window ended by the
+    final watermark."""
+    src, sf_dir = equiv_events
+    streamed = sorted(tuple(r) for r in _replay(spark, src, sliding_event_counts, tmp_path))
+    wm = int(_FINAL_WATERMARK.timestamp())
+    batch = sorted(tuple(r) for r in t02_sliding_window(spark, sf_dir).collect())
+    closed = [r for r in batch if r[0] + 3600 <= wm]
+    assert streamed == closed
+    assert len(closed) == 13 and len(batch) == 17
+
+
+def test_stream_sessions_equal_closed_batch_sessions(spark, equiv_events, tmp_path):
+    """T3: the shared ``session_event_counts`` on the stream emits
+    exactly the ``t03_session_window`` rows whose session (last event
+    plus the gap) ended by the final watermark: every user's but the
+    last session of a user whose last event is within the gap of it."""
+    src, sf_dir = equiv_events
+    streamed = sorted(tuple(r) for r in _replay(spark, src, session_event_counts, tmp_path))
+    last_event = {}
+    for u, t, _ in (r for rows in _EQUIV_FILES for r in rows):
+        last_event[u] = max(t, last_event.get(u, t))
+    open_users = {
+        u for u, t in last_event.items()
+        if t + timedelta(seconds=SESSION_GAP_S) > _FINAL_WATERMARK
+    }
+    batch = sorted(tuple(r) for r in t03_session_window(spark, sf_dir).collect())
+    latest = {}
+    for u, start, _, _ in batch:
+        latest[u] = max(start, latest.get(u, start))
+    closed = [r for r in batch if not (r[0] in open_users and r[1] == latest[r[0]])]
+    assert streamed == closed
+    assert open_users == {9} and len(closed) == len(batch) - 1 == 8
