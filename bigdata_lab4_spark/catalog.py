@@ -6,12 +6,12 @@ rewritten by every stage (`/root/reference/src/preprocess.py:71-80`,
 DDL (`src/database.py:53-66`). Here the catalog is the Spark catalog:
 declared schemas, parquet storage, temp views per scale-factor dir.
 
-Nine of the ten tables are read through the DDL in :data:`SCHEMAS`, as
-the reference reads its data through a fixed schema. A declared read
-runs no Spark job; inferring a schema from the parquet footers runs
-one job per table (~100 ms each on a 4-core host). ``events`` alone is
-still inferred, because the physical type of its ``ts`` column differs
-between testdata generations (see :func:`load_table`).
+Every table is read through the DDL in :data:`SCHEMAS`, as the
+reference reads its data through a fixed schema. A declared read runs
+no Spark job; inferring a schema from the parquet footers runs one job
+per table (~100 ms each on a 4-core host). The batch catalog and the
+events stream (:func:`~bigdata_lab4_spark.streaming.read_events_stream`)
+share the one ``events`` declaration.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 #: The driver's synthetic tables (TESTDATA.md / FIXTURES.md §2).
 TABLES: tuple[str, ...] = (
@@ -35,10 +34,12 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-#: Declared schemas of the fixed-schema tables, in Spark DDL. They are
-#: exactly what Spark infers from every testdata generation's footers
-#: (tests/test_catalog.py pins this): pyarrow's ``timestamp[us]``
-#: without a zone reads as ``timestamp_ntz``.
+#: Declared schemas of the tables, in Spark DDL: what Spark infers from
+#: every testdata generation's footers (tests/test_catalog.py pins
+#: this), except ``events.ts``. pyarrow's zone-less ``timestamp[us]``
+#: infers as ``timestamp_ntz``; ``events.ts`` is declared ``timestamp``
+#: because event-time windows and watermarks need an instant. The read
+#: keeps the raw micros, taken as UTC, whatever the session time zone.
 SCHEMAS: dict[str, str] = {
     "region": "r_regionkey int, r_name string",
     "nation": "n_nationkey int, n_name string, n_regionkey int",
@@ -53,6 +54,8 @@ SCHEMAS: dict[str, str] = {
     "l_linenumber int, l_quantity double, l_extendedprice double, "
     "l_discount double, l_tax double, l_returnflag string, "
     "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string",
     "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
     "embeddings": "vec_id bigint, embedding array<float>, label int",
 }
@@ -67,16 +70,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown / column pruning / partition pruning for free — the scan
     itself is the same plan node it would be on a 100 TB table.
 
-    Every table but ``events`` is read with its declared schema
-    (:data:`SCHEMAS`), so building a DataFrame over it runs no Spark
-    job. The contract is that the files hold those columns with those
-    types. A column whose physical type does not match fails the first
-    action that reads it (e.g. ``array<double>`` for ``embedding``).
-    The one gap: a file that lacks a declared column reads that column
-    as nulls. Reading the footer on the driver would catch it, but
-    costs ~20 ms of py4j calls per table read (a warm median on a
-    4-core host), paid by every query that plans over the table, so
-    it is left out.
+    Every table is read with its declared schema (:data:`SCHEMAS`), so
+    building a DataFrame over it runs no Spark job. The contract is
+    that the files hold those columns with those types. A column whose
+    physical type does not match fails the first action that reads it
+    (e.g. ``array<double>`` for ``embedding``, or ``timestamp[ns]`` for
+    ``events.ts``). The one gap: a file that lacks a declared column
+    reads that column as nulls. Reading the footer on the driver would
+    catch it, but costs ~20 ms of py4j calls per table read (a warm
+    median on a 4-core host), paid by every query that plans over the
+    table, so it is left out.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -85,33 +88,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # date_format, epoch casts) must be UTC to match the oracle's naive
     # reading regardless of host TZ.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) in older
-        # testdata generations and TIMESTAMP(MICROS, ntz) in the current
-        # ones, so its schema is inferred (one Spark job), not declared.
-        # Spark's vectorized reader rejects NANOS (PARQUET_TYPE_ILLEGAL),
-        # so the session enables legacy nanosAsLong; under that conf a
-        # NANOS column surfaces as bigint, a MICROS one as
-        # timestamp/timestamp_ntz. Normalize either to TimestampType:
-        # ns→µs uses exact integer division (double division rounds and
-        # drifts 1µs from DuckDB's truncating read); ntz→ltz is
-        # wall-clock-preserving because the session TZ is pinned UTC.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        ts_type = dict(raw.dtypes)["ts"]
-        if ts_type == "bigint":
-            return raw.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        ts_col = F.col("ts")
-        if ts_type == "timestamp_ntz":
-            # Eager, pinned conversion: interpret the wall-clock value
-            # as UTC NOW, instead of a bare cast whose meaning floats
-            # with whatever spark.sql.session.timeZone happens to be at
-            # ACTION time (a caller changing the session TZ between
-            # plan and collect would silently shift every event).
-            ts_col = F.to_utc_timestamp(ts_col, "UTC")
-        return raw.withColumn("ts", ts_col.cast("timestamp"))
     return spark.read.schema(SCHEMAS[name]).parquet(
         os.path.join(sf_dir, f"{name}.parquet")
     )
@@ -126,11 +102,11 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every test table as a temp view for the SQL surface
     (SURVEY §2 S8/S9: SQL-string-in, DataFrame-out).
 
-    Memoized per (session, sf_dir): registering runs one Spark job
-    (``events``' schema inference) and lists every table's files.
-    Mounting a fresh dir of the benchmark's sf0.01 tables measured
-    0.34 s (median of 7, 4-core host); inferring all ten schemas
-    instead measured 0.95 s. Repeated ``run_sql`` calls skip it.
+    Memoized per (session, sf_dir): registering runs no Spark job, but
+    lists every table's files. Mounting a fresh dir of the benchmark's
+    sf0.01 tables measured 0.195 s (median of 16, one JVM, 4-core
+    host); inferring ``events``' schema as well measured 0.294 s, and
+    inferring all ten 0.95 s. Repeated ``run_sql`` calls skip it.
     """
     if getattr(spark, _REGISTERED_ATTR, None) == sf_dir:
         return

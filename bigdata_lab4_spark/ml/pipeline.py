@@ -59,6 +59,10 @@ POSITIVE, NEGATIVE, UNKNOWN = (
 #: (`src/train.py:36-42`).
 NB_ALPHA = 1.0
 
+#: Input columns the pipeline reads: the message and its 0/1 label, as
+#: :func:`load_tweets_csv` names them.
+TEXT_COL, LABEL_COL = "text", "label"
+
 _CLEAN_URL = re.compile(r"http\S+|www\S+")
 _CLEAN_MENTION = re.compile(r"@\w+")
 _CLEAN_HASHTAG = re.compile(r"#\w+")
@@ -84,24 +88,16 @@ class SentimentModel:
     ``tests/test_ml_pipeline.py``.
     """
 
-    def __init__(
-        self,
-        tfidf_model: SklearnTfidfModel,
-        nb_model: NaiveBayesModel,
-        text_col: str = "text",
-        label_col: str = "label",
-    ) -> None:
+    def __init__(self, tfidf_model: SklearnTfidfModel, nb_model: NaiveBayesModel) -> None:
         self.tfidf_model = tfidf_model
         self.nb_model = nb_model
-        self.text_col = text_col
-        self.label_col = label_col
         self._local = None  # lazy driver-local scoring params
 
     # -- batch scoring (U4) --------------------------------------------
     def transform(self, df: DataFrame) -> DataFrame:
         """Append ``prediction`` (double) and decoded ``sentiment``
-        columns. Input needs ``text_col``; label is not required."""
-        cleaned = df.withColumn("__clean", clean_text_col(self.text_col))
+        columns. Input needs ``TEXT_COL``; label is not required."""
+        cleaned = df.withColumn("__clean", clean_text_col(TEXT_COL))
         feats = self.tfidf_model.transform(cleaned)
         scored = self.nb_model.transform(feats)
         decoded = scored.withColumn(
@@ -115,13 +111,13 @@ class SentimentModel:
         )
 
     def evaluate(self, df: DataFrame) -> dict:
-        """Accuracy of the batch path against ``label_col`` — the
+        """Accuracy of the batch path against ``LABEL_COL`` — the
         reference's smoke metric (`src/train.py:45-48`). One
         aggregated scalar leaves the cluster."""
         scored = self.transform(df)
         row = scored.agg(
             F.avg(
-                (F.col(self.label_col).cast("double") == F.col("prediction"))
+                (F.col(LABEL_COL).cast("double") == F.col("prediction"))
                 .cast("double")
             ).alias("accuracy"),
             F.count(F.lit(1)).alias("n"),
@@ -192,8 +188,6 @@ class SentimentModel:
                 "alpha": self.nb_model.getSmoothing(),
                 "model_type": self.nb_model.getModelType(),
                 "max_features": len(self.tfidf_model.idf_),
-                "text_col": self.text_col,
-                "label_col": self.label_col,
             },
             "metrics": metrics or {},
             "paths": {"tfidf": "tfidf", "nb": "nb"},
@@ -209,8 +203,6 @@ class SentimentModel:
         return cls(
             SklearnTfidfModel.load(os.path.join(path, run["paths"]["tfidf"])),
             NaiveBayesModel.load(os.path.join(path, run["paths"]["nb"])),
-            text_col=run["params"]["text_col"],
-            label_col=run["params"]["label_col"],
         )
 
 
@@ -220,14 +212,8 @@ class SentimentPipeline:
     `config.ini` NAIVE_BAYES section)."""
 
     def __init__(
-        self,
-        text_col: str = "text",
-        label_col: str = "label",
-        max_features: int = 5000,
-        stop_words: str | None = "english",
+        self, max_features: int = 5000, stop_words: str | None = "english"
     ) -> None:
-        self.text_col = text_col
-        self.label_col = label_col
         self.max_features = max_features
         self.stop_words = stop_words
 
@@ -248,20 +234,18 @@ class SentimentPipeline:
             output_col="features",
             max_features=self.max_features,
             stop_words=self.stop_words,
-        ).fit(fit_src.withColumn("__clean", clean_text_col(self.text_col)))
+        ).fit(fit_src.withColumn("__clean", clean_text_col(TEXT_COL)))
 
         train_feats = tfidf.transform(
-            train_df.withColumn("__clean", clean_text_col(self.text_col))
-        ).withColumn("__label_d", F.col(self.label_col).cast("double"))
+            train_df.withColumn("__clean", clean_text_col(TEXT_COL))
+        ).withColumn("__label_d", F.col(LABEL_COL).cast("double"))
         nb = NaiveBayes(
             smoothing=NB_ALPHA,
             modelType="multinomial",
             featuresCol="features",
             labelCol="__label_d",
         ).fit(train_feats)
-        return SentimentModel(
-            tfidf, nb, text_col=self.text_col, label_col=self.label_col
-        )
+        return SentimentModel(tfidf, nb)
 
 
 def train_test_split(
@@ -281,9 +265,20 @@ def train_test_split(
 def load_tweets_csv(spark: SparkSession, path: str, encoding: str = "ISO-8859-1") -> DataFrame:
     """The reference's ingest: latin-1 CSV with ItemID / Sentiment /
     SentimentText (`src/preprocess.py:46`), normalized to
-    (id, label, text)."""
+    (id, label, text).
+
+    Read with a declared schema of the three header names as strings,
+    so building the DataFrame runs no Spark job (taking the column
+    names from the header would run one). ``enforceSchema=false``
+    checks each file's header against it: a renamed or reordered
+    column fails the first action instead of being read under the
+    wrong name. A short row pads with nulls; a label that is not an
+    integer fails the cast.
+    """
     return (
-        spark.read.option("header", True)
+        spark.read.schema("ItemID string, Sentiment string, SentimentText string")
+        .option("header", True)
+        .option("enforceSchema", False)
         .option("encoding", encoding)
         .option("multiLine", True)
         .option("escape", '"')

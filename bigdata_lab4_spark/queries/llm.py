@@ -792,9 +792,7 @@ def simhash_fingerprints(spark, sf_dir):
     h = (
         d.select(
             "doc_id",
-            F.explode_outer(
-                F.expr("array_distinct(filter(split(text, '\\\\s+'), t -> t != ''))")
-            ).alias("tok"),
+            F.explode_outer(F.array_distinct(tokens_col("text"))).alias("tok"),
         )
         .select(
             "doc_id",

@@ -57,11 +57,6 @@ def get_spark(
         # zstd beats snappy on ratio at similar read speed (guide §6) for
         # everything the engine writes (predictions sink, streaming).
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # older testdata generations wrote events.ts as TIMESTAMP(NANOS),
-        # which the vectorized reader rejects — read the physical int64;
-        # catalog.load_table converts it to µs timestamps. Current files
-        # are TIMESTAMP(MICROS) and read unchanged under this conf.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Whole-stage codegen keeps its compiled classes in one JVM-wide
         # LRU cache, 100 entries by default. One pass over the 89
         # registered queries at sf0.001 compiles 659 distinct classes,

@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from bigdata_lab4_spark.catalog import SCHEMAS
 
 #: How far behind the newest event time a row may arrive and still count.
 WATERMARK = "10 minutes"
@@ -44,17 +45,13 @@ _DRAIN_TIMEOUT_S = 300
 
 
 def read_events_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream of an events directory.
-
-    Parquet streaming needs an explicit schema (no inference mid-
-    stream); by default it is borrowed from a batch read of the same
-    path. ``max_files_per_trigger`` caps each micro-batch so a
-    directory replays as a genuine multi-batch stream.
+    """File-source stream of an events directory, read with the batch
+    catalog's declared schema (``SCHEMAS["events"]``), so the stream and
+    ``load_table(..., "events")`` have one schema and building the
+    stream runs no Spark job. ``max_files_per_trigger`` caps each
+    micro-batch so a directory replays as a genuine multi-batch stream.
 
     This reader does NOT touch session configuration (a reader
     mutating ``spark.sql.session.timeZone`` as a side effect leaks
@@ -63,9 +60,7 @@ def read_events_stream(
     epoch-aligned windows downstream are timezone-independent for
     instant-typed ``ts`` columns anyway.
     """
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(SCHEMAS["events"])
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)

@@ -1,6 +1,6 @@
 """Catalog tests: the declared table schemas (``catalog.SCHEMAS``) match
-every testdata generation, mounting and planning run no schema-inference
-jobs, and the ``events`` branch normalises both physical ``ts`` types."""
+every testdata generation, a physical type other than the declared one
+fails the read, and mounting and planning run no Spark job."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 import bigdata_lab4_spark.queries  # noqa: F401  (registers every query)
 from bigdata_lab4_spark.catalog import SCHEMAS, TABLES, load_table, register_views
@@ -18,22 +19,44 @@ from bigdata_lab4_spark.registry import REGISTRY
 from tests.conftest import NEARDUP_QUERIES, SF_DIR, SF_DIR_SMOKE, job_group
 
 
-def test_schemas_cover_every_table_but_events():
-    assert set(SCHEMAS) == set(TABLES) - {"events"}
+def test_schemas_cover_every_table():
+    assert set(SCHEMAS) == set(TABLES)
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_declared_schemas_match_the_data(spark, sf):
+    """Each declared schema is the footers' inferred one, except that
+    ``events.ts`` is declared as the instant type ``timestamp`` over the
+    zone-less ``timestamp[us]`` the files hold; its values are the raw
+    micros, read as UTC."""
     sf_dir = os.path.join("/root/testdata", sf)
     for name in SCHEMAS:
-        inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        inferred = spark.read.parquet(path).schema
+        if name == "events":
+            assert inferred["ts"].dataType == TimestampNTZType()
+            inferred = StructType(
+                [StructField("ts", TimestampType()) if f.name == "ts" else f for f in inferred]
+            )
         assert load_table(spark, sf_dir, name).schema == inferred, name
+
+    raw = pq.read_table(os.path.join(sf_dir, "events.parquet"), columns=["event_id", "ts"])
+    assert raw.schema.field("ts").type == pa.timestamp("us")
+    want = dict(zip(raw["event_id"].to_pylist(), raw["ts"].cast(pa.int64()).to_pylist()))
+    micros = load_table(spark, sf_dir, "events").selectExpr("event_id", "unix_micros(ts)")
+    for tz in ("UTC", "America/Los_Angeles"):
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            assert dict(tuple(r) for r in micros.collect()) == want, tz
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def test_declared_schema_type_mismatch_raises(spark, tmp_path):
     """A physical type that differs from the declared one fails the read
-    instead of being converted; a missing column reads as nulls (the
-    documented limit of ``load_table``)."""
+    instead of being converted: ``array<double>`` embeddings, and an
+    ``events.ts`` written as ``timestamp[ns]``. A missing column reads
+    as nulls (the documented limit of ``load_table``)."""
     pq.write_table(
         pa.table(
             {
@@ -44,8 +67,22 @@ def test_declared_schema_type_mismatch_raises(spark, tmp_path):
         ),
         str(tmp_path / "embeddings.parquet"),
     )
-    with pytest.raises(Py4JJavaError, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
-        load_table(spark, str(tmp_path), "embeddings").collect()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([0], pa.int64()),
+                "ts": pa.array([1_700_000_000 * 10**9 + 999], pa.timestamp("ns")),
+                "user_id": pa.array([7], pa.int64()),
+                "event_type": pa.array(["view"]),
+                "value": pa.array([1.0]),
+                "props": pa.array(["{}"]),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    for name in ("embeddings", "events"):
+        with pytest.raises(Py4JJavaError, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            load_table(spark, str(tmp_path), name).collect()
 
     pq.write_table(
         pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}),
@@ -56,9 +93,8 @@ def test_declared_schema_type_mismatch_raises(spark, tmp_path):
 
 
 def test_planning_runs_no_spark_job(spark, tmp_path):
-    """Mounting a fresh sf dir infers only ``events`` (≤ 1 job), and
-    building each neardup query's DataFrame, without an action, runs no
-    job at all."""
+    """Mounting a fresh sf dir, and building each neardup query's
+    DataFrame without an action, run no Spark job at all."""
     fresh = tmp_path / "sf"
     fresh.mkdir()
     for name in TABLES:
@@ -71,36 +107,8 @@ def test_planning_runs_no_spark_job(spark, tmp_path):
     for name in NEARDUP_QUERIES:
         with job_group(spark, f"test.plan.{name}") as shapes[name]:
             REGISTRY[name].fn(spark, SF_DIR)
-    assert mount()[0] <= 1
+    assert mount()[0] == 0
     assert {name: shape()[0] for name, shape in shapes.items()} == dict.fromkeys(
         NEARDUP_QUERIES, 0
     )
 
-
-def test_events_nanos_ts_truncates_to_micros(spark, tmp_path):
-    """Older testdata generations wrote ``events.ts`` as TIMESTAMP(NANOS).
-    ``load_table`` reads it as µs timestamps by integer division, which
-    truncates as DuckDB's reader does (double division would round)."""
-    second_ns = 1_700_000_000 * 10**9
-    offsets_ns = [0, 999, 1_999, 999_999, 1_000_500]
-    path = tmp_path / "events.parquet"
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array(range(len(offsets_ns)), pa.int64()),
-                "ts": pa.array([second_ns + o for o in offsets_ns], pa.timestamp("ns")),
-                "user_id": pa.array([7] * len(offsets_ns), pa.int64()),
-                "event_type": pa.array(["view"] * len(offsets_ns)),
-                "value": pa.array([1.0] * len(offsets_ns)),
-                "props": pa.array(["{}"] * len(offsets_ns)),
-            }
-        ),
-        str(path),
-    )
-    assert pq.read_schema(str(path)).field("ts").type == pa.timestamp("ns")
-    events = load_table(spark, str(tmp_path), "events")
-    assert dict(events.dtypes)["ts"] == "timestamp"
-    got = [
-        r[0] for r in events.orderBy("event_id").selectExpr("unix_micros(ts)").collect()
-    ]
-    assert got == [(second_ns + o) // 1000 for o in offsets_ns]

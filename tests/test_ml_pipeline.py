@@ -28,6 +28,7 @@ from bigdata_lab4_spark.ml.pipeline import (
     load_tweets_csv,
     train_test_split,
 )
+from tests.conftest import job_group
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -83,7 +84,13 @@ def test_save_load_roundtrip_and_run_metadata(fitted, tmp_path):
     assert run["params"]["alpha"] == 1.0
     assert run["params"]["model_type"] == "multinomial"
     assert run["metrics"]["accuracy"] == pytest.approx(metrics["accuracy"])
+    assert "text_col" not in run["params"] and "label_col" not in run["params"]
 
+    # run.json files written before the input columns became constants
+    # record them; load ignores them
+    run["params"].update(text_col="text", label_col="label")
+    with open(os.path.join(path, "run.json"), "w") as f:
+        json.dump(run, f)
     loaded = SentimentModel.load(path)
     sample = test.limit(50)
     before = [r["sentiment"] for r in model.transform(sample).collect()]
@@ -131,6 +138,31 @@ def test_pipeline_on_tweets_fixture(spark, tmp_path):
     scored = model.transform(df)
     assert scored.count() == df.count()
     assert set(r["sentiment"] for r in scored.collect()) <= {POSITIVE, NEGATIVE}
+
+
+def test_load_tweets_csv_reads_the_declared_header(spark, tmp_path):
+    """Building the frame runs no Spark job; a short row pads with nulls,
+    and a renamed or reordered header or a non-integer label fails the
+    first action."""
+    def write(name: str, text: str) -> str:
+        path = str(tmp_path / name)
+        with open(path, "w") as f:
+            f.write(text)
+        return path
+
+    ok = write("ok.csv", 'ItemID,Sentiment,SentimentText\n1,0,"sad, day"\n2,1\n')
+    with job_group(spark, "test.load_tweets_csv") as build:
+        df = load_tweets_csv(spark, ok, encoding="UTF-8")
+    assert build()[0] == 0
+    assert [tuple(r) for r in df.orderBy("id").collect()] == [(1, 0, "sad, day"), (2, 1, None)]
+
+    for header in ("ItemID,Label,SentimentText", "ItemID,SentimentText,Sentiment"):
+        bad = write("header.csv", f"{header}\n1,0,sad\n")
+        with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+            load_tweets_csv(spark, bad, encoding="UTF-8").collect()
+    bad = write("label.csv", "ItemID,Sentiment,SentimentText\n1,positive,glad\n")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        load_tweets_csv(spark, bad, encoding="UTF-8").collect()
 
 
 def test_train_test_split_deterministic(spark):

@@ -11,10 +11,12 @@ batches; the watermark computed from batch N gates batch N+1.
 from __future__ import annotations
 
 import os
+import shutil
 from datetime import datetime, timedelta, timezone
 
 import pytest
 
+from bigdata_lab4_spark.catalog import load_table
 from bigdata_lab4_spark.engine import (
     create_predictions_table,
     insert_prediction,
@@ -31,6 +33,7 @@ from bigdata_lab4_spark.streaming import (
     tumbling_event_counts,
 )
 from bigdata_lab4_spark.streaming.windows import SESSION_GAP_S
+from tests.conftest import SF_DIR_SMOKE, job_group
 
 
 def _ts(h: int, m: int, s: int = 0, us: int = 0) -> datetime:
@@ -148,12 +151,41 @@ def test_streaming_matches_batch_plan_on_closed_window(spark, stream_result):
     assert stream_rows == batch_rows
 
 
-def test_events_stream_from_testdata_schema(spark):
-    """The sf0.001 events table mounts as a stream with the same
-    post-conversion schema contract the batch catalog provides."""
-    stream = read_events_stream(spark, "/root/testdata/sf0.001/events.parquet")
+def test_events_stream_from_testdata_schema(spark, tmp_path):
+    """The sf0.001 events table mounts as a stream with the batch
+    catalog's schema, building the stream runs no Spark job, and T1,
+    T2, T3 and T7 run on it. A file source streams a directory, so the
+    runs replay a directory holding the table's file, as one
+    micro-batch: T1 and T2 emit exactly the batch rows whose window
+    ended by the watermark, and T7 the sessions that T3 closes."""
+    path = os.path.join(SF_DIR_SMOKE, "events.parquet")
+    with job_group(spark, "test.read_events_stream") as build:
+        stream = read_events_stream(spark, path)
+    assert build()[0] == 0
     assert stream.isStreaming
-    assert "ts" in stream.columns and "event_type" in stream.columns
+    batch = load_table(spark, SF_DIR_SMOKE, "events")
+    assert stream.schema == batch.schema
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(path, src / "events.parquet")
+    wm = batch.selectExpr(f"unix_seconds(max(ts)) - {10 * 60}").first()[0]
+
+    def run(name, query):
+        out = tmp_path / name
+        run_available_now(
+            query(read_events_stream(spark, str(src))), str(out / "out"), str(out / "cp")
+        )
+        return sorted(tuple(r) for r in spark.read.parquet(str(out / "out")).collect())
+
+    for name, query in [("t1", tumbling_event_counts), ("t2", sliding_event_counts)]:
+        closed = [r for r in sorted(tuple(r) for r in query(batch).collect()) if r[0] + 3600 <= wm]
+        assert closed and run(name, query) == closed, name
+    sessions = run("t3", session_event_counts)
+    t7 = sorted(
+        (u, round(start.timestamp(), 6), n, round(total, 2))
+        for u, start, _, n, total in run("t7", sessionize_stream)
+    )
+    assert sessions and t7 == sessions
 
 
 # -- predictions write path (S6/S7) ------------------------------------
