@@ -11,7 +11,6 @@ mounted.
 from __future__ import annotations
 
 import datetime
-import threading
 import uuid
 
 import pyarrow as pa
@@ -57,11 +56,6 @@ def top_k_predictions(spark: SparkSession, path: str, limit: int = 10) -> DataFr
     return src.orderBy("timestamp", ascending=False).limit(limit)
 
 
-#: Appends take unique file names and never conflict; the lock makes
-#: ``create_predictions_table``'s check-then-write atomic against every
-#: commit in the process. Re-entrant: the create commits while holding it.
-_STORE_LOCK = threading.RLock()
-
 #: ``PREDICTIONS_SCHEMA`` in the store's files: non-null UTC-microsecond
 #: timestamps, which Spark reads beside its own writer's INT96 files.
 _ARROW_SCHEMA = to_arrow_schema(PREDICTIONS_SCHEMA)
@@ -76,32 +70,33 @@ def _store_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _write_store_file(spark: SparkSession, path: str, rows: list[dict]) -> None:
-    """Commit ``rows`` as one new parquet file under ``path``, with no
+def _write_store_file(spark: SparkSession, path: str, row: dict) -> None:
+    """Commit ``row`` as one new parquet file under ``path``, with no
     Spark job. pyarrow encodes one row group without dictionary, column
     statistics or Arrow schema blob (in a one-row file each is only
     footer bytes). The path's own Hadoop FileSystem writes a hidden temp
     file and renames it to ``part-<uuid>.zstd.parquet``; readers skip
-    ``.`` names. On failure the temp file is deleted and the error raised."""
+    ``.`` names, and the unique name leaves concurrent appends nothing
+    to contend for. On failure the temp file is deleted and the error
+    raised."""
     buf = pa.BufferOutputStream()
-    pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA), buf, compression="zstd",
+    pq.write_table(pa.Table.from_pylist([row], schema=_ARROW_SCHEMA), buf, compression="zstd",
                    use_dictionary=False, write_statistics=False, store_schema=False)
     data = buf.getvalue().to_pybytes()
     fs, jdir = _store_fs(spark, path)
     name = uuid.uuid4().hex
     tmp, part = jdir.suffix(f"/.{name}.tmp"), jdir.suffix(f"/part-{name}.zstd.parquet")
-    with _STORE_LOCK:
+    try:
+        out = fs.create(tmp, False)
         try:
-            out = fs.create(tmp, False)
-            try:
-                out.write(data)
-            finally:
-                out.close()
-            if not fs.rename(tmp, part):
-                raise OSError(f"could not rename {tmp} to {part}")
-        except Exception:
-            fs.delete(tmp, False)
-            raise
+            out.write(data)
+        finally:
+            out.close()
+        if not fs.rename(tmp, part):
+            raise OSError(f"could not rename {tmp} to {part}")
+    except Exception:
+        fs.delete(tmp, False)
+        raise
 
 
 def create_predictions_table(spark: SparkSession, path: str) -> None:
@@ -110,15 +105,16 @@ def create_predictions_table(spark: SparkSession, path: str) -> None:
     (`/root/reference/src/database.py:53-66`) — but as a parquet
     directory of one file per append, not a single-node MergeTree.
 
-    The check and the empty file go through the path's FileSystem
-    (HDFS/S3A/local): no Spark job. A session without a py4j bridge
-    (Spark Connect) raises ``TypeError`` here, at start-up. Cross-process
-    create-vs-append races are out of scope, as in the reference."""
+    One ``mkdirs`` on the path's FileSystem (HDFS/S3A/local): no Spark
+    job and no file; :func:`top_k_predictions` reads the empty directory
+    with the declared schema as no rows. A path that cannot be a
+    directory (a regular file is there) raises: the FileSystem's own
+    error, or ``OSError`` if ``mkdirs`` only returns false. A session
+    without a py4j bridge (Spark Connect) raises ``TypeError``. Both
+    fail at start-up."""
     fs, jpath = _store_fs(spark, path)
-    with _STORE_LOCK:
-        names = [st.getPath().getName() for st in fs.listStatus(jpath)] if fs.isDirectory(jpath) else []
-        if not any(n.endswith(".parquet") or n == "_SUCCESS" for n in names):
-            _write_store_file(spark, path, [])
+    if not fs.mkdirs(jpath):
+        raise OSError(f"could not create the predictions store {path}")
 
 
 def insert_prediction(
@@ -142,4 +138,4 @@ def insert_prediction(
     micro-batch (SURVEY §4.3, row-at-a-time insert anti-pattern).
     """
     now = datetime.datetime.now(datetime.timezone.utc)
-    _write_store_file(spark, path, [{"timestamp": now, "message": message, "prediction": prediction}])
+    _write_store_file(spark, path, {"timestamp": now, "message": message, "prediction": prediction})

@@ -7,6 +7,18 @@ of ``string.punctuation``, lowercase, strip. Here the same semantics
 are pure Catalyst column expressions — JVM-side, whole-stage
 codegen'd, no Python in the hot path. Golden I/O pairs from
 `src/unit_tests/test_utils.py:8-21` are the contract (tests/).
+
+The patterns below are the one cleaning definition: valid in Java's
+regex engine and in RE2, so the DuckDB oracle
+(``queries.projections.CLEAN_TEXT_SQL``) is built from the same
+strings. They spell out CPython's unicode classes, which the
+reference relies on (fuzzed in tests/test_text_properties.py):
+
+* a word character is ``isalnum ∪ {_}`` = L* ∪ N* (incl. No/Nl:
+  '²', 'Ⅷ') ∪ ``_``, without the marks and other connectors that
+  Java's ``(?U)\\w`` adds;
+* whitespace is Java's White_Space set plus ``\\x1c-\\x1f`` (bidi
+  separators Python counts as space, Java does not).
 """
 
 from __future__ import annotations
@@ -20,49 +32,39 @@ from pyspark.sql import functions as F
 #: reference deletes (`/root/reference/src/utils.py:9`).
 PUNCTUATION: str = string.punctuation
 
+_WORD = r"[\p{L}\p{N}_]"
+_SPACES = (
+    r"\t\n\x0b\f\r \x85\xa0\x{1680}\x{2000}-\x{200a}\x{2028}\x{2029}"
+    r"\x{202f}\x{205f}\x{3000}\x1c-\x1f"
+)
+_SPACE, _NON_SPACE = f"[{_SPACES}]", f"[^{_SPACES}]"
 
-def clean_text_col(c: Column | str, ascii_only: bool = False) -> Column:
+#: The reference's ``http\S+|www\S+`` (`src/utils.py:6`).
+URL_RE = f"http{_NON_SPACE}+|www{_NON_SPACE}+"
+#: The reference's ``@\w+`` (`src/utils.py:7`).
+MENTION_RE = f"@{_WORD}+"
+#: The reference's ``#\w+`` (`src/utils.py:8`).
+HASHTAG_RE = f"#{_WORD}+"
+#: Python's ``str.strip()`` as a regex; Spark's ``trim()`` strips only ' '.
+STRIP_RE = f"^{_SPACE}+|{_SPACE}+$"
+
+
+def clean_text_col(c: Column | str) -> Column:
     """Spark-native ``clean_text``.
 
     Matches the reference order of operations exactly: URLs →
     mentions → hashtags → punctuation deletion → lower → strip.
-
-    ``ascii_only=True`` keeps regexes RE2-compatible (ASCII ``\\w``)
-    so the identical expression can be mirrored in the DuckDB oracle;
-    the default uses Java's ``(?U)`` to match Python's unicode-aware
-    ``\\w`` (CPython ``re`` semantics, which the reference relies on).
     """
     c = F.col(c) if isinstance(c, str) else c
-    if ascii_only:
-        word, sp, nsp = r"\w", r"\s", r"\S"
-    else:
-        # CPython's unicode classes, spelled out for Java's engine
-        # (Java's (?U)\w/\s are close but NOT equal — fuzzed in
-        # tests/test_text_properties.py):
-        #   \w = isalnum ∪ {_} = L* ∪ N* (incl. No/Nl: '²', 'Ⅷ') ∪ _
-        #        but NOT marks (Java (?U)\w adds Mn/Mc/Me) and NOT
-        #        other connectors (Java adds all of Pc);
-        #   \s = White_Space ∪ \x1c-\x1f (bidi separators Python
-        #        counts as space, Java does not).
-        word = r"[\p{L}\p{N}_]"
-        sp = r"[\s\x1c-\x1f\x85]"
-        nsp = r"[^\s\x1c-\x1f\x85]"
-    # (?U) makes Java \s match unicode White_Space (NBSP etc.); the
-    # ascii_only branch skips it so the same pattern stays RE2-valid
-    # for the DuckDB oracle mirror.
-    flags = "" if ascii_only else "(?U)"
-    c = F.regexp_replace(c, f"{flags}http{nsp}+|www{nsp}+", "")
-    c = F.regexp_replace(c, f"{flags}@{word}+", "")
-    c = F.regexp_replace(c, f"{flags}#{word}+", "")
+    c = F.regexp_replace(c, URL_RE, "")
+    c = F.regexp_replace(c, MENTION_RE, "")
+    c = F.regexp_replace(c, HASHTAG_RE, "")
     # translate() deletes chars with no replacement — same semantics
     # as str.translate(maketrans("", "", punctuation)); stays in
     # codegen, no regex engine needed for the 32-char class.
     c = F.translate(c, PUNCTUATION, "")
     c = F.lower(c)
-    # Python .strip() removes all whitespace (space/tab/newline...),
-    # Spark trim() only ' ' — use a regex trim for exact parity.
-    c = F.regexp_replace(c, f"{flags}^{sp}+|{sp}+$", "")
-    return c
+    return F.regexp_replace(c, STRIP_RE, "")
 
 
 def tokens_col(c: Column | str) -> Column:

@@ -59,6 +59,10 @@ POSITIVE, NEGATIVE, UNKNOWN = (
 #: (`src/train.py:36-42`).
 NB_ALPHA = 1.0
 
+#: Vocabulary cap of the reference's ``TfidfVectorizer(max_features=5000)``
+#: (`src/preprocess.py:40`).
+MAX_FEATURES = 5000
+
 #: Input columns the pipeline reads: the message and its 0/1 label, as
 #: :func:`load_tweets_csv` names them.
 TEXT_COL, LABEL_COL = "text", "label"
@@ -207,15 +211,10 @@ class SentimentModel:
 
 
 class SentimentPipeline:
-    """Unfitted pipeline with the reference's hyperparameters as
-    defaults (`src/preprocess.py:40`, `src/train.py:36`,
-    `config.ini` NAIVE_BAYES section)."""
-
-    def __init__(
-        self, max_features: int = 5000, stop_words: str | None = "english"
-    ) -> None:
-        self.max_features = max_features
-        self.stop_words = stop_words
+    """Unfitted pipeline with the reference's hyperparameters
+    (`src/preprocess.py:40`, `src/train.py:36`, `config.ini`
+    NAIVE_BAYES section): ``MAX_FEATURES``, English stop words and
+    ``NB_ALPHA``."""
 
     def fit(
         self, train_df: DataFrame, tfidf_fit_df: DataFrame | None = None
@@ -232,8 +231,7 @@ class SentimentPipeline:
         tfidf = SklearnTfidf(
             input_col="__clean",
             output_col="features",
-            max_features=self.max_features,
-            stop_words=self.stop_words,
+            max_features=MAX_FEATURES,
         ).fit(fit_src.withColumn("__clean", clean_text_col(TEXT_COL)))
 
         train_feats = tfidf.transform(
@@ -248,17 +246,13 @@ class SentimentPipeline:
         return SentimentModel(tfidf, nb)
 
 
-def train_test_split(
-    df: DataFrame, test_size: float = 0.2, seed: int = 42
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic split mirroring the reference's
+def train_test_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Deterministic 80/20 split mirroring the reference's
     ``train_test_split(..., test_size=0.2, random_state=42)``
     (`src/preprocess.py:53-55`) — semantic, not bitwise: Spark and
     sklearn RNGs cannot produce identical splits (SURVEY §7.4).
     """
-    if not 0.0 < test_size < 1.0:
-        raise ValueError("test_size must be in (0, 1)")
-    train, test = df.randomSplit([1.0 - test_size, test_size], seed=seed)
+    train, test = df.randomSplit([0.8, 0.2], seed=42)
     return train, test
 
 

@@ -25,13 +25,13 @@ sklearn semantics reproduced (all public, from the sklearn docs):
 Execution is Spark-first: fitting is one term-keyed aggregation
 (corpus term frequency and document frequency together), and the
 fitted transform is a pure-JVM ``PipelineModel`` of
-``RegexTokenizer → [StopWordsRemover] → CountVectorizerModel →
+``RegexTokenizer → StopWordsRemover → CountVectorizerModel →
 ElementwiseProduct(idf) → Normalizer(p=2)`` — no Python in the
 transform path, so scoring 100 TB of text never leaves codegen'd
 JVM operators.
 
-Known semantic substitution: for ``stop_words="english"`` we use
-Spark's built-in english stop-word list
+Stop words are always English, as in the reference. Known semantic
+substitution: we use Spark's built-in english stop-word list
 (``StopWordsRemover.loadDefaultStopWords``), not sklearn's 318-word
 frozenset (sklearn is not installed here).  The lists overlap heavily
 but are not identical; parity is semantic (±0.01 accuracy,
@@ -59,25 +59,20 @@ from pyspark.sql import functions as F
 TOKEN_PATTERN = r"(?U)\b\w\w+\b"
 
 
-def _tokenizer_stages(input_col: str, stop_words: str | None) -> tuple[list, str]:
-    """Tokenize(+stop-filter) stages shared by fit and transform.
-
-    Returns the stage list and the name of the final token column.
-    """
-    stages: list = [
+def _tokenizer_stages(input_col: str) -> list:
+    """Tokenize + stop-filter stages shared by fit and transform; the
+    tokens land in ``__tokens``."""
+    return [
         RegexTokenizer(
             inputCol=input_col,
             outputCol="__tokens_raw",
             pattern=TOKEN_PATTERN,
             gaps=False,  # pattern matches tokens, not separators
             toLowercase=True,
-        )
+        ),
+        # StopWordsRemover's default: Spark's English list.
+        StopWordsRemover(inputCol="__tokens_raw", outputCol="__tokens"),
     ]
-    token_col = "__tokens_raw"
-    if stop_words == "english":  # StopWordsRemover's default list
-        stages.append(StopWordsRemover(inputCol=token_col, outputCol="__tokens"))
-        token_col = "__tokens"
-    return stages, token_col
 
 
 class SklearnTfidfModel:
@@ -110,13 +105,9 @@ class SklearnTfidfModel:
 
     @property
     def stop_words_(self) -> frozenset[str]:
-        """Words removed before counting; empty for ``stop_words=None``."""
-        sw = [s for s in self._pm.stages if isinstance(s, StopWordsRemover)]
-        return frozenset(sw[0].getStopWords()) if sw else frozenset()
-
-    @property
-    def output_col(self) -> str:
-        return self._pm.stages[-1].getOutputCol()
+        """Words removed before counting."""
+        sw = next(s for s in self._pm.stages if isinstance(s, StopWordsRemover))
+        return frozenset(sw.getStopWords())
 
     def transform(self, df: DataFrame) -> DataFrame:
         """L2-normalized TF-IDF ``SparseVector`` column; intermediate
@@ -161,19 +152,15 @@ class SklearnTfidf:
         input_col: str = "text",
         output_col: str = "features",
         max_features: int = 5000,
-        stop_words: str | None = "english",
     ) -> None:
         if max_features < 1:
             raise ValueError("max_features must be >= 1")
-        if stop_words not in ("english", None):
-            raise ValueError(f"stop_words must be 'english' or None: {stop_words!r}")
         self.input_col = input_col
         self.output_col = output_col
         self.max_features = max_features
-        self.stop_words = stop_words
 
     def fit(self, df: DataFrame) -> SklearnTfidfModel:
-        tok_stages, token_col = _tokenizer_stages(self.input_col, self.stop_words)
+        tok_stages = _tokenizer_stages(self.input_col)
         tokens = Pipeline(stages=tok_stages).fit(df).transform(df)
 
         n_docs = tokens.count()
@@ -190,7 +177,7 @@ class SklearnTfidf:
                 ),
             )
 
-        toks = F.col(token_col)
+        toks = F.col("__tokens")
         term_stats = (
             tokens.select(
                 F.inline(F.concat(rows(toks, 1, 0), rows(F.array_distinct(toks), 0, 1)))
@@ -217,7 +204,7 @@ class SklearnTfidf:
         stages = list(tok_stages)
         stages.append(
             CountVectorizerModel.from_vocabulary(
-                vocab, inputCol=token_col, outputCol="__counts"
+                vocab, inputCol="__tokens", outputCol="__counts"
             )
         )
         stages.append(

@@ -171,17 +171,15 @@ def _salted_band_join(spark, probe, build):
     return probe.hint("shuffle_hash").join(build, ["band", "val", "salt"])
 
 
-#: A candidate pair collides in several bands but must be emitted once;
-#: keying the emission to the FIRST band whose minhash values agree
-#: reproduces ``approxSimilarityJoin``'s pair-``distinct`` without a
-#: second shuffle (same trick as l07b). Short-circuits after ~1 array
-#: probe on average; all native, codegen'd.
-_MINHASH_FIRST_BAND = (
-    "(band < 1 OR s1[0] != s2[0]) AND (band < 2 OR s1[1] != s2[1]) AND "
-    "(band < 3 OR s1[2] != s2[2]) AND (band < 4 OR s1[3] != s2[3]) AND "
-    "(band < 5 OR s1[4] != s2[4]) AND (band < 6 OR s1[5] != s2[5]) AND "
-    "(band < 7 OR s1[6] != s2[6])"
-)
+def _first_band(key: str, n: int, differ) -> str:
+    """SQL predicate: emit a candidate pair only from the FIRST of its
+    ``n`` bands whose values agree. A pair collides in several bands but
+    must be emitted once; keying the emission to the first colliding
+    band (``key``, 0-based) reproduces a pair-``distinct`` without a
+    second shuffle. ``differ(b)`` is SQL saying band ``b``'s values
+    differ. Short-circuits after ~1 probe on average; all native,
+    codegen'd. Used by l02b, l07b and l03b, and by l03b's oracle."""
+    return " AND ".join(f"({key} < {b + 1} OR {differ(b)})" for b in range(n - 1))
 
 
 #: ``approxSimilarityJoin``'s distance threshold: pairs with Jaccard
@@ -203,7 +201,10 @@ def minhash_lsh_pairs(spark, sf_dir):
     (functions/minhash.py); candidates come from ``_salted_band_join``,
     with first-band dedup and the index-set Jaccard as native
     expressions, so only true result pairs materialize."""
-    from bigdata_lab4_spark.functions.minhash import minhash_fingerprint_udf
+    from bigdata_lab4_spark.functions.minhash import (
+        MINHASH_COEFFS,
+        minhash_fingerprint_udf,
+    )
 
     minhash_fingerprint = minhash_fingerprint_udf()
     d = load_table(spark, sf_dir, "documents")
@@ -336,7 +337,9 @@ def minhash_lsh_pairs(spark, sf_dir):
     scored = (
         _salted_band_join(spark, a, b)
         .filter(F.col("d1") < F.col("d2"))
-        .filter(F.expr(_MINHASH_FIRST_BAND))
+        .filter(
+            F.expr(_first_band("band", len(MINHASH_COEFFS), lambda b: f"s1[{b}] != s2[{b}]"))
+        )
         .select(
             "d1",
             "d2",
@@ -460,6 +463,10 @@ def _l03b_oracle() -> str:
     )
     diff = "(CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))"
     sq = f"{diff} * {diff}"
+    # DuckDB lists are 1-based
+    first_band = _first_band(
+        "c.tbl", len(BRP_UNIT_VECTORS), lambda b: f"c.sig[{b + 1}] != q.sig[{b + 1}]"
+    )
     return f"""
         WITH sig AS (
             SELECT vec_id, embedding, [{buckets}] AS sig FROM embeddings
@@ -471,9 +478,7 @@ def _l03b_oracle() -> str:
                    c.embedding AS embedding
             FROM bands c JOIN bands q ON c.tbl = q.tbl AND c.bucket = q.bucket
             WHERE q.vec_id < 5 AND c.vec_id != q.vec_id
-              AND (c.tbl < 1 OR c.sig[1] != q.sig[1])
-              AND (c.tbl < 2 OR c.sig[2] != q.sig[2])
-              AND (c.tbl < 3 OR c.sig[3] != q.sig[3])
+              AND {first_band}
         ), dists AS (
             SELECT qid, cid, sqrt({fold(sq, 'qe')}) AS dist FROM pairs
         )
@@ -494,7 +499,7 @@ def l03b_ann_lsh(spark, sf_dir):
     # no per-row JVM UDF, no py4j call.
     # sqrt(Σ(x−y)²) as a sequential zip_with/aggregate fold reproduces
     # Vectors.sqdist's loop order exactly. Pair dedup across the 4 hash
-    # tables is the same first-collision-table filter l02b/l07b use — no
+    # tables is l02b/l07b's first-band filter (_first_band) — no
     # distinct shuffle.
     from bigdata_lab4_spark.functions.embeddings import (
         BRP_UNIT_VECTORS,
@@ -550,10 +555,7 @@ def l03b_ann_lsh(spark, sf_dir):
         corpus.join(F.broadcast(queries), ["tbl", "bucket"])
         .filter(F.col("cid") != F.col("qid"))
         .filter(
-            F.expr(
-                "(tbl < 1 OR cs[0] != qs[0]) AND (tbl < 2 OR cs[1] != qs[1])"
-                " AND (tbl < 3 OR cs[2] != qs[2])"
-            )
+            F.expr(_first_band("tbl", len(BRP_UNIT_VECTORS), lambda b: f"cs[{b}] != qs[{b}]"))
         )
         .withColumn("dist", dist)
         .filter(F.col("dist") < 4.0)
@@ -872,6 +874,12 @@ def l07b_simhash_neardup(spark, sf_dir):
     return simhash_neardup_pairs(spark, sf_dir)
 
 
+def _simhash_band_differs(b: int) -> str:
+    # band 0 needs no shift; Catalyst would keep a shiftright(…, 0)
+    xor = "(fp1 ^ fp2)" if b == 0 else f"shiftright(fp1 ^ fp2, {15 * b})"
+    return f"({xor} & 32767) != 0"
+
+
 def simhash_neardup_pairs(spark, sf_dir):
     # Banded candidate JOIN on (band, val): 4 band rows of 16 bytes per
     # document — keys and metadata, never payloads (guide §2.3, §8).
@@ -902,10 +910,8 @@ def simhash_neardup_pairs(spark, sf_dir):
         .filter(F.col("d1") < F.col("d2"))
         .filter(
             F.expr(
-                "bit_count(fp1 ^ fp2) <= 6"
-                " AND (band < 1 OR ((fp1 ^ fp2) & 32767) != 0)"
-                " AND (band < 2 OR (shiftright(fp1 ^ fp2, 15) & 32767) != 0)"
-                " AND (band < 3 OR (shiftright(fp1 ^ fp2, 30) & 32767) != 0)"
+                "bit_count(fp1 ^ fp2) <= 6 AND "
+                + _first_band("band", 4, _simhash_band_differs)
             )
         )
     )

@@ -17,17 +17,24 @@ import string
 from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.catalog import load_table
+from bigdata_lab4_spark.functions.text import (
+    HASHTAG_RE,
+    MENTION_RE,
+    STRIP_RE,
+    URL_RE,
+    clean_text_col,
+)
 from bigdata_lab4_spark.registry import query
 
 # string.punctuation with the single quote doubled for SQL literals.
 _PUNCT_SQL = string.punctuation.replace("'", "''")
 
-# DuckDB mirror of functions.text.clean_text_col(ascii_only=True):
-# same op order, RE2 'g' flags, translate-delete, regex trim.
+# DuckDB twin of functions.text.clean_text_col: the same patterns (valid
+# in RE2 and Java), the same op order, RE2 'g' flags, translate-delete.
 CLEAN_TEXT_SQL = (
     "regexp_replace(lower(translate(regexp_replace(regexp_replace(regexp_replace("
-    "text, 'http\\S+|www\\S+', '', 'g'), '@\\w+', '', 'g'), '#\\w+', '', 'g'), "
-    f"'{_PUNCT_SQL}', '')), '^\\s+|\\s+$', '', 'g')"
+    f"text, '{URL_RE}', '', 'g'), '{MENTION_RE}', '', 'g'), '{HASHTAG_RE}', '', 'g'), "
+    f"'{_PUNCT_SQL}', '')), '{STRIP_RE}', '', 'g')"
 )
 
 
@@ -71,47 +78,45 @@ def p02_cast(spark, sf_dir):
     "The python original is a per-row .apply; this is codegen'd JVM work.",
 )
 def p03_clean_text(spark, sf_dir):
-    from bigdata_lab4_spark.functions.text import clean_text_col
-
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", clean_text_col("text", ascii_only=True).alias("cleaned"))
+    return d.select("doc_id", clean_text_col("text").alias("cleaned"))
 
 
 @query(
     "p04_strip_urls",
-    oracle="SELECT doc_id, regexp_replace(text, 'http\\S+|www\\S+', '', 'g') AS no_urls FROM documents",
+    oracle=f"SELECT doc_id, regexp_replace(text, '{URL_RE}', '', 'g') AS no_urls FROM documents",
     doc="P4 URL strip (ref: src/utils.py:6).",
 )
 def p04_strip_urls(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.regexp_replace("text", r"http\S+|www\S+", "").alias("no_urls"))
+    return d.select("doc_id", F.regexp_replace("text", URL_RE, "").alias("no_urls"))
 
 
 @query(
     "p05_strip_mentions",
-    oracle="SELECT doc_id, regexp_replace(text, '@\\w+', '', 'g') AS no_mentions FROM documents",
+    oracle=f"SELECT doc_id, regexp_replace(text, '{MENTION_RE}', '', 'g') AS no_mentions FROM documents",
     doc="P5 @mention strip (ref: src/utils.py:7).",
 )
 def p05_strip_mentions(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.regexp_replace("text", r"@\w+", "").alias("no_mentions"))
+    return d.select("doc_id", F.regexp_replace("text", MENTION_RE, "").alias("no_mentions"))
 
 
 @query(
     "p06_strip_hashtags",
-    oracle="SELECT doc_id, regexp_replace(text, '#\\w+', '', 'g') AS no_tags FROM documents",
+    oracle=f"SELECT doc_id, regexp_replace(text, '{HASHTAG_RE}', '', 'g') AS no_tags FROM documents",
     doc="P6 #hashtag strip (ref: src/utils.py:8).",
 )
 def p06_strip_hashtags(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.regexp_replace("text", r"#\w+", "").alias("no_tags"))
+    return d.select("doc_id", F.regexp_replace("text", HASHTAG_RE, "").alias("no_tags"))
 
 
 @query(
     "p07_punct_lower_trim",
     oracle=(
         f"SELECT doc_id, regexp_replace(lower(translate(text, '{_PUNCT_SQL}', '')), "
-        "'^\\s+|\\s+$', '', 'g') AS norm FROM documents"
+        f"'{STRIP_RE}', '', 'g') AS norm FROM documents"
     ),
     doc="P7 punctuation-delete + lowercase + strip (ref: src/utils.py:9-10). "
     "translate() deletes unmapped chars — identical to str.translate semantics.",
@@ -119,7 +124,7 @@ def p06_strip_hashtags(spark, sf_dir):
 def p07_punct_lower_trim(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     c = F.translate(F.col("text"), string.punctuation, "")
-    c = F.regexp_replace(F.lower(c), r"^\s+|\s+$", "")
+    c = F.regexp_replace(F.lower(c), STRIP_RE, "")
     return d.select("doc_id", c.alias("norm"))
 
 

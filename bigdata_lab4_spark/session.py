@@ -23,20 +23,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Local parallelism follows ``SPARK_GRAFT_CPUS`` when set (the
-    driver's bench contract). On a real cluster ``master`` comes from
-    spark-submit and this factory only contributes conf defaults.
+    The master is ``master`` when passed, else ``local[$SPARK_GRAFT_CPUS]``
+    when that is set (bench.py's contract), else whatever
+    launched the process chose: spark-submit's ``--master``, or
+    Spark's ``local[*]`` under a plain ``python``. Either way this
+    factory contributes its conf defaults.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if master is None:
-        master = f"local[{cpus}]" if cpus else "local[*]"
+    if master is None and cpus:
+        master = f"local[{cpus}]"
     # At 100 TB this is overridden per-deployment (``extra_conf``); for
     # local[N] match the core count so post-shuffle tasks don't fragment.
     shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
+    builder = SparkSession.builder
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

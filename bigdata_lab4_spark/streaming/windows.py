@@ -44,14 +44,17 @@ SESSION_GAP_S = 30 * 60
 _DRAIN_TIMEOUT_S = 300
 
 
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of an events directory, read with the batch
     catalog's declared schema (``SCHEMAS["events"]``), so the stream and
     ``load_table(..., "events")`` have one schema and building the
-    stream runs no Spark job. ``max_files_per_trigger`` caps each
-    micro-batch so a directory replays as a genuine multi-batch stream.
+    stream runs no Spark job. Each micro-batch takes one file, so a
+    directory replays as a genuine multi-batch stream.
+
+    ``path`` must be a directory (or a glob of them): a single parquet
+    file, such as a testdata ``events.parquet``, builds a stream that
+    fails at its first micro-batch with ``'basePath' must be a
+    directory``.
 
     This reader does NOT touch session configuration (a reader
     mutating ``spark.sql.session.timeZone`` as a side effect leaks
@@ -60,10 +63,11 @@ def read_events_stream(
     epoch-aligned windows downstream are timezone-independent for
     instant-typed ``ts`` columns anyway.
     """
-    reader = spark.readStream.schema(SCHEMAS["events"])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return (
+        spark.readStream.schema(SCHEMAS["events"])
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
 
 
 def tumbling_event_counts(events: DataFrame) -> DataFrame:

@@ -26,7 +26,6 @@ def corpus(spark):
 
 
 def _fit(corpus, **kw):
-    kw.setdefault("stop_words", None)
     return SklearnTfidf(input_col="text", output_col="features", **kw).fit(corpus)
 
 
@@ -70,16 +69,13 @@ def test_stop_words_and_short_tokens_dropped(spark):
     # The second doc has no tokens left after stop-word removal; sklearn
     # still counts it in N, so every idf is ln((1+2)/(1+1)) + 1.
     df = spark.createDataFrame([("The cat and a dog sat",), ("The and a",)], ["text"])
-    model = SklearnTfidf(input_col="text", stop_words="english").fit(df)
+    model = _fit(df)
     vocab = set(model.vocabulary_)
     assert "the" not in vocab and "and" not in vocab  # stop words
     assert "a" not in vocab  # sklearn token pattern needs >=2 chars
     assert {"cat", "dog", "sat"} <= vocab
     assert model.idf_ == pytest.approx([math.log(3 / 2) + 1] * len(vocab), abs=1e-9)
     assert {"the", "and"} <= model.stop_words_
-    assert _fit(df).stop_words_ == frozenset()
-    with pytest.raises(ValueError, match="stop_words"):
-        SklearnTfidf(stop_words=["cat"])
 
 
 def test_fit_runs_one_aggregation(spark, corpus):

@@ -56,7 +56,7 @@ def tiny_model(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, ["id", "label", "text"])
-    return SentimentPipeline(max_features=100, stop_words=None).fit(df)
+    return SentimentPipeline().fit(df)
 
 
 @pytest.fixture()
@@ -222,11 +222,18 @@ def test_audit_append_runs_no_job_and_topk_one_job(spark, tmp_path):
 
 
 def test_create_predictions_table_runs_no_job(spark, tmp_path):
-    """Creating the store writes its empty file from the driver: no
-    Spark job, so no task and no Python worker."""
+    """Creating the store makes its directory from the driver: no Spark
+    job, so no task and no Python worker, and no file. Create over a
+    regular file raises."""
+    path = tmp_path / "preds"
     with job_group(spark, "test.create_predictions_table") as shape:
-        create_predictions_table(spark, str(tmp_path / "preds"))
+        create_predictions_table(spark, str(path))
     assert shape() == (0, 0)
+    assert path.is_dir() and os.listdir(path) == []
+    taken = tmp_path / "taken"
+    taken.write_text("not a store")
+    with pytest.raises(Exception, match="not a directory"):
+        create_predictions_table(spark, str(taken))
 
 
 def test_store_on_session_without_py4j_bridge_fails_at_start(tiny_model, tmp_path):
@@ -341,7 +348,7 @@ def test_store_from_sparks_own_writer_keeps_working(spark, tmp_path):
     spark.createDataFrame([(old, "from spark", NEGATIVE)], PREDICTIONS_SCHEMA).coalesce(1).write.parquet(path)
     (spark_file,) = [n for n in os.listdir(path) if n.endswith(".parquet")]
     assert pq.ParquetFile(os.path.join(path, spark_file)).schema.column(0).physical_type == "INT96"
-    create_predictions_table(spark, path)  # the store exists: no empty file added
+    create_predictions_table(spark, path)  # the store exists: nothing added
     insert_prediction(spark, "first new", POSITIVE, path)
     insert_prediction(spark, "second new", NEGATIVE, path)
 

@@ -48,8 +48,8 @@ def _utc(t: datetime) -> datetime:
 
 def _write_batches(spark, src: str, files: list, cols: list[str]) -> None:
     """One parquet directory per micro-batch under ``src``, stamped
-    oldest-first: a ``maxFilesPerTrigger=1`` replay follows
-    modification time."""
+    oldest-first: ``read_events_stream`` replays one file per trigger,
+    in modification-time order."""
     for i, rows in enumerate(files):
         path = os.path.join(src, f"f{i}")
         spark.createDataFrame(rows, cols).coalesce(1).write.parquet(path)
@@ -91,9 +91,7 @@ def stream_result(spark, tmp_path_factory):
     ]
     _write_batches(spark, src, files, cols)
 
-    stream = read_events_stream(
-        spark, src + "/*/", max_files_per_trigger=1
-    )
+    stream = read_events_stream(spark, src + "/*/")
     agg = tumbling_event_counts(stream)
     out, cp = str(base / "out"), str(base / "cp")
     run_available_now(agg, out, cp)
@@ -194,9 +192,10 @@ def test_events_stream_from_testdata_schema(spark, tmp_path):
 def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
     path = str(tmp_path / "predictions")
     create_predictions_table(spark, path)
-    # idempotent create-if-not-exists
+    # idempotent create-if-not-exists; an empty store holds no file, so
+    # it reads through the declared schema
     create_predictions_table(spark, path)
-    assert spark.read.parquet(path).count() == 0
+    assert top_k_predictions(spark, path=path).collect() == []
 
     insert_prediction(spark, "great movie", "Positive sentiment", path)
     insert_prediction(spark, "terrible queue", "Negative sentiment", path)
@@ -243,7 +242,7 @@ def dedup_result(spark, tmp_path_factory):
     ]
     _write_batches(spark, src, files, cols)
 
-    stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
+    stream = read_events_stream(spark, src + "/*/")
     out, cp = str(base / "out"), str(base / "cp")
     run_available_now(dedup_events_stream(stream), out, cp)
     return spark.read.parquet(out).collect()
@@ -295,7 +294,7 @@ def session_result(spark, tmp_path_factory):
     ]
     _write_batches(spark, src, files, cols)
 
-    stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
+    stream = read_events_stream(spark, src + "/*/")
     sess = sessionize_stream(stream)
     out, cp = str(base / "out"), str(base / "cp")
     run_available_now(sess, out, cp)
@@ -356,7 +355,7 @@ def equiv_events(spark, tmp_path_factory):
 
 def _replay(spark, src: str, query, out_dir) -> list:
     """Rows the streaming ``query`` emits over the replayed source."""
-    stream = read_events_stream(spark, src + "/*/", max_files_per_trigger=1)
+    stream = read_events_stream(spark, src + "/*/")
     out, cp = str(out_dir / "out"), str(out_dir / "cp")
     run_available_now(query(stream), out, cp)
     return spark.read.parquet(out).collect()

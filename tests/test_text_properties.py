@@ -1,4 +1,5 @@
-"""Property-based parity: Spark clean_text vs the serving-path twin.
+"""Property-based parity: Spark clean_text vs the serving-path twin,
+and vs its DuckDB twin.
 
 `predict_one` cleans driver-side with ``_clean_text_py`` (the
 reference's exact regexes, `/root/reference/src/utils.py:5-10`) while
@@ -7,9 +8,11 @@ ever disagree, online and batch predictions silently diverge for the
 same message — so the contract is fuzzed here over arbitrary unicode
 (not just the ASCII the oracle suite covers). ``derandomize=True``
 keeps the explored corpus fixed run-to-run: a green suite stays
-green, and any future regex edit that breaks unicode parity (e.g.
-dropping the ``(?U)`` flag that aligns Java's ASCII ``\\s``/``\\S``
-with CPython's unicode classes) fails deterministically.
+green, and any future edit of the cleaning patterns in
+``functions/text.py`` that breaks unicode parity (e.g. falling back
+to Java's ASCII ``\\s``/``\\S``/``\\w``) fails deterministically. The
+DuckDB oracle of p03 runs ``CLEAN_TEXT_SQL``, built from the same
+patterns; the battery below checks it too.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from hypothesis import given, settings, strategies as st
 
 from bigdata_lab4_spark.functions.text import clean_text_col
 from bigdata_lab4_spark.ml.pipeline import _clean_text_py
+from bigdata_lab4_spark.queries.projections import CLEAN_TEXT_SQL
 
 # Long-stable Unicode blocks (Latin/Greek/Cyrillic/Hebrew/Arabic/
 # Indic/Thai/CJK/Hangul/kana, combining marks, ligatures, fullwidth
@@ -74,11 +78,19 @@ def test_clean_text_spark_matches_python_twin(spark, texts):
     assert got == [_clean_text_py(t) for t in texts]
 
 
-def test_clean_text_unicode_battery(spark):
+#: Where DuckDB's ``lower()`` differs from Java's and Python's (the
+#: regexes agree): 'İ' lowers to 'i' without the combining dot, and a
+#: word-final 'Σ' to 'σ', not 'ς'.
+_DUCKDB_LOWER_DIFFERS = {"İstanbul STRASSE ẞ", "ΣΙΣΥΦΟΣ"}
+
+
+def test_clean_text_unicode_battery(spark, duck):
     """Pinned adversarial cases: NBSP inside URLs and as padding
-    (Java ASCII \\s vs CPython unicode \\s — the bug the (?U) flag
-    fixes), unicode mentions/hashtags, case-mapping oddities
-    (İ, ΣΙΣΥΦΟΣ, ẞ, ligatures), fullwidth forms, ideographic space."""
+    (Java's ASCII \\s vs CPython's unicode \\s), unicode
+    mentions/hashtags, case-mapping oddities (İ, ΣΙΣΥΦΟΣ, ẞ,
+    ligatures), fullwidth forms, ideographic space. Spark equals the
+    Python twin on every case, and ``CLEAN_TEXT_SQL`` in DuckDB equals
+    Spark on every case but the two ``lower()`` ones."""
     battery = [
         "http://x.com\xa0after",
         "  \xa0padded\xa0  ",
@@ -98,3 +110,14 @@ def test_clean_text_unicode_battery(spark):
     df = spark.createDataFrame([(t,) for t in battery], ["text"])
     got = [r[0] for r in df.select(clean_text_col("text")).collect()]
     assert got == [_clean_text_py(t) for t in battery]
+
+    rows = [(i, t) for i, t in enumerate(battery) if t not in _DUCKDB_LOWER_DIFFERS]
+    duck_got = [
+        r[0]
+        for r in duck.execute(
+            f"SELECT {CLEAN_TEXT_SQL} FROM (SELECT unnest(?) AS i, unnest(?) AS text) "
+            "ORDER BY i",
+            [[i for i, _ in rows], [t for _, t in rows]],
+        ).fetchall()
+    ]
+    assert duck_got == [got[i] for i, _ in rows]

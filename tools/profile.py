@@ -7,9 +7,11 @@ Usage:
 
 ``time`` prints one JSON line ``{"timings": {query: median_s}, "spreads":
 {query: max-min_s}, "runs": N}`` (N defaults to 5). ``plan`` executes each
-query and writes its final AQE plan to ``<out_dir>/<query>.txt``; with no
-query names it covers every registered query. Both read the tables at
-``$SPARK_GRAFT_SF_DIR`` on ``local[$SPARK_GRAFT_CPUS]``.
+query and writes its final AQE plan to ``<out_dir>/<query>.txt`` with the
+numbers of ``#<n>`` expression ids and ``plan_id=<n>`` stripped, so two
+captures compare with ``diff -r``; with no query names it covers every
+registered query. Both read the tables at ``$SPARK_GRAFT_SF_DIR`` on
+``local[$SPARK_GRAFT_CPUS]``.
 
 ``bench.py`` times its headline queries with :func:`time_queries`, and the
 runtime plan pins in ``tests/test_plans.py`` read plans with
@@ -20,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -86,7 +89,8 @@ def main(args: list[str]) -> None:
         os.makedirs(out_dir, exist_ok=True)
         for name in names:
             with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
-                f.write(final_plan(REGISTRY[name].fn(spark, DEFAULT_SF_DIR)))
+                plan = final_plan(REGISTRY[name].fn(spark, DEFAULT_SF_DIR))
+                f.write(re.sub(r"(?<=#)\d+|(?<=plan_id=)\d+", "", plan))
             print(f"captured {name}")
     spark.stop()
 
