@@ -51,10 +51,11 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     stream runs no Spark job. Each micro-batch takes one file, so a
     directory replays as a genuine multi-batch stream.
 
-    ``path`` must be a directory (or a glob of them): a single parquet
-    file, such as a testdata ``events.parquet``, builds a stream that
-    fails at its first micro-batch with ``'basePath' must be a
-    directory``.
+    ``path`` must be a directory (or a glob of them). A path that is a
+    regular file, such as a testdata ``events.parquet``, raises
+    ``ValueError`` here: one ``getFileStatus`` call, no Spark job. A
+    path that does not exist as written is handed to Spark as before: a
+    glob builds a stream, and a missing path raises Spark's own error.
 
     This reader does NOT touch session configuration (a reader
     mutating ``spark.sql.session.timeZone`` as a side effect leaks
@@ -63,6 +64,10 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     epoch-aligned windows downstream are timezone-independent for
     instant-typed ``ts`` columns anyway.
     """
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    # one getFileStatus; a path that is not found (a glob) reads as false
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).isFile(jpath):
+        raise ValueError(f"an events stream reads a directory, and {path} is a file")
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)

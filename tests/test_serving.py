@@ -16,6 +16,8 @@ import urllib.request
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 from bigdata_lab4_spark import engine, serving
 from bigdata_lab4_spark.engine import (
@@ -205,10 +207,10 @@ def test_failed_append_is_logged_counted_and_still_served(
     assert "store unavailable" in str(warnings[0].exc_info[1])
 
 
-def test_audit_append_runs_no_job_and_topk_one_job(spark, tmp_path):
+def test_audit_append_and_topk_run_no_job(spark, tmp_path):
     """The serving cost rests on this job shape: an append commits its
-    file from the driver and runs no Spark job, and a top-k read is one
-    job (no schema-inference job)."""
+    file from the driver, and a top-k reads the newest files on the
+    driver; neither runs a Spark job."""
     path = str(tmp_path / "preds")
     create_predictions_table(spark, path)
     insert_prediction(spark, "warm up", "Positive sentiment", path)
@@ -216,15 +218,15 @@ def test_audit_append_runs_no_job_and_topk_one_job(spark, tmp_path):
         insert_prediction(spark, "great movie", "Positive sentiment", path)
     assert shape() == (0, 0)
     with job_group(spark, "test.top_k_predictions") as shape:
-        rows = top_k_predictions(spark, limit=10, path=path).collect()
-    assert shape()[0] == 1
+        rows = top_k_predictions(spark, limit=10, path=path)
+    assert shape() == (0, 0)
     assert [r["message"] for r in rows] == ["great movie", "warm up"]
 
 
 def test_create_predictions_table_runs_no_job(spark, tmp_path):
     """Creating the store makes its directory from the driver: no Spark
     job, so no task and no Python worker, and no file. Create over a
-    regular file raises."""
+    regular file raises ``OSError``, chained from the FileSystem's error."""
     path = tmp_path / "preds"
     with job_group(spark, "test.create_predictions_table") as shape:
         create_predictions_table(spark, str(path))
@@ -232,8 +234,10 @@ def test_create_predictions_table_runs_no_job(spark, tmp_path):
     assert path.is_dir() and os.listdir(path) == []
     taken = tmp_path / "taken"
     taken.write_text("not a store")
-    with pytest.raises(Exception, match="not a directory"):
+    with pytest.raises(OSError, match="could not create") as info:
         create_predictions_table(spark, str(taken))
+    assert isinstance(info.value.__cause__, Py4JJavaError)
+    assert "not a directory" in str(info.value.__cause__)
 
 
 def test_store_on_session_without_py4j_bridge_fails_at_start(tiny_model, tmp_path):
@@ -335,7 +339,7 @@ def test_failed_commit_raises_and_leaves_no_file(spark, tmp_path, monkeypatch, s
         insert_prediction(spark, "lost", NEGATIVE, path)
     # neither the part file nor the temp file (or their checksums) remain
     assert sorted(os.listdir(path)) == before
-    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    rows = top_k_predictions(spark, limit=10, path=path)
     assert [r["message"] for r in rows] == ["kept"]
 
 
@@ -352,7 +356,7 @@ def test_store_from_sparks_own_writer_keeps_working(spark, tmp_path):
     insert_prediction(spark, "first new", POSITIVE, path)
     insert_prediction(spark, "second new", NEGATIVE, path)
 
-    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    rows = top_k_predictions(spark, limit=10, path=path)
     assert [r["message"] for r in rows] == ["second new", "first new", "from spark"]
     assert rows[2]["timestamp"] == old
     table = pq.read_table(path)
@@ -366,3 +370,62 @@ def test_store_from_sparks_own_writer_keeps_working(spark, tmp_path):
     # collected timestamps are naive local time; pyarrow's are UTC
     for r in rows:
         assert by_msg[r["message"]] == r["timestamp"].astimezone(datetime.timezone.utc)
+
+
+def test_topk_equals_sparks_read_on_a_mixed_store(spark, tmp_path):
+    """Top-k over a store mixing every kind of file equals Spark's own
+    read of it, sorted newest first: a multi-row file from Spark's
+    writer (INT96), an untimed ``part-<uuid>`` file, time-named files,
+    and hidden ``.tmp``, ``.crc`` and ``_SUCCESS`` files, which both
+    readers skip. The Spark rows straddle the time-named ones, so the
+    untimed files must be merged, not appended."""
+    path = str(tmp_path / "preds")
+    spark_rows = [
+        (datetime.datetime(2024, 1, 2, 3, 4, 5, 678901), "spark old", NEGATIVE),
+        (datetime.datetime(2099, 1, 1, 0, 0, 0, 1), "spark future", POSITIVE),
+        (datetime.datetime(2024, 6, 1, 12, 0, 0, 250000), None, NEGATIVE),
+    ]
+    spark.createDataFrame(spark_rows, PREDICTIONS_SCHEMA).coalesce(1).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    untimed = {"timestamp": datetime.datetime(2025, 3, 4, 5, 6, 7, 89, tzinfo=datetime.timezone.utc),
+               "message": "untimed", "prediction": POSITIVE}
+    pq.write_table(pa.Table.from_pylist([untimed], schema=engine._ARROW_SCHEMA),
+                   os.path.join(path, f"part-{'0123456789abcdef' * 2}.zstd.parquet"), compression="zstd")
+    (tmp_path / "preds" / ".0-abc.tmp").write_bytes(b"not parquet")
+    for i in range(4):
+        insert_prediction(spark, f"timed {i}", POSITIVE if i % 2 else NEGATIVE, path)
+    total = len(spark_rows) + 1 + 4
+    oracle = spark.read.schema(PREDICTIONS_SCHEMA).parquet(path).orderBy(F.desc("timestamp"))
+    for limit in (0, 1, 3, total + 5):
+        want = oracle.limit(limit).collect()
+        assert top_k_predictions(spark, path=path, limit=limit) == want, limit
+    assert len(want) == total and want[0]["message"] == "spark future"
+
+
+def test_topk_reads_only_the_newest_limit_files(spark, tmp_path, monkeypatch):
+    """Top-k is O(limit) in files: one listing, and one open per row it
+    returns, however many appends the store holds."""
+    path = str(tmp_path / "preds")
+    create_predictions_table(spark, path)
+    for i in range(50):
+        insert_prediction(spark, f"m{i}", POSITIVE, path)
+    calls = collections.Counter()
+    store_fs = engine._store_fs
+
+    class CountingFs:
+        def __init__(self, fs) -> None:
+            self.fs = fs
+
+        def __getattr__(self, name):
+            calls[name] += 1
+            return getattr(self.fs, name)
+
+    def counting(spark, path):
+        fs, jpath = store_fs(spark, path)
+        return CountingFs(fs), jpath
+
+    monkeypatch.setattr(engine, "_store_fs", counting)
+    rows = top_k_predictions(spark, limit=3, path=path)
+    assert [r["message"] for r in rows] == ["m49", "m48", "m47"]
+    assert (calls["listStatus"], calls["open"]) == (1, 3)

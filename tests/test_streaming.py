@@ -153,19 +153,20 @@ def test_events_stream_from_testdata_schema(spark, tmp_path):
     """The sf0.001 events table mounts as a stream with the batch
     catalog's schema, building the stream runs no Spark job, and T1,
     T2, T3 and T7 run on it. A file source streams a directory, so the
-    runs replay a directory holding the table's file, as one
-    micro-batch: T1 and T2 emit exactly the batch rows whose window
-    ended by the watermark, and T7 the sessions that T3 closes."""
+    stream reads a directory holding the table's file, and the runs
+    replay it as one micro-batch: T1 and T2 emit exactly the batch rows
+    whose window ended by the watermark, and T7 the sessions that T3
+    closes."""
     path = os.path.join(SF_DIR_SMOKE, "events.parquet")
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(path, src / "events.parquet")
     with job_group(spark, "test.read_events_stream") as build:
-        stream = read_events_stream(spark, path)
+        stream = read_events_stream(spark, str(src))
     assert build()[0] == 0
     assert stream.isStreaming
     batch = load_table(spark, SF_DIR_SMOKE, "events")
     assert stream.schema == batch.schema
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy(path, src / "events.parquet")
     wm = batch.selectExpr(f"unix_seconds(max(ts)) - {10 * 60}").first()[0]
 
     def run(name, query):
@@ -186,20 +187,32 @@ def test_events_stream_from_testdata_schema(spark, tmp_path):
     assert sessions and t7 == sessions
 
 
+def test_events_stream_over_a_file_fails_when_built(spark, tmp_path):
+    """A file source streams a directory: a path that is a regular file
+    raises when the stream is built, with no Spark job, not at its first
+    micro-batch. A glob still builds a stream, as it did before."""
+    path = os.path.join(SF_DIR_SMOKE, "events.parquet")
+    assert os.path.isfile(path)
+    with job_group(spark, "test.read_events_stream_file") as build:
+        with pytest.raises(ValueError, match="is a file"):
+            read_events_stream(spark, path)
+    assert build() == (0, 0)
+    assert read_events_stream(spark, str(tmp_path / "*" / "")).isStreaming
+
+
 # -- predictions write path (S6/S7) ------------------------------------
 
 
 def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
     path = str(tmp_path / "predictions")
     create_predictions_table(spark, path)
-    # idempotent create-if-not-exists; an empty store holds no file, so
-    # it reads through the declared schema
+    # idempotent create-if-not-exists; an empty store holds no file
     create_predictions_table(spark, path)
-    assert top_k_predictions(spark, path=path).collect() == []
+    assert top_k_predictions(spark, path=path) == []
 
     insert_prediction(spark, "great movie", "Positive sentiment", path)
     insert_prediction(spark, "terrible queue", "Negative sentiment", path)
-    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    rows = top_k_predictions(spark, limit=10, path=path)
     assert len(rows) == 2
     # newest first, server-side timestamps present
     assert rows[0]["timestamp"] >= rows[1]["timestamp"]
@@ -207,7 +220,7 @@ def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
         "Positive sentiment",
         "Negative sentiment",
     }
-    one = top_k_predictions(spark, limit=1, path=path).collect()
+    one = top_k_predictions(spark, limit=1, path=path)
     assert len(one) == 1 and one[0]["message"] == rows[0]["message"]
     with pytest.raises(ValueError):
         top_k_predictions(spark, limit=-1, path=path)
