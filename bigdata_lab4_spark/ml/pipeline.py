@@ -15,15 +15,20 @@ This is the reference's whole job, re-expressed Spark-first:
   modelType="multinomial")``, mathematically the same estimator
   (per-class feature sums + Laplace ``alpha``; Spark always fits
   class priors from data, which is sklearn's ``fit_prior=True``);
-* persistence: Spark ML writers (parquet + JSON metadata) plus an
-  **immutable per-run ``run.json``** carrying params/metrics/paths —
-  replacing the reference's mutable, race-prone ``config.ini``
-  rewritten by every stage (`src/train.py:63-71`, SURVEY §4.3);
+* persistence: the fitted parameters as JSON — the TF-IDF vocabulary,
+  idf and stop list in ``tfidf.json``, NB ``pi``/``theta`` in
+  ``nb.json`` — plus the Spark ML writer's ``nb/`` for the batch path,
+  and an **immutable per-run ``run.json``** carrying
+  params/metrics/paths — replacing the reference's mutable, race-prone
+  ``config.ini`` rewritten by every stage (`src/train.py:63-71`,
+  SURVEY §4.3). :meth:`SentimentModel.load` reads the JSON files only:
+  no Spark job and no py4j call, so a served model is ready in
+  milliseconds;
 * serving: :meth:`SentimentModel.predict_one` mirrors
   ``Predictor.predict`` (`src/predict.py:73-92`) including the
   empty-message guard and the Positive/Negative/Unknown decode — but
   scores driver-local from the fitted parameters (vocab, idf, NB
-  log-odds), no Spark job per request.
+  log-odds), no Spark job per request and no JVM model loaded.
 
 Scale notes: training is one aggregation (TF-IDF fit) plus Spark
 ML's distributed NB sufficient-stats pass; scoring is a pure-JVM
@@ -83,19 +88,41 @@ def _clean_text_py(text: str) -> str:
     return text.translate(_PUNCT_TABLE).lower().strip()
 
 
+#: File names inside a saved model directory.
+TFIDF_FILE, NB_FILE, NB_DIR = "tfidf.json", "nb.json", "nb"
+
+
 class SentimentModel:
-    """Fitted sentiment classifier: TF-IDF model + NB model.
+    """Fitted sentiment classifier: TF-IDF model + NB parameters.
 
     Batch path (:meth:`transform`) is pure JVM; serving path
     (:meth:`predict_one`) is driver-local numpy-free scoring from the
-    same fitted parameters, asserted equal to the batch path in
+    same fitted parameters (NB log-priors ``pi`` and log-likelihoods
+    ``theta`` as lists), asserted equal to the batch path in
     ``tests/test_ml_pipeline.py``.
+
+    ``nb`` is the fitted ``NaiveBayesModel``, or the directory its
+    Spark ML writer saved it to; a directory is loaded on the first
+    batch call, so a loaded model that only serves never loads it.
     """
 
-    def __init__(self, tfidf_model: SklearnTfidfModel, nb_model: NaiveBayesModel) -> None:
+    def __init__(
+        self,
+        tfidf_model: SklearnTfidfModel,
+        pi: list[float],
+        theta: list[list[float]],
+        nb: NaiveBayesModel | str,
+    ) -> None:
         self.tfidf_model = tfidf_model
-        self.nb_model = nb_model
-        self._local = None  # lazy driver-local scoring params
+        self.pi = pi
+        self.theta = theta
+        self._nb = nb
+
+    @property
+    def nb_model(self) -> NaiveBayesModel:
+        if isinstance(self._nb, str):
+            self._nb = NaiveBayesModel.load(self._nb)
+        return self._nb
 
     # -- batch scoring (U4) --------------------------------------------
     def transform(self, df: DataFrame) -> DataFrame:
@@ -129,46 +156,33 @@ class SentimentModel:
         return {"accuracy": float(row["accuracy"]), "n": int(row["n"])}
 
     # -- online scoring (U5) -------------------------------------------
-    def _local_params(self):
-        """Materialize (once) the driver-side scoring parameters:
-        vocab index, idf weights, stop set, NB log-priors ``pi`` and
-        log-likelihood matrix ``theta``.  Size is O(classes ×
-        max_features) — a few hundred KB, the standard broadcast-model
-        serving pattern."""
-        if self._local is None:
-            self._local = {
-                "vocab": self.tfidf_model.vocabulary_,
-                "idf": self.tfidf_model.idf_,
-                "stop": self.tfidf_model.stop_words_,
-                "pi": list(self.nb_model.pi.toArray()),
-                "theta": self.nb_model.theta.toArray().tolist(),
-            }
-        return self._local
-
     def predict_one(self, message: str) -> str:
         """Single-message serving — `/root/reference/src/predict.py:73-92`
-        semantics: empty-guard, clean, vectorize, NB argmax, decode."""
+        semantics: empty-guard, clean, vectorize, NB argmax, decode.
+        Scores from the driver-side parameters, O(classes ×
+        max_features) floats — the standard broadcast-model serving
+        pattern."""
         if not message:
             raise ValueError(
                 "Message is not provided. Please provide a message to analyze."
             )
-        p = self._local_params()
+        tfidf = self.tfidf_model
         counts: dict[int, int] = {}
         for tok in _TOKEN_RE.findall(_clean_text_py(message).lower()):
-            if tok in p["stop"]:
+            if tok in tfidf.stop_words_:
                 continue
-            idx = p["vocab"].get(tok)
+            idx = tfidf.vocabulary_.get(tok)
             if idx is not None:
                 counts[idx] = counts.get(idx, 0) + 1
         # tf-idf + L2 norm, sparse
-        x = {i: c * p["idf"][i] for i, c in counts.items()}
+        x = {i: c * tfidf.idf_[i] for i, c in counts.items()}
         norm = math.sqrt(sum(v * v for v in x.values()))
         if norm > 0:
             x = {i: v / norm for i, v in x.items()}
         # multinomial NB: argmax_c pi[c] + sum_f x_f * theta[c][f]
         scores = [
-            p["pi"][c] + sum(v * p["theta"][c][i] for i, v in x.items())
-            for c in range(len(p["pi"]))
+            self.pi[c] + sum(v * self.theta[c][i] for i, v in x.items())
+            for c in range(len(self.pi))
         ]
         pred = max(range(len(scores)), key=lambda c: (scores[c], -c))
         if pred == 1:
@@ -179,13 +193,16 @@ class SentimentModel:
 
     # -- persistence (S4 + S5 run metadata) ----------------------------
     def save(self, path: str, metrics: dict | None = None) -> None:
-        """Write ``tfidf/`` + ``nb/`` (Spark ML writers) and an
-        immutable ``run.json`` (params, metrics, artifact paths) —
-        the append-only replacement for the reference's shared
-        ``config.ini`` (`src/train.py:63-71`)."""
+        """Write ``tfidf.json`` and ``nb.json`` (the fitted parameters),
+        ``nb/`` (Spark ML writer, for the batch path) and an immutable
+        ``run.json`` (params, metrics, artifact paths) — the append-only
+        replacement for the reference's shared ``config.ini``
+        (`src/train.py:63-71`)."""
         os.makedirs(path, exist_ok=True)
-        self.tfidf_model.save(os.path.join(path, "tfidf"))
-        self.nb_model.write().overwrite().save(os.path.join(path, "nb"))
+        self.tfidf_model.save(os.path.join(path, TFIDF_FILE))
+        with open(os.path.join(path, NB_FILE), "w") as f:
+            json.dump({"pi": self.pi, "theta": self.theta}, f)
+        self.nb_model.write().overwrite().save(os.path.join(path, NB_DIR))
         run = {
             "model": "NAIVE_BAYES",
             "params": {
@@ -194,7 +211,7 @@ class SentimentModel:
                 "max_features": len(self.tfidf_model.idf_),
             },
             "metrics": metrics or {},
-            "paths": {"tfidf": "tfidf", "nb": "nb"},
+            "paths": {"tfidf": TFIDF_FILE, "nb": NB_DIR, "nb_params": NB_FILE},
             "saved_at": datetime.now(timezone.utc).isoformat(),
         }
         with open(os.path.join(path, "run.json"), "w") as f:
@@ -202,12 +219,20 @@ class SentimentModel:
 
     @classmethod
     def load(cls, path: str) -> "SentimentModel":
-        with open(os.path.join(path, "run.json")) as f:
-            run = json.load(f)
-        return cls(
-            SklearnTfidfModel.load(os.path.join(path, run["paths"]["tfidf"])),
-            NaiveBayesModel.load(os.path.join(path, run["paths"]["nb"])),
-        )
+        """Read the JSON parameter files :meth:`save` wrote: no Spark job
+        and no py4j call. ``nb/`` is loaded only by the batch path. A
+        directory without them (the older Spark-ML-only layout) raises
+        ``FileNotFoundError`` naming the missing file."""
+        try:
+            tfidf = SklearnTfidfModel.load(os.path.join(path, TFIDF_FILE))
+            with open(os.path.join(path, NB_FILE)) as f:
+                nb = json.load(f)
+        except FileNotFoundError as e:
+            raise FileNotFoundError(
+                f"model file {e.filename} is missing: a model saved by Spark ML "
+                "writers alone (a tfidf/ directory) must be trained and saved again"
+            ) from e
+        return cls(tfidf, nb["pi"], nb["theta"], os.path.join(path, NB_DIR))
 
 
 class SentimentPipeline:
@@ -243,7 +268,9 @@ class SentimentPipeline:
             featuresCol="features",
             labelCol="__label_d",
         ).fit(train_feats)
-        return SentimentModel(tfidf, nb)
+        return SentimentModel(
+            tfidf, nb.pi.toArray().tolist(), nb.theta.toArray().tolist(), nb
+        )
 
 
 def train_test_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:

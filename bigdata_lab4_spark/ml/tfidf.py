@@ -28,7 +28,10 @@ fitted transform is a pure-JVM ``PipelineModel`` of
 ``RegexTokenizer → StopWordsRemover → CountVectorizerModel →
 ElementwiseProduct(idf) → Normalizer(p=2)`` — no Python in the
 transform path, so scoring 100 TB of text never leaves codegen'd
-JVM operators.
+JVM operators. The model itself is its fitted parameters (vocabulary,
+idf, stop list) as Python values, saved as one JSON file: the
+``PipelineModel`` is built from them on the first ``transform``, so
+loading a model runs no Spark job and makes no py4j call.
 
 Stop words are always English, as in the reference. Known semantic
 substitution: we use Spark's built-in english stop-word list
@@ -40,9 +43,10 @@ BASELINE.md), not bitwise.
 
 from __future__ import annotations
 
+import json
 import math
 
-from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml import PipelineModel
 from pyspark.ml.feature import (
     CountVectorizerModel,
     ElementwiseProduct,
@@ -59,7 +63,7 @@ from pyspark.sql import functions as F
 TOKEN_PATTERN = r"(?U)\b\w\w+\b"
 
 
-def _tokenizer_stages(input_col: str) -> list:
+def _tokenizer_stages(input_col: str, stop_words: list[str]) -> list:
     """Tokenize + stop-filter stages shared by fit and transform; the
     tokens land in ``__tokens``."""
     return [
@@ -70,61 +74,93 @@ def _tokenizer_stages(input_col: str) -> list:
             gaps=False,  # pattern matches tokens, not separators
             toLowercase=True,
         ),
-        # StopWordsRemover's default: Spark's English list.
-        StopWordsRemover(inputCol="__tokens_raw", outputCol="__tokens"),
+        StopWordsRemover(
+            inputCol="__tokens_raw", outputCol="__tokens", stopWords=stop_words
+        ),
     ]
 
 
 class SklearnTfidfModel:
     """Fitted TF-IDF transformer (the sklearn ``TfidfVectorizer``
-    after ``fit``): a thin wrapper over a pure-JVM ``PipelineModel``.
+    after ``fit``), held as its fitted parameters.
 
-    ``vocabulary_`` / ``idf_`` mirror the sklearn attribute names.
-    ``stop_words_`` is the list removed before counting: sklearn's
-    ``get_stop_words()``, not its ``stop_words_`` (the terms the
-    ``max_features`` cut dropped).
+    ``vocabulary_`` (term → index, in index order) and ``idf_`` mirror
+    the sklearn attribute names. ``stop_words_`` is the list removed
+    before counting: sklearn's ``get_stop_words()``, not its
+    ``stop_words_`` (the terms the ``max_features`` cut dropped).
+
+    The parameters are plain Python values, saved and loaded as one
+    JSON file, so building or loading a model touches no JVM. The
+    pure-JVM ``PipelineModel`` that :meth:`transform` runs is built
+    from them on the first ``transform``.
     """
 
-    def __init__(self, pipeline_model: PipelineModel) -> None:
-        self._pm = pipeline_model
+    def __init__(
+        self,
+        vocabulary: list[str],
+        idf: list[float],
+        stop_words: list[str],
+        input_col: str,
+        output_col: str,
+    ) -> None:
+        self.vocabulary_ = {t: i for i, t in enumerate(vocabulary)}
+        self.idf_ = list(idf)
+        self.stop_words_ = frozenset(stop_words)
+        self.input_col = input_col
+        self.output_col = output_col
+        self._pm: PipelineModel | None = None
 
-    # -- sklearn-style fitted attributes --------------------------------
-    @property
-    def vocabulary_(self) -> dict[str, int]:
-        cvm = next(
-            s for s in self._pm.stages if isinstance(s, CountVectorizerModel)
-        )
-        return {t: i for i, t in enumerate(cvm.vocabulary)}
-
-    @property
-    def idf_(self) -> list[float]:
-        ewp = next(
-            s for s in self._pm.stages if isinstance(s, ElementwiseProduct)
-        )
-        return list(ewp.getScalingVec().toArray())
-
-    @property
-    def stop_words_(self) -> frozenset[str]:
-        """Words removed before counting."""
-        sw = next(s for s in self._pm.stages if isinstance(s, StopWordsRemover))
-        return frozenset(sw.getStopWords())
+    def _pipeline_model(self) -> PipelineModel:
+        """``RegexTokenizer → StopWordsRemover → CountVectorizerModel →
+        ElementwiseProduct(idf) → Normalizer(p=2)``, built once."""
+        if self._pm is None:
+            self._pm = PipelineModel(
+                _tokenizer_stages(self.input_col, sorted(self.stop_words_))
+                + [
+                    CountVectorizerModel.from_vocabulary(
+                        list(self.vocabulary_), inputCol="__tokens", outputCol="__counts"
+                    ),
+                    ElementwiseProduct(
+                        scalingVec=Vectors.dense(self.idf_),
+                        inputCol="__counts",
+                        outputCol="__tfidf_raw",
+                    ),
+                    Normalizer(inputCol="__tfidf_raw", outputCol=self.output_col, p=2.0),
+                ]
+            )
+        return self._pm
 
     def transform(self, df: DataFrame) -> DataFrame:
         """L2-normalized TF-IDF ``SparseVector`` column; intermediate
         token/count columns are dropped."""
-        out = self._pm.transform(df)
+        out = self._pipeline_model().transform(df)
         return out.drop("__tokens_raw", "__tokens", "__counts", "__tfidf_raw")
 
     # -- persistence (S4) ----------------------------------------------
     def save(self, path: str) -> None:
-        """Parquet+JSON ML persistence — the durable, cluster-readable
-        replacement for the reference's ``pickle.dump(vectorizer)``
-        (`/root/reference/src/preprocess.py:70-71`)."""
-        self._pm.write().overwrite().save(path)
+        """Write the fitted parameters as one JSON file at ``path`` — the
+        durable replacement for the reference's
+        ``pickle.dump(vectorizer)`` (the reference's `src/preprocess.py:70-71`).
+        Floats are written as their shortest round-trip repr, so
+        :meth:`load` reads back exactly the values saved."""
+        with open(path, "w") as f:
+            json.dump(
+                {
+                    "input_col": self.input_col,
+                    "output_col": self.output_col,
+                    "vocabulary": list(self.vocabulary_),
+                    "idf": self.idf_,
+                    "stop_words": sorted(self.stop_words_),
+                },
+                f,
+            )
 
     @classmethod
     def load(cls, path: str) -> "SklearnTfidfModel":
-        return cls(PipelineModel.load(path))
+        """Read a model :meth:`save` wrote; no Spark job, no py4j call."""
+        with open(path) as f:
+            p = json.load(f)
+        return cls(p["vocabulary"], p["idf"], p["stop_words"], p["input_col"], p["output_col"])
 
 
 class SklearnTfidf:
@@ -160,8 +196,9 @@ class SklearnTfidf:
         self.max_features = max_features
 
     def fit(self, df: DataFrame) -> SklearnTfidfModel:
-        tok_stages = _tokenizer_stages(self.input_col)
-        tokens = Pipeline(stages=tok_stages).fit(df).transform(df)
+        # StopWordsRemover's default list: Spark's English one.
+        stop_words = StopWordsRemover.loadDefaultStopWords("english")
+        tokens = PipelineModel(_tokenizer_stages(self.input_col, stop_words)).transform(df)
 
         n_docs = tokens.count()
         if n_docs == 0:
@@ -201,20 +238,4 @@ class SklearnTfidf:
             math.log((1.0 + n_docs) / (1.0 + vocab_df[t])) + 1.0 for t in vocab
         ]
 
-        stages = list(tok_stages)
-        stages.append(
-            CountVectorizerModel.from_vocabulary(
-                vocab, inputCol="__tokens", outputCol="__counts"
-            )
-        )
-        stages.append(
-            ElementwiseProduct(
-                scalingVec=Vectors.dense(idf),
-                inputCol="__counts",
-                outputCol="__tfidf_raw",
-            )
-        )
-        stages.append(
-            Normalizer(inputCol="__tfidf_raw", outputCol=self.output_col, p=2.0)
-        )
-        return SklearnTfidfModel(Pipeline(stages=stages).fit(df))
+        return SklearnTfidfModel(vocab, idf, stop_words, self.input_col, self.output_col)

@@ -15,11 +15,14 @@ SURVEY §7.4).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import random
+import shutil
 
 import pytest
+from pyspark.ml.classification import NaiveBayesModel
 
 from bigdata_lab4_spark.ml import SentimentModel, SentimentPipeline
 from bigdata_lab4_spark.ml.pipeline import (
@@ -99,6 +102,79 @@ def test_save_load_roundtrip_and_run_metadata(fitted, tmp_path):
     assert loaded.evaluate(test)["accuracy"] == pytest.approx(
         metrics["accuracy"]
     )
+
+
+@contextlib.contextmanager
+def _py4j_calls(spark):
+    """Yield a list that collects every py4j command the body sends."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        calls.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command
+
+
+def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
+    """Loading runs no Spark job and sends no py4j command, and gives
+    back exactly the fitted parameters; ``nb.json`` equals the Spark ML
+    writer's ``nb/``, which only the batch path loads."""
+    model, _ = fitted
+    path = str(tmp_path / "sentiment")
+    model.save(path)
+    with job_group(spark, "test.model_load") as shape, _py4j_calls(spark) as calls:
+        loaded = SentimentModel.load(path)
+    assert shape() == (0, 0) and calls == []
+
+    a, b = model.tfidf_model, loaded.tfidf_model
+    assert list(b.vocabulary_.items()) == list(a.vocabulary_.items())
+    assert b.idf_ == a.idf_ and b.stop_words_ == a.stop_words_
+    assert (loaded.pi, loaded.theta) == (model.pi, model.theta)
+    nb = NaiveBayesModel.load(os.path.join(path, "nb"))
+    assert nb.pi.toArray().tolist() == loaded.pi
+    assert nb.theta.toArray().tolist() == loaded.theta
+    # the counter sees py4j traffic: the batch path's first use loads nb/
+    with _py4j_calls(spark) as calls:
+        loaded.nb_model
+    assert calls
+
+
+def test_loaded_predict_one_matches_batch_path(fitted, spark, tmp_path):
+    """A loaded model scores the golden fixtures as the fitted model's
+    batch path does."""
+    model, _ = fitted
+    path = str(tmp_path / "sentiment")
+    model.save(path)
+    loaded = SentimentModel.load(path)
+    with open(os.path.join(FIXTURES, "golden_0.json")) as f:
+        texts = list(json.load(f)["X"][0].values())
+    texts += ["glad1 glad2 stuff0", "grim7 grim8 stuff3", "glad0", "unseen words only"]
+    batch = model.transform(spark.createDataFrame([(t,) for t in texts], ["text"])).collect()
+    assert [loaded.predict_one(r["text"]) for r in batch] == [r["sentiment"] for r in batch]
+
+
+def test_load_of_spark_ml_only_layout_names_the_missing_file(fitted, tmp_path):
+    """A directory saved by Spark ML writers alone (a ``tfidf/``
+    PipelineModel directory, no parameter files) is refused, never
+    loaded through Spark."""
+    model, _ = fitted
+    path = tmp_path / "old"
+    model.save(str(path))
+    os.remove(path / "tfidf.json")
+    os.remove(path / "nb.json")
+    model.tfidf_model._pipeline_model().write().save(str(path / "tfidf"))
+    with pytest.raises(FileNotFoundError, match="tfidf.json"):
+        SentimentModel.load(str(path))
+    shutil.rmtree(path / "tfidf")
+    model.tfidf_model.save(str(path / "tfidf.json"))
+    with pytest.raises(FileNotFoundError, match="nb.json"):
+        SentimentModel.load(str(path))
 
 
 def test_predict_one_matches_batch_path(fitted, spark):

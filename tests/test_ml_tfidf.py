@@ -6,6 +6,7 @@ order, L2 row norm (reference config:
 
 from __future__ import annotations
 
+import json
 import math
 
 import pytest
@@ -98,6 +99,22 @@ def test_save_load_roundtrip(corpus, tmp_path):
     b = loaded.transform(corpus).collect()
     for ra, rb in zip(a, b):
         assert ra["features"] == rb["features"]
+
+
+def test_saved_model_is_its_parameters(spark, corpus, tmp_path):
+    """The model saves as one JSON file of its fitted parameters; loading
+    it runs no Spark job, and the PipelineModel is built on the first
+    transform."""
+    model = _fit(corpus)
+    path = tmp_path / "tfidf.json"
+    model.save(str(path))
+    assert json.loads(path.read_text())["vocabulary"] == ["apple", "banana", "cherry", "durian"]
+    with job_group(spark, "test.tfidf_load") as shape:
+        loaded = SklearnTfidfModel.load(str(path))
+    assert shape() == (0, 0) and loaded._pm is None
+    assert list(loaded.vocabulary_.items()) == list(model.vocabulary_.items())
+    assert loaded.idf_ == model.idf_ and loaded.stop_words_ == model.stop_words_
+    assert (loaded.input_col, loaded.output_col) == ("text", "features")
 
 
 def test_empty_corpus_raises(spark):

@@ -67,6 +67,7 @@ def served(spark, tiny_model, tmp_path):
     server, _ = api.start_background()
     yield server.server_address[1]
     server.shutdown()
+    server.server_close()
 
 
 def test_predict_roundtrip_and_audit_trail(served, spark):
@@ -122,6 +123,7 @@ def test_no_store_mode(spark, tiny_model):
         assert code == 200 and out == {"sentiment": POSITIVE}
     finally:
         server.shutdown()
+        server.server_close()
 
 
 def test_invalid_limit_422_payloads_distinguish_type_and_range(served):
@@ -183,6 +185,32 @@ def test_concurrent_predicts_store_every_acknowledged_row_once(spark, tiny_model
     )
 
 
+def test_requests_run_on_the_pool_until_close(spark, tiny_model, tmp_path, monkeypatch):
+    """Sequential requests reuse the pool's threads, which keep their
+    py4j connection, rather than a new thread each; ``server_close()``
+    ends them."""
+    api = SentimentAPI(spark, tiny_model, predictions_path=str(tmp_path / "preds"))
+    ran_on, predict = [], api.predict
+
+    def recording(message):
+        ran_on.append(threading.current_thread())
+        return predict(message)
+
+    monkeypatch.setattr(api, "predict", recording)
+    server, _ = api.start_background()
+    try:
+        for i in range(20):
+            code, _ = _call(server.server_address[1], "POST", "/predict/", {"message": f"great {i}"})
+            assert code == 200
+    finally:
+        server.shutdown()
+        server.server_close()
+    threads = set(ran_on)
+    assert len(ran_on) == 20 and len(threads) <= server.pool._max_workers
+    assert all(t.name.startswith("sentiment-api") for t in threads)
+    assert not any(t.is_alive() for t in threads)
+
+
 def test_failed_append_is_logged_counted_and_still_served(
     spark, tiny_model, tmp_path, monkeypatch, caplog
 ):
@@ -199,6 +227,7 @@ def test_failed_append_is_logged_counted_and_still_served(
             )
     finally:
         server.shutdown()
+        server.server_close()
     assert code == 200 and out == {"sentiment": POSITIVE}
     assert api.failed_appends == 1
     warnings = [r for r in caplog.records if r.name == serving.__name__]
