@@ -28,12 +28,12 @@ max_features) floats) — no Spark job per request, so request latency
 is microseconds of Python, not a cluster round-trip. Only the audit
 trail touches storage: the per-request parquet append mirrors the
 reference's per-request ClickHouse insert. Each append is one parquet
-file that the driver encodes and commits through the store's Hadoop
-FileSystem before the response (11–16 ms on a 4-core host), named by
-its timestamp; ``/predictions/`` lists the store once and reads only
-the newest ``limit`` of those files on the driver. The store is
-created once, when the API starts, so ``/predictions/`` on a fresh
-store is an empty list. The serving path runs no Spark job. A failed append is
+file, named by its timestamp, that the process encodes and commits
+through ``pyarrow.fs`` before the response (a median of ~0.6 ms on a
+4-core host); ``/predictions/`` lists the store once and reads only the
+newest ``limit`` of those files. No route runs a Spark job or makes a
+py4j call. The store is created once, when the API starts, so
+``/predictions/`` on a fresh store is an empty list. A failed append is
 logged and counted (``failed_appends``), and the prediction is still
 served; every 500 is logged with its traceback. A high-QPS deployment
 replaces the per-request append with the micro-batching streaming sink
@@ -41,14 +41,15 @@ replaces the per-request append with the micro-batching streaming sink
 
 Threads: each request runs on one long-lived ``ThreadPoolExecutor`` of
 default size, not on a new thread of its own as in
-``ThreadingHTTPServer``. PySpark pins one py4j gateway connection, and
-its JVM thread, to each Python thread; a pooled thread keeps its
-connection from request to request, where a new thread pays for a new
-one on its first py4j call (a trivial call takes ~0.07 ms on a bound
-thread, 1.1–2.5 ms as a new thread's first, on a 4-core host). The
-pool bounds the requests in flight: a client that holds its connection
-open without sending holds a pool thread. ``server_close()`` shuts the
-pool down.
+``ThreadingHTTPServer``, which saves a thread start per request. In the
+serve benchmark (``perfbench/run.py --workload serve --seconds 5``, 4
+cores, interleaved pairs), a plain ``ThreadingHTTPServer`` made
+``wall_s`` worse in 5 of 6 pairs (seeds 911–916, median 0.0130 →
+0.0153 s) and in 8 of 10 on a rerun (seeds 911–920, 0.0176 → 0.0185 s,
+a gap inside the run-to-run spread), and served fewer requests (8,405
+against 8,730 over those ten runs). The pool bounds the
+requests in flight: a client that holds its connection open without
+sending holds a pool thread. ``server_close()`` shuts the pool down.
 """
 
 from __future__ import annotations
@@ -97,8 +98,10 @@ class SentimentAPI:
     the reference behaves the same when ClickHouse is unreachable
     (`src/app.py:62-65`: "Continuing without database support").
     With a store, the table is created here, once, as the reference
-    creates its table at start-up; a session without a py4j bridge
-    (Spark Connect) raises ``TypeError`` here.
+    creates its table at start-up; a path that cannot be a store (a
+    regular file, or a scheme ``pyarrow.fs`` cannot resolve, such as
+    ``s3a://``) raises ``OSError`` here. ``spark`` is kept on the
+    instance for callers that read it; no route uses it.
 
     ``failed_appends`` counts the audit appends that raised.
     """
@@ -115,7 +118,7 @@ class SentimentAPI:
         self.failed_appends = 0
         self._count_lock = threading.Lock()
         if predictions_path is not None:
-            engine.create_predictions_table(spark, predictions_path)
+            engine.create_predictions_table(predictions_path)
 
     # -- route bodies (transport-free, unit-testable) ------------------
 
@@ -126,7 +129,7 @@ class SentimentAPI:
             # insert (`src/app.py:74-79`): a store failure must not
             # fail the prediction response, but it is logged and counted
             try:
-                insert_prediction(self.spark, message, result, self.predictions_path)
+                insert_prediction(message, result, self.predictions_path)
             except Exception:
                 with self._count_lock:
                     self.failed_appends += 1
@@ -140,7 +143,7 @@ class SentimentAPI:
     def predictions(self, limit: int = 10) -> list[dict]:
         if self.predictions_path is None:
             raise LookupError("predictions store not configured")
-        rows = top_k_predictions(self.spark, limit=limit, path=self.predictions_path)
+        rows = top_k_predictions(limit=limit, path=self.predictions_path)
         return [
             {
                 "timestamp": r["timestamp"].isoformat(),

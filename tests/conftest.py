@@ -67,3 +67,20 @@ def job_group(spark, name: str):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Yield a list that collects every py4j command the body sends."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        calls.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command

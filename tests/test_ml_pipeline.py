@@ -15,7 +15,6 @@ SURVEY §7.4).
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import random
@@ -31,7 +30,7 @@ from bigdata_lab4_spark.ml.pipeline import (
     load_tweets_csv,
     train_test_split,
 )
-from tests.conftest import job_group
+from tests.conftest import job_group, py4j_calls
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -104,23 +103,6 @@ def test_save_load_roundtrip_and_run_metadata(fitted, tmp_path):
     )
 
 
-@contextlib.contextmanager
-def _py4j_calls(spark):
-    """Yield a list that collects every py4j command the body sends."""
-    client = spark.sparkContext._gateway._gateway_client
-    send, calls = client.send_command, []
-
-    def counting(command, *args, **kwargs):
-        calls.append(command)
-        return send(command, *args, **kwargs)
-
-    client.send_command = counting
-    try:
-        yield calls
-    finally:
-        del client.send_command
-
-
 def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
     """Loading runs no Spark job and sends no py4j command, and gives
     back exactly the fitted parameters; ``nb.json`` equals the Spark ML
@@ -128,7 +110,7 @@ def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
     model, _ = fitted
     path = str(tmp_path / "sentiment")
     model.save(path)
-    with job_group(spark, "test.model_load") as shape, _py4j_calls(spark) as calls:
+    with job_group(spark, "test.model_load") as shape, py4j_calls(spark) as calls:
         loaded = SentimentModel.load(path)
     assert shape() == (0, 0) and calls == []
 
@@ -140,7 +122,7 @@ def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
     assert nb.pi.toArray().tolist() == loaded.pi
     assert nb.theta.toArray().tolist() == loaded.theta
     # the counter sees py4j traffic: the batch path's first use loads nb/
-    with _py4j_calls(spark) as calls:
+    with py4j_calls(spark) as calls:
         loaded.nb_model
     assert calls
 

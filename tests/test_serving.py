@@ -16,7 +16,6 @@ import urllib.request
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from bigdata_lab4_spark import engine, serving
@@ -32,7 +31,7 @@ from bigdata_lab4_spark.ml.pipeline import (
     SentimentPipeline,
 )
 from bigdata_lab4_spark.serving import SentimentAPI
-from tests.conftest import job_group
+from tests.conftest import job_group, py4j_calls
 
 
 def _call(port: int, method: str, path: str, body: dict | None = None):
@@ -186,9 +185,8 @@ def test_concurrent_predicts_store_every_acknowledged_row_once(spark, tiny_model
 
 
 def test_requests_run_on_the_pool_until_close(spark, tiny_model, tmp_path, monkeypatch):
-    """Sequential requests reuse the pool's threads, which keep their
-    py4j connection, rather than a new thread each; ``server_close()``
-    ends them."""
+    """Sequential requests reuse the pool's threads rather than start a
+    new thread each; ``server_close()`` ends them."""
     api = SentimentAPI(spark, tiny_model, predictions_path=str(tmp_path / "preds"))
     ran_on, predict = [], api.predict
 
@@ -237,49 +235,54 @@ def test_failed_append_is_logged_counted_and_still_served(
 
 
 def test_audit_append_and_topk_run_no_job(spark, tmp_path):
-    """The serving cost rests on this job shape: an append commits its
-    file from the driver, and a top-k reads the newest files on the
-    driver; neither runs a Spark job."""
+    """The serving cost rests on this job shape: creating the store,
+    an append and a top-k each run in the calling process; none runs a
+    Spark job or sends a py4j command."""
     path = str(tmp_path / "preds")
-    create_predictions_table(spark, path)
-    insert_prediction(spark, "warm up", "Positive sentiment", path)
-    with job_group(spark, "test.insert_prediction") as shape:
-        insert_prediction(spark, "great movie", "Positive sentiment", path)
-    assert shape() == (0, 0)
-    with job_group(spark, "test.top_k_predictions") as shape:
-        rows = top_k_predictions(spark, limit=10, path=path)
-    assert shape() == (0, 0)
+    with job_group(spark, "test.serving_store") as shape, py4j_calls(spark) as calls:
+        create_predictions_table(path)
+        insert_prediction("warm up", "Positive sentiment", path)
+        insert_prediction("great movie", "Positive sentiment", path)
+        rows = top_k_predictions(limit=10, path=path)
+    assert shape() == (0, 0) and calls == []
     assert [r["message"] for r in rows] == ["great movie", "warm up"]
 
 
 def test_create_predictions_table_runs_no_job(spark, tmp_path):
     """Creating the store makes its directory from the driver: no Spark
     job, so no task and no Python worker, and no file. Create over a
-    regular file raises ``OSError``, chained from the FileSystem's error."""
+    regular file raises ``OSError``, chained from pyarrow's error."""
     path = tmp_path / "preds"
     with job_group(spark, "test.create_predictions_table") as shape:
-        create_predictions_table(spark, str(path))
+        create_predictions_table(str(path))
     assert shape() == (0, 0)
     assert path.is_dir() and os.listdir(path) == []
     taken = tmp_path / "taken"
     taken.write_text("not a store")
     with pytest.raises(OSError, match="could not create") as info:
-        create_predictions_table(spark, str(taken))
-    assert isinstance(info.value.__cause__, Py4JJavaError)
-    assert "not a directory" in str(info.value.__cause__)
+        create_predictions_table(str(taken))
+    assert isinstance(info.value.__cause__, FileExistsError)
+    assert "non-directory entry exists" in str(info.value.__cause__)
 
 
-def test_store_on_session_without_py4j_bridge_fails_at_start(tiny_model, tmp_path):
-    """A session with no py4j bridge (as under Spark Connect) cannot
-    reach the store's FileSystem: the API refuses it at start-up, not
-    on the first request."""
+def test_store_pyarrow_cannot_resolve_fails_at_start(spark, tiny_model):
+    """A store URI that ``pyarrow.fs`` cannot resolve (Hadoop's
+    ``s3a://``) is refused when the API starts, not on the first
+    request."""
+    with pytest.raises(OSError, match="could not create") as info:
+        SentimentAPI(spark, tiny_model, predictions_path="s3a://b/x")
+    assert "s3a://b/x" in str(info.value.__cause__)
 
-    class BridgelessSession:
-        pass
 
-    with pytest.raises(TypeError, match="classic SparkSession"):
-        SentimentAPI(BridgelessSession(), tiny_model, predictions_path=str(tmp_path / "preds"))
-    assert not (tmp_path / "preds").exists()
+def test_relative_store_path_resolves_against_the_cwd(spark, tiny_model, tmp_path, monkeypatch):
+    """A path with no scheme is a local path; a relative one resolves
+    against the working directory, as Hadoop resolved it."""
+    monkeypatch.chdir(tmp_path)
+    api = SentimentAPI(spark, tiny_model, predictions_path="rel/preds")
+    assert (tmp_path / "rel" / "preds").is_dir()
+    api.predict("great happy")
+    assert [r["message"] for r in top_k_predictions("rel/preds")] == ["great happy"]
+    assert len(os.listdir(tmp_path / "rel" / "preds")) == 1
 
 
 def test_predict_500_is_logged(served, caplog):
@@ -317,7 +320,7 @@ def test_awkward_messages_round_trip_exactly(spark, served, tmp_path):
         "great happy " * 850,
     ]
     for m in msgs:
-        insert_prediction(spark, m, POSITIVE, path)
+        insert_prediction(m, POSITIVE, path)
     code, out = _call(served, "POST", "/predictions/?limit=10")
     assert code == 200
     assert [p["message"] for p in out["predictions"]] == msgs[::-1]
@@ -325,7 +328,7 @@ def test_awkward_messages_round_trip_exactly(spark, served, tmp_path):
 
 
 class _FailingFs:
-    """A store FileSystem whose commit fails at ``step``."""
+    """A store ``pyarrow.fs`` FileSystem whose commit fails at ``step``."""
 
     def __init__(self, fs, step: str) -> None:
         self.fs, self.step = fs, step
@@ -333,42 +336,47 @@ class _FailingFs:
     def __getattr__(self, name):
         return getattr(self.fs, name)
 
-    def create(self, path, overwrite):
-        out = self.fs.create(path, overwrite)
+    def open_output_stream(self, path):
+        out = self.fs.open_output_stream(path)
         if self.step != "write":
             return out
 
         class Stream:
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                out.close()
+
             def write(self, data):
                 raise OSError("disk full")
 
-            def close(self):
-                out.close()
-
         return Stream()
 
-    def rename(self, src, dst):
-        return False if self.step == "rename" else self.fs.rename(src, dst)
+    def move(self, src, dest):
+        if self.step == "rename":
+            raise OSError(f"could not move {src} to {dest}")
+        self.fs.move(src, dest)
 
 
 @pytest.mark.parametrize("step", ["write", "rename"])
-def test_failed_commit_raises_and_leaves_no_file(spark, tmp_path, monkeypatch, step):
+def test_failed_commit_raises_and_leaves_no_file(tmp_path, monkeypatch, step):
     path = str(tmp_path / "preds")
-    create_predictions_table(spark, path)
-    insert_prediction(spark, "kept", POSITIVE, path)
+    create_predictions_table(path)
+    insert_prediction("kept", POSITIVE, path)
     before = sorted(os.listdir(path))
     store_fs = engine._store_fs
 
-    def failing(spark, path):
-        fs, jpath = store_fs(spark, path)
-        return _FailingFs(fs, step), jpath
+    def failing(path):
+        fs, root = store_fs(path)
+        return _FailingFs(fs, step), root
 
     monkeypatch.setattr(engine, "_store_fs", failing)
     with pytest.raises(OSError):
-        insert_prediction(spark, "lost", NEGATIVE, path)
-    # neither the part file nor the temp file (or their checksums) remain
+        insert_prediction("lost", NEGATIVE, path)
+    # neither the part file nor the temp file remains
     assert sorted(os.listdir(path)) == before
-    rows = top_k_predictions(spark, limit=10, path=path)
+    rows = top_k_predictions(limit=10, path=path)
     assert [r["message"] for r in rows] == ["kept"]
 
 
@@ -381,11 +389,11 @@ def test_store_from_sparks_own_writer_keeps_working(spark, tmp_path):
     spark.createDataFrame([(old, "from spark", NEGATIVE)], PREDICTIONS_SCHEMA).coalesce(1).write.parquet(path)
     (spark_file,) = [n for n in os.listdir(path) if n.endswith(".parquet")]
     assert pq.ParquetFile(os.path.join(path, spark_file)).schema.column(0).physical_type == "INT96"
-    create_predictions_table(spark, path)  # the store exists: nothing added
-    insert_prediction(spark, "first new", POSITIVE, path)
-    insert_prediction(spark, "second new", NEGATIVE, path)
+    create_predictions_table(path)  # the store exists: nothing added
+    insert_prediction("first new", POSITIVE, path)
+    insert_prediction("second new", NEGATIVE, path)
 
-    rows = top_k_predictions(spark, limit=10, path=path)
+    rows = top_k_predictions(limit=10, path=path)
     assert [r["message"] for r in rows] == ["second new", "first new", "from spark"]
     assert rows[2]["timestamp"] == old
     table = pq.read_table(path)
@@ -423,22 +431,22 @@ def test_topk_equals_sparks_read_on_a_mixed_store(spark, tmp_path):
                    os.path.join(path, f"part-{'0123456789abcdef' * 2}.zstd.parquet"), compression="zstd")
     (tmp_path / "preds" / ".0-abc.tmp").write_bytes(b"not parquet")
     for i in range(4):
-        insert_prediction(spark, f"timed {i}", POSITIVE if i % 2 else NEGATIVE, path)
+        insert_prediction(f"timed {i}", POSITIVE if i % 2 else NEGATIVE, path)
     total = len(spark_rows) + 1 + 4
     oracle = spark.read.schema(PREDICTIONS_SCHEMA).parquet(path).orderBy(F.desc("timestamp"))
     for limit in (0, 1, 3, total + 5):
         want = oracle.limit(limit).collect()
-        assert top_k_predictions(spark, path=path, limit=limit) == want, limit
+        assert top_k_predictions(path=path, limit=limit) == want, limit
     assert len(want) == total and want[0]["message"] == "spark future"
 
 
-def test_topk_reads_only_the_newest_limit_files(spark, tmp_path, monkeypatch):
+def test_topk_reads_only_the_newest_limit_files(tmp_path, monkeypatch):
     """Top-k is O(limit) in files: one listing, and one open per row it
     returns, however many appends the store holds."""
     path = str(tmp_path / "preds")
-    create_predictions_table(spark, path)
+    create_predictions_table(path)
     for i in range(50):
-        insert_prediction(spark, f"m{i}", POSITIVE, path)
+        insert_prediction(f"m{i}", POSITIVE, path)
     calls = collections.Counter()
     store_fs = engine._store_fs
 
@@ -450,11 +458,11 @@ def test_topk_reads_only_the_newest_limit_files(spark, tmp_path, monkeypatch):
             calls[name] += 1
             return getattr(self.fs, name)
 
-    def counting(spark, path):
-        fs, jpath = store_fs(spark, path)
-        return CountingFs(fs), jpath
+    def counting(path):
+        fs, root = store_fs(path)
+        return CountingFs(fs), root
 
     monkeypatch.setattr(engine, "_store_fs", counting)
-    rows = top_k_predictions(spark, limit=3, path=path)
+    rows = top_k_predictions(limit=3, path=path)
     assert [r["message"] for r in rows] == ["m49", "m48", "m47"]
-    assert (calls["listStatus"], calls["open"]) == (1, 3)
+    assert (calls["get_file_info"], calls["open_input_file"]) == (1, 3)

@@ -203,16 +203,16 @@ def test_events_stream_over_a_file_fails_when_built(spark, tmp_path):
 # -- predictions write path (S6/S7) ------------------------------------
 
 
-def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
+def test_predictions_insert_and_topk_roundtrip(tmp_path):
     path = str(tmp_path / "predictions")
-    create_predictions_table(spark, path)
+    create_predictions_table(path)
     # idempotent create-if-not-exists; an empty store holds no file
-    create_predictions_table(spark, path)
-    assert top_k_predictions(spark, path=path) == []
+    create_predictions_table(path)
+    assert top_k_predictions(path=path) == []
 
-    insert_prediction(spark, "great movie", "Positive sentiment", path)
-    insert_prediction(spark, "terrible queue", "Negative sentiment", path)
-    rows = top_k_predictions(spark, limit=10, path=path)
+    insert_prediction("great movie", "Positive sentiment", path)
+    insert_prediction("terrible queue", "Negative sentiment", path)
+    rows = top_k_predictions(limit=10, path=path)
     assert len(rows) == 2
     # newest first, server-side timestamps present
     assert rows[0]["timestamp"] >= rows[1]["timestamp"]
@@ -220,10 +220,10 @@ def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
         "Positive sentiment",
         "Negative sentiment",
     }
-    one = top_k_predictions(spark, limit=1, path=path)
+    one = top_k_predictions(limit=1, path=path)
     assert len(one) == 1 and one[0]["message"] == rows[0]["message"]
     with pytest.raises(ValueError):
-        top_k_predictions(spark, limit=-1, path=path)
+        top_k_predictions(limit=-1, path=path)
 
 
 # -- streaming stateful dedup (T5 streaming form) ----------------------

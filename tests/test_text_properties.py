@@ -11,17 +11,21 @@ keeps the explored corpus fixed run-to-run: a green suite stays
 green, and any future edit of the cleaning patterns in
 ``functions/text.py`` that breaks unicode parity (e.g. falling back
 to Java's ASCII ``\\s``/``\\S``/``\\w``) fails deterministically. The
-DuckDB oracle of p03 runs ``CLEAN_TEXT_SQL``, built from the same
-patterns; the battery below checks it too.
+DuckDB oracles of p03–p07 are built from the same patterns; the
+battery below runs each of them against its Spark query.
 """
 
 from __future__ import annotations
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from hypothesis import given, settings, strategies as st
 
+from bigdata_lab4_spark import queries  # noqa: F401  (registers the queries)
 from bigdata_lab4_spark.functions.text import clean_text_col
 from bigdata_lab4_spark.ml.pipeline import _clean_text_py
-from bigdata_lab4_spark.queries.projections import CLEAN_TEXT_SQL
+from bigdata_lab4_spark.registry import REGISTRY
 
 # Long-stable Unicode blocks (Latin/Greek/Cyrillic/Hebrew/Arabic/
 # Indic/Thai/CJK/Hangul/kana, combining marks, ligatures, fullwidth
@@ -83,14 +87,20 @@ def test_clean_text_spark_matches_python_twin(spark, texts):
 #: word-final 'Σ' to 'σ', not 'ς'.
 _DUCKDB_LOWER_DIFFERS = {"İstanbul STRASSE ẞ", "ΣΙΣΥΦΟΣ"}
 
+#: The projections whose query and oracle run ``lower()``.
+_LOWERS = {"p03_clean_text", "p07_punct_lower_trim"}
 
-def test_clean_text_unicode_battery(spark, duck):
+
+def test_clean_text_unicode_battery(spark, tmp_path):
     """Pinned adversarial cases: NBSP inside URLs and as padding
     (Java's ASCII \\s vs CPython's unicode \\s), unicode
     mentions/hashtags, case-mapping oddities (İ, ΣΙΣΥΦΟΣ, ẞ,
     ligatures), fullwidth forms, ideographic space. Spark equals the
-    Python twin on every case, and ``CLEAN_TEXT_SQL`` in DuckDB equals
-    Spark on every case but the two ``lower()`` ones."""
+    Python twin on every case. The battery is also a ``documents``
+    table: p03–p07 run as registered in Spark and as their oracles in
+    DuckDB, and agree on every row but the two ``lower()`` ones of p03
+    and p07. (The testdata's ``documents`` is pure ASCII, so the oracle
+    suite never reaches these classes.)"""
     battery = [
         "http://x.com\xa0after",
         "  \xa0padded\xa0  ",
@@ -106,18 +116,33 @@ def test_clean_text_unicode_battery(spark, duck):
         "ｆｕｌｌｗｉｄｔｈ ＠ｕｓｅｒ",
         "mixed http://a　b",
         "",
+        "www.ü.de/ä?q=#tag and #tág @ü_ß ＃x",
     ]
     df = spark.createDataFrame([(t,) for t in battery], ["text"])
     got = [r[0] for r in df.select(clean_text_col("text")).collect()]
     assert got == [_clean_text_py(t) for t in battery]
 
-    rows = [(i, t) for i, t in enumerate(battery) if t not in _DUCKDB_LOWER_DIFFERS]
-    duck_got = [
-        r[0]
-        for r in duck.execute(
-            f"SELECT {CLEAN_TEXT_SQL} FROM (SELECT unnest(?) AS i, unnest(?) AS text) "
-            "ORDER BY i",
-            [[i for i, _ in rows], [t for _, t in rows]],
-        ).fetchall()
-    ]
-    assert duck_got == [got[i] for i, _ in rows]
+    n = len(battery)
+    docs = pa.table(
+        {
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": battery,
+            "lang": ["xx"] * n,
+            "source": ["battery"] * n,
+            "n_chars": pa.array([len(t) for t in battery], pa.int64()),
+        }
+    )
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path / 'documents.parquet'}'")
+    try:
+        for name in ("p03_clean_text", "p04_strip_urls", "p05_strip_mentions",
+                     "p06_strip_hashtags", "p07_punct_lower_trim"):
+            q = REGISTRY[name]
+            spark_rows = dict(tuple(r) for r in q.fn(spark, str(tmp_path)).collect())
+            duck_rows = dict(con.execute(q.oracle).fetchall())
+            skip = _DUCKDB_LOWER_DIFFERS if name in _LOWERS else set()
+            keep = [i for i, t in enumerate(battery) if t not in skip]
+            assert [duck_rows[i] for i in keep] == [spark_rows[i] for i in keep], name
+    finally:
+        con.close()
