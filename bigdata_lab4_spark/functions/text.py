@@ -1,4 +1,4 @@
-"""Text-cleaning column expressions.
+"""Text cleaning and word tokenization, once per engine.
 
 The reference cleans tweets with a row-at-a-time python function
 (`/root/reference/src/utils.py:5-10`, applied via ``pandas.apply`` at
@@ -19,10 +19,15 @@ reference relies on (fuzzed in tests/test_text_properties.py):
   Java's ``(?U)\\w`` adds;
 * whitespace is Java's White_Space set plus ``\\x1c-\\x1f`` (bidi
   separators Python counts as space, Java does not).
+
+Serving runs each expression's Python twin on the driver. The
+tokenizer's ``_WORD{2,}`` is sklearn's ``(?u)\\b\\w\\w+\\b``, so batch
+scoring and ``predict_one`` see the same tokens.
 """
 
 from __future__ import annotations
 
+import re
 import string
 
 from pyspark.sql import Column
@@ -48,6 +53,12 @@ HASHTAG_RE = f"#{_WORD}+"
 #: Python's ``str.strip()`` as a regex; Spark's ``trim()`` strips only ' '.
 STRIP_RE = f"^{_SPACE}+|{_SPACE}+$"
 
+_CLEAN_URL = re.compile(r"http\S+|www\S+")
+_CLEAN_MENTION = re.compile(r"@\w+")
+_CLEAN_HASHTAG = re.compile(r"#\w+")
+_PUNCT_TABLE = str.maketrans("", "", PUNCTUATION)
+_TOKEN_RE = re.compile(r"(?u)\b\w\w+\b")
+
 
 def clean_text_col(c: Column | str) -> Column:
     """Spark-native ``clean_text``.
@@ -65,6 +76,30 @@ def clean_text_col(c: Column | str) -> Column:
     c = F.translate(c, PUNCTUATION, "")
     c = F.lower(c)
     return F.regexp_replace(c, STRIP_RE, "")
+
+
+def clean_text_py(text: str) -> str:
+    """Driver-local twin of :func:`clean_text_col` for single-row
+    serving (the reference's own regexes, `src/utils.py:5-10`)."""
+    text = _CLEAN_URL.sub("", text)
+    text = _CLEAN_MENTION.sub("", text)
+    text = _CLEAN_HASHTAG.sub("", text)
+    return text.translate(_PUNCT_TABLE).lower().strip()
+
+
+def word_tokens_col(c: Column | str) -> Column:
+    """sklearn's tokenization as one Catalyst expression: lowercase,
+    then every run of two or more word characters. A null text raises
+    (``raise_error``) instead of yielding no tokens."""
+    c = F.col(c) if isinstance(c, str) else c
+    return F.when(
+        c.isNull(), F.raise_error("word_tokens_col: the text is null")
+    ).otherwise(F.regexp_extract_all(F.lower(c), F.lit(f"{_WORD}{{2,}}"), 0))
+
+
+def word_tokens_py(text: str) -> list[str]:
+    """Driver-local twin of :func:`word_tokens_col`."""
+    return _TOKEN_RE.findall(text.lower())
 
 
 def tokens_col(c: Column | str) -> Column:

@@ -8,15 +8,15 @@ This is the reference's whole job, re-expressed Spark-first:
 * vectorization: ``TfidfVectorizer(max_features=5000,
   stop_words="english")`` (`src/preprocess.py:40`) — here
   :class:`~bigdata_lab4_spark.ml.tfidf.SklearnTfidf`, sparse
-  end-to-end;
+  end-to-end, tokenizing with ``functions.text.word_tokens_col``;
 * estimator: ``MultinomialNB(alpha=1.0, fit_prior=True)``
   (`src/train.py:36-42`) — here
   ``pyspark.ml.classification.NaiveBayes(smoothing=alpha,
   modelType="multinomial")``, mathematically the same estimator
   (per-class feature sums + Laplace ``alpha``; Spark always fits
   class priors from data, which is sklearn's ``fit_prior=True``);
-* persistence: the fitted parameters as JSON — the TF-IDF vocabulary,
-  idf and stop list in ``tfidf.json``, NB ``pi``/``theta`` in
+* persistence: the fitted parameters as JSON — the TF-IDF vocabulary
+  and idf in ``tfidf.json``, NB ``pi``/``theta`` in
   ``nb.json`` — plus the Spark ML writer's ``nb/`` for the batch path,
   and an **immutable per-run ``run.json``** carrying
   params/metrics/paths — replacing the reference's mutable, race-prone
@@ -28,7 +28,8 @@ This is the reference's whole job, re-expressed Spark-first:
   ``Predictor.predict`` (`src/predict.py:73-92`) including the
   empty-message guard and the Positive/Negative/Unknown decode — but
   scores driver-local from the fitted parameters (vocab, idf, NB
-  log-odds), no Spark job per request and no JVM model loaded.
+  log-odds) and the Python twins of the batch text expressions
+  (``functions.text``), no Spark job per request, no JVM model loaded.
 
 Scale notes: training is one aggregation (TF-IDF fit) plus Spark
 ML's distributed NB sufficient-stats pass; scoring is a pure-JVM
@@ -42,15 +43,13 @@ from __future__ import annotations
 import json
 import math
 import os
-import re
-import string
 from datetime import datetime, timezone
 
 from pyspark.ml.classification import NaiveBayes, NaiveBayesModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_lab4_spark.functions.text import clean_text_col
+from bigdata_lab4_spark.functions.text import clean_text_col, clean_text_py, word_tokens_py
 from bigdata_lab4_spark.ml.tfidf import SklearnTfidf, SklearnTfidfModel
 
 #: Decode map from `/root/reference/src/predict.py:84-92`.
@@ -71,22 +70,6 @@ MAX_FEATURES = 5000
 #: Input columns the pipeline reads: the message and its 0/1 label, as
 #: :func:`load_tweets_csv` names them.
 TEXT_COL, LABEL_COL = "text", "label"
-
-_CLEAN_URL = re.compile(r"http\S+|www\S+")
-_CLEAN_MENTION = re.compile(r"@\w+")
-_CLEAN_HASHTAG = re.compile(r"#\w+")
-_PUNCT_TABLE = str.maketrans("", "", string.punctuation)
-_TOKEN_RE = re.compile(r"(?u)\b\w\w+\b")
-
-
-def _clean_text_py(text: str) -> str:
-    """Driver-local twin of ``clean_text_col`` for single-row serving
-    (same public regexes as `/root/reference/src/utils.py:5-10`)."""
-    text = _CLEAN_URL.sub("", text)
-    text = _CLEAN_MENTION.sub("", text)
-    text = _CLEAN_HASHTAG.sub("", text)
-    return text.translate(_PUNCT_TABLE).lower().strip()
-
 
 #: File names inside a saved model directory.
 TFIDF_FILE, NB_FILE, NB_DIR = "tfidf.json", "nb.json", "nb"
@@ -168,9 +151,7 @@ class SentimentModel:
             )
         tfidf = self.tfidf_model
         counts: dict[int, int] = {}
-        for tok in _TOKEN_RE.findall(_clean_text_py(message).lower()):
-            if tok in tfidf.stop_words_:
-                continue
+        for tok in word_tokens_py(clean_text_py(message)):
             idx = tfidf.vocabulary_.get(tok)
             if idx is not None:
                 counts[idx] = counts.get(idx, 0) + 1
@@ -283,7 +264,7 @@ def train_test_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return train, test
 
 
-def load_tweets_csv(spark: SparkSession, path: str, encoding: str = "ISO-8859-1") -> DataFrame:
+def load_tweets_csv(spark: SparkSession, path: str) -> DataFrame:
     """The reference's ingest: latin-1 CSV with ItemID / Sentiment /
     SentimentText (`src/preprocess.py:46`), normalized to
     (id, label, text).
@@ -300,7 +281,7 @@ def load_tweets_csv(spark: SparkSession, path: str, encoding: str = "ISO-8859-1"
         spark.read.schema("ItemID string, Sentiment string, SentimentText string")
         .option("header", True)
         .option("enforceSchema", False)
-        .option("encoding", encoding)
+        .option("encoding", "ISO-8859-1")
         .option("multiLine", True)
         .option("escape", '"')
         .csv(path)

@@ -11,7 +11,8 @@ ceiling (SURVEY §4.3); here vectors stay sparse end-to-end.
 sklearn semantics reproduced (all public, from the sklearn docs):
 
 * tokenization: lowercase, then ``(?u)\\b\\w\\w+\\b`` (tokens of two
-  or more word chars);
+  or more word chars): ``functions.text.word_tokens_col``, whose
+  serving twin is ``word_tokens_py``;
 * vocabulary: top ``max_features`` terms by **corpus term
   frequency**, ties at the cut broken by term; indices alphabetical,
   like sklearn's ``vocabulary_``. Spark's ``CountVectorizer(vocabSize=…)``
@@ -24,17 +25,17 @@ sklearn semantics reproduced (all public, from the sklearn docs):
 
 Execution is Spark-first: fitting is one term-keyed aggregation
 (corpus term frequency and document frequency together), and the
-fitted transform is a pure-JVM ``PipelineModel`` of
-``RegexTokenizer → StopWordsRemover → CountVectorizerModel →
-ElementwiseProduct(idf) → Normalizer(p=2)`` — no Python in the
-transform path, so scoring 100 TB of text never leaves codegen'd
-JVM operators. The model itself is its fitted parameters (vocabulary,
-idf, stop list) as Python values, saved as one JSON file: the
-``PipelineModel`` is built from them on the first ``transform``, so
-loading a model runs no Spark job and makes no py4j call.
+fitted transform is the tokenizer expression, then a pure-JVM
+``PipelineModel`` of ``CountVectorizerModel → ElementwiseProduct(idf)
+→ Normalizer(p=2)`` — no Python in the transform path, so scoring
+100 TB of text never leaves codegen'd JVM operators. The model itself
+is its fitted parameters (vocabulary, idf) as Python values, saved as
+one JSON file: the ``PipelineModel`` is built from them on the first
+``transform``, so loading a model runs no Spark job and no py4j call.
 
-Stop words are always English, as in the reference. Known semantic
-substitution: we use Spark's built-in english stop-word list
+Stop words are always English, as in the reference; the fit drops
+them, so the vocabulary holds none and scoring needs no stop filter.
+Known semantic substitution: we use Spark's built-in english stop-word list
 (``StopWordsRemover.loadDefaultStopWords``), not sklearn's 318-word
 frozenset (sklearn is not installed here).  The lists overlap heavily
 but are not identical; parity is semantic (±0.01 accuracy,
@@ -47,37 +48,12 @@ import json
 import math
 
 from pyspark.ml import PipelineModel
-from pyspark.ml.feature import (
-    CountVectorizerModel,
-    ElementwiseProduct,
-    Normalizer,
-    RegexTokenizer,
-    StopWordsRemover,
-)
+from pyspark.ml.feature import CountVectorizerModel, ElementwiseProduct, Normalizer, StopWordsRemover
 from pyspark.ml.linalg import Vectors
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: sklearn's default token pattern, with Java's ``(?U)`` standing in
-#: for Python's ``(?u)`` so ``\w`` is unicode-aware on the JVM too.
-TOKEN_PATTERN = r"(?U)\b\w\w+\b"
-
-
-def _tokenizer_stages(input_col: str, stop_words: list[str]) -> list:
-    """Tokenize + stop-filter stages shared by fit and transform; the
-    tokens land in ``__tokens``."""
-    return [
-        RegexTokenizer(
-            inputCol=input_col,
-            outputCol="__tokens_raw",
-            pattern=TOKEN_PATTERN,
-            gaps=False,  # pattern matches tokens, not separators
-            toLowercase=True,
-        ),
-        StopWordsRemover(
-            inputCol="__tokens_raw", outputCol="__tokens", stopWords=stop_words
-        ),
-    ]
+from bigdata_lab4_spark.functions.text import word_tokens_col
 
 
 class SklearnTfidfModel:
@@ -85,9 +61,7 @@ class SklearnTfidfModel:
     after ``fit``), held as its fitted parameters.
 
     ``vocabulary_`` (term → index, in index order) and ``idf_`` mirror
-    the sklearn attribute names. ``stop_words_`` is the list removed
-    before counting: sklearn's ``get_stop_words()``, not its
-    ``stop_words_`` (the terms the ``max_features`` cut dropped).
+    the sklearn attribute names; the vocabulary holds no stop word.
 
     The parameters are plain Python values, saved and loaded as one
     JSON file, so building or loading a model touches no JVM. The
@@ -99,24 +73,21 @@ class SklearnTfidfModel:
         self,
         vocabulary: list[str],
         idf: list[float],
-        stop_words: list[str],
         input_col: str,
         output_col: str,
     ) -> None:
         self.vocabulary_ = {t: i for i, t in enumerate(vocabulary)}
         self.idf_ = list(idf)
-        self.stop_words_ = frozenset(stop_words)
         self.input_col = input_col
         self.output_col = output_col
         self._pm: PipelineModel | None = None
 
     def _pipeline_model(self) -> PipelineModel:
-        """``RegexTokenizer → StopWordsRemover → CountVectorizerModel →
-        ElementwiseProduct(idf) → Normalizer(p=2)``, built once."""
+        """``CountVectorizerModel → ElementwiseProduct(idf) →
+        Normalizer(p=2)`` over the ``__tokens`` column, built once."""
         if self._pm is None:
             self._pm = PipelineModel(
-                _tokenizer_stages(self.input_col, sorted(self.stop_words_))
-                + [
+                [
                     CountVectorizerModel.from_vocabulary(
                         list(self.vocabulary_), inputCol="__tokens", outputCol="__counts"
                     ),
@@ -133,8 +104,9 @@ class SklearnTfidfModel:
     def transform(self, df: DataFrame) -> DataFrame:
         """L2-normalized TF-IDF ``SparseVector`` column; intermediate
         token/count columns are dropped."""
-        out = self._pipeline_model().transform(df)
-        return out.drop("__tokens_raw", "__tokens", "__counts", "__tfidf_raw")
+        tokens = df.withColumn("__tokens", word_tokens_col(self.input_col))
+        out = self._pipeline_model().transform(tokens)
+        return out.drop("__tokens", "__counts", "__tfidf_raw")
 
     # -- persistence (S4) ----------------------------------------------
     def save(self, path: str) -> None:
@@ -150,17 +122,17 @@ class SklearnTfidfModel:
                     "output_col": self.output_col,
                     "vocabulary": list(self.vocabulary_),
                     "idf": self.idf_,
-                    "stop_words": sorted(self.stop_words_),
                 },
                 f,
             )
 
     @classmethod
     def load(cls, path: str) -> "SklearnTfidfModel":
-        """Read a model :meth:`save` wrote; no Spark job, no py4j call."""
+        """Read a model :meth:`save` wrote; no Spark job, no py4j call.
+        The ``stop_words`` key of older files is ignored."""
         with open(path) as f:
             p = json.load(f)
-        return cls(p["vocabulary"], p["idf"], p["stop_words"], p["input_col"], p["output_col"])
+        return cls(p["vocabulary"], p["idf"], p["input_col"], p["output_col"])
 
 
 class SklearnTfidf:
@@ -169,10 +141,11 @@ class SklearnTfidf:
 
     Fit plan (all distributed, shuffle-light):
 
-    1. tokenize + stop-filter (map-only, codegen);
+    1. tokenize (map-only, codegen);
     2. one term-keyed aggregation: each document emits
        ``(term, tf=1, df=0)`` per token and ``(term, tf=0, df=1)``
-       per distinct token, and ``groupBy(term)`` sums both —
+       per distinct token, stop words are filtered out (an ``InSet``
+       hash lookup), and ``groupBy(term)`` sums both —
        partial aggregation map-side, so the one shuffle carries one
        row per term per partition, never document bodies;
     3. top-``max_features`` by ``(corpus_tf desc, term asc)`` —
@@ -196,9 +169,8 @@ class SklearnTfidf:
         self.max_features = max_features
 
     def fit(self, df: DataFrame) -> SklearnTfidfModel:
-        # StopWordsRemover's default list: Spark's English one.
         stop_words = StopWordsRemover.loadDefaultStopWords("english")
-        tokens = PipelineModel(_tokenizer_stages(self.input_col, stop_words)).transform(df)
+        tokens = df.select(word_tokens_col(self.input_col).alias("__tokens"))
 
         n_docs = tokens.count()
         if n_docs == 0:
@@ -219,6 +191,7 @@ class SklearnTfidf:
             tokens.select(
                 F.inline(F.concat(rows(toks, 1, 0), rows(F.array_distinct(toks), 0, 1)))
             )
+            .filter(~F.col("term").isin(stop_words))
             .groupBy("term")
             .agg(F.sum("tf").alias("corpus_tf"), F.sum("df").alias("df"))
         )
@@ -238,4 +211,4 @@ class SklearnTfidf:
             math.log((1.0 + n_docs) / (1.0 + vocab_df[t])) + 1.0 for t in vocab
         ]
 
-        return SklearnTfidfModel(vocab, idf, stop_words, self.input_col, self.output_col)
+        return SklearnTfidfModel(vocab, idf, self.input_col, self.output_col)

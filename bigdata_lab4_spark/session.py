@@ -18,27 +18,23 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "bigdata-lab4-spark",
-    master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    The master is ``master`` when passed, else ``local[$SPARK_GRAFT_CPUS]``
-    when that is set (bench.py's contract), else whatever
-    launched the process chose: spark-submit's ``--master``, or
-    Spark's ``local[*]`` under a plain ``python``. Either way this
-    factory contributes its conf defaults.
+    The master is ``local[$SPARK_GRAFT_CPUS]`` when that is set
+    (bench.py's contract), else whatever launched the process chose:
+    spark-submit's ``--master``, or Spark's ``local[*]`` under a plain
+    ``python``. Either way this factory contributes its conf defaults.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if master is None and cpus:
-        master = f"local[{cpus}]"
     # At 100 TB this is overridden per-deployment (``extra_conf``); for
     # local[N] match the core count so post-shuffle tasks don't fragment.
     shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = SparkSession.builder
-    if master is not None:
-        builder = builder.master(master)
+    if cpus:
+        builder = builder.master(f"local[{cpus}]")
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -116,7 +116,7 @@ def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
 
     a, b = model.tfidf_model, loaded.tfidf_model
     assert list(b.vocabulary_.items()) == list(a.vocabulary_.items())
-    assert b.idf_ == a.idf_ and b.stop_words_ == a.stop_words_
+    assert b.idf_ == a.idf_
     assert (loaded.pi, loaded.theta) == (model.pi, model.theta)
     nb = NaiveBayesModel.load(os.path.join(path, "nb"))
     assert nb.pi.toArray().tolist() == loaded.pi
@@ -186,11 +186,22 @@ def test_predict_one_empty_message_guard(fitted):
         model.predict_one("")
 
 
+def test_null_text_raises_in_fit_and_transform(fitted, spark):
+    """A null message fails fit and batch scoring with the tokenizer's
+    own error, never as a row with no tokens."""
+    model, _ = fitted
+    df = spark.createDataFrame([(1, 1, "glad0 glad1"), (2, 0, None)], "id long, label int, text string")
+    with pytest.raises(Exception, match="word_tokens_col: the text is null"):
+        SentimentPipeline().fit(df)
+    with pytest.raises(Exception, match="word_tokens_col: the text is null"):
+        model.transform(df).collect()
+
+
 def test_pipeline_on_tweets_fixture(spark, tmp_path):
     """Smoke: the reference's actual ingest shape — latin-1 CSV with
     ItemID/Sentiment/SentimentText (`src/preprocess.py:46`) — trains
     and scores end-to-end."""
-    df = load_tweets_csv(spark, os.path.join(FIXTURES, "tweets.csv"), encoding="UTF-8")
+    df = load_tweets_csv(spark, os.path.join(FIXTURES, "tweets.csv"))
     assert df.columns == ["id", "label", "text"]
     model = SentimentPipeline().fit(df)
     scored = model.transform(df)
@@ -210,17 +221,17 @@ def test_load_tweets_csv_reads_the_declared_header(spark, tmp_path):
 
     ok = write("ok.csv", 'ItemID,Sentiment,SentimentText\n1,0,"sad, day"\n2,1\n')
     with job_group(spark, "test.load_tweets_csv") as build:
-        df = load_tweets_csv(spark, ok, encoding="UTF-8")
+        df = load_tweets_csv(spark, ok)
     assert build()[0] == 0
     assert [tuple(r) for r in df.orderBy("id").collect()] == [(1, 0, "sad, day"), (2, 1, None)]
 
     for header in ("ItemID,Label,SentimentText", "ItemID,SentimentText,Sentiment"):
         bad = write("header.csv", f"{header}\n1,0,sad\n")
         with pytest.raises(Exception, match="CSV header does not conform to the schema"):
-            load_tweets_csv(spark, bad, encoding="UTF-8").collect()
+            load_tweets_csv(spark, bad).collect()
     bad = write("label.csv", "ItemID,Sentiment,SentimentText\n1,positive,glad\n")
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
-        load_tweets_csv(spark, bad, encoding="UTF-8").collect()
+        load_tweets_csv(spark, bad).collect()
 
 
 def test_train_test_split_deterministic(spark):

@@ -10,6 +10,7 @@ import json
 import math
 
 import pytest
+from pyspark.ml.feature import StopWordsRemover
 
 from bigdata_lab4_spark.ml import SklearnTfidf, SklearnTfidfModel
 from tests.conftest import job_group
@@ -76,7 +77,16 @@ def test_stop_words_and_short_tokens_dropped(spark):
     assert "a" not in vocab  # sklearn token pattern needs >=2 chars
     assert {"cat", "dog", "sat"} <= vocab
     assert model.idf_ == pytest.approx([math.log(3 / 2) + 1] * len(vocab), abs=1e-9)
-    assert {"the", "and"} <= model.stop_words_
+
+
+def test_vocabulary_holds_no_stop_word(spark):
+    """Scoring filters no stop word, so the fit must keep every one of
+    them out of the vocabulary, even when they are the most frequent
+    terms."""
+    stop = StopWordsRemover.loadDefaultStopWords("english")
+    df = spark.createDataFrame([(" ".join(stop),), (" ".join(stop) + " cat dog",)], ["text"])
+    vocab = set(_fit(df).vocabulary_)
+    assert {"cat", "dog"} <= vocab and not vocab & set(stop)
 
 
 def test_fit_runs_one_aggregation(spark, corpus):
@@ -113,8 +123,14 @@ def test_saved_model_is_its_parameters(spark, corpus, tmp_path):
         loaded = SklearnTfidfModel.load(str(path))
     assert shape() == (0, 0) and loaded._pm is None
     assert list(loaded.vocabulary_.items()) == list(model.vocabulary_.items())
-    assert loaded.idf_ == model.idf_ and loaded.stop_words_ == model.stop_words_
+    assert loaded.idf_ == model.idf_
     assert (loaded.input_col, loaded.output_col) == ("text", "features")
+
+    # files written before the stop list left the model carry it; load
+    # ignores it
+    params = json.loads(path.read_text())
+    path.write_text(json.dumps({**params, "stop_words": ["the", "and"]}))
+    assert SklearnTfidfModel.load(str(path)).vocabulary_ == model.vocabulary_
 
 
 def test_empty_corpus_raises(spark):

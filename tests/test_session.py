@@ -1,7 +1,6 @@
 """Session factory tests: the master comes from spark-submit unless
-the caller or ``SPARK_GRAFT_CPUS`` names one, and the generated-class
-cache holds a warm neardup pass, so repeating the pass compiles no new
-class."""
+``SPARK_GRAFT_CPUS`` names one, and the generated-class cache holds a
+warm neardup pass, so repeating the pass compiles no new class."""
 
 from __future__ import annotations
 

@@ -1,18 +1,21 @@
-"""Property-based parity: Spark clean_text vs the serving-path twin,
-and vs its DuckDB twin.
+"""Property-based parity: Spark cleaning and tokenization vs their
+serving-path twins, and cleaning vs its DuckDB twin.
 
-`predict_one` cleans driver-side with ``_clean_text_py`` (the
-reference's exact regexes, `/root/reference/src/utils.py:5-10`) while
-batch scoring cleans JVM-side with ``clean_text_col``. If the two
-ever disagree, online and batch predictions silently diverge for the
-same message — so the contract is fuzzed here over arbitrary unicode
-(not just the ASCII the oracle suite covers). ``derandomize=True``
-keeps the explored corpus fixed run-to-run: a green suite stays
-green, and any future edit of the cleaning patterns in
+`predict_one` cleans and tokenizes driver-side with ``clean_text_py``
+(the reference's exact regexes, its `src/utils.py:5-10`)
+and ``word_tokens_py`` (sklearn's ``(?u)\\b\\w\\w+\\b``), while batch
+scoring runs ``clean_text_col`` and ``word_tokens_col`` JVM-side. If
+either pair ever disagrees, online and batch predictions silently
+diverge for the same message — so both contracts are fuzzed here over
+arbitrary unicode (not just the ASCII the oracle suite covers).
+``derandomize=True`` keeps the explored corpus fixed run-to-run: a
+green suite stays green, and any future edit of the patterns in
 ``functions/text.py`` that breaks unicode parity (e.g. falling back
-to Java's ASCII ``\\s``/``\\S``/``\\w``) fails deterministically. The
-DuckDB oracles of p03–p07 are built from the same patterns; the
-battery below runs each of them against its Spark query.
+to Java's ASCII ``\\s``/``\\S``/``\\w``, or to its ``(?U)\\w``, which
+adds marks and connectors and drops ``No`` digits) fails
+deterministically. The DuckDB oracles of p03–p07 are built from the
+same patterns; the battery below runs each of them against its Spark
+query.
 """
 
 from __future__ import annotations
@@ -23,8 +26,12 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings, strategies as st
 
 from bigdata_lab4_spark import queries  # noqa: F401  (registers the queries)
-from bigdata_lab4_spark.functions.text import clean_text_col
-from bigdata_lab4_spark.ml.pipeline import _clean_text_py
+from bigdata_lab4_spark.functions.text import (
+    clean_text_col,
+    clean_text_py,
+    word_tokens_col,
+    word_tokens_py,
+)
 from bigdata_lab4_spark.registry import REGISTRY
 
 # Long-stable Unicode blocks (Latin/Greek/Cyrillic/Hebrew/Arabic/
@@ -79,7 +86,15 @@ _TEXT = st.text(
 def test_clean_text_spark_matches_python_twin(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     got = [r[0] for r in df.select(clean_text_col("text")).collect()]
-    assert got == [_clean_text_py(t) for t in texts]
+    assert got == [clean_text_py(t) for t in texts]
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(st.lists(_TEXT, min_size=1, max_size=8))
+def test_word_tokens_spark_match_python_twin(spark, texts):
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    got = [r[0] for r in df.select(word_tokens_col("text")).collect()]
+    assert got == [word_tokens_py(t) for t in texts]
 
 
 #: Where DuckDB's ``lower()`` differs from Java's and Python's (the
@@ -95,12 +110,15 @@ def test_clean_text_unicode_battery(spark, tmp_path):
     """Pinned adversarial cases: NBSP inside URLs and as padding
     (Java's ASCII \\s vs CPython's unicode \\s), unicode
     mentions/hashtags, case-mapping oddities (İ, ΣΙΣΥΦΟΣ, ẞ,
-    ligatures), fullwidth forms, ideographic space. Spark equals the
-    Python twin on every case. The battery is also a ``documents``
-    table: p03–p07 run as registered in Spark and as their oracles in
-    DuckDB, and agree on every row but the two ``lower()`` ones of p03
-    and p07. (The testdata's ``documents`` is pure ASCII, so the oracle
-    suite never reaches these classes.)"""
+    ligatures), fullwidth forms, ideographic space; combining marks,
+    connector punctuation and superscript digits, where Java's
+    ``(?U)\\w`` and Python's ``\\w`` split words differently. Spark's
+    cleaning and tokens equal the Python twins' on every case. The
+    battery is also a ``documents`` table: p03–p07 run as registered
+    in Spark and as their oracles in DuckDB, and agree on every row but
+    the two ``lower()`` ones of p03 and p07. (The testdata's
+    ``documents`` is pure ASCII, so the oracle suite never reaches
+    these classes.)"""
     battery = [
         "http://x.com\xa0after",
         "  \xa0padded\xa0  ",
@@ -117,10 +135,13 @@ def test_clean_text_unicode_battery(spark, tmp_path):
         "mixed http://a　b",
         "",
         "www.ü.de/ä?q=#tag and #tág @ü_ß ＃x",
+        "हिन्दी भाषा",
+        "a‿b",
+        "x²y ok",
     ]
     df = spark.createDataFrame([(t,) for t in battery], ["text"])
-    got = [r[0] for r in df.select(clean_text_col("text")).collect()]
-    assert got == [_clean_text_py(t) for t in battery]
+    got = [tuple(r) for r in df.select(clean_text_col("text"), word_tokens_col("text")).collect()]
+    assert got == [(clean_text_py(t), word_tokens_py(t)) for t in battery]
 
     n = len(battery)
     docs = pa.table(
