@@ -15,15 +15,16 @@ This is the reference's whole job, re-expressed Spark-first:
   modelType="multinomial")``, mathematically the same estimator
   (per-class feature sums + Laplace ``alpha``; Spark always fits
   class priors from data, which is sklearn's ``fit_prior=True``);
-* persistence: the fitted parameters as JSON — the TF-IDF vocabulary
-  and idf in ``tfidf.json``, NB ``pi``/``theta`` in
-  ``nb.json`` — plus the Spark ML writer's ``nb/`` for the batch path,
-  and an **immutable per-run ``run.json``** carrying
+* persistence: each fitted parameter once, as JSON — the TF-IDF
+  vocabulary and idf in ``tfidf.json``, NB ``pi``/``theta`` in
+  ``nb.json`` — and an **immutable per-run ``run.json``** carrying
   params/metrics/paths — replacing the reference's mutable, race-prone
   ``config.ini`` rewritten by every stage (`src/train.py:63-71`,
-  SURVEY §4.3). :meth:`SentimentModel.load` reads the JSON files only:
-  no Spark job and no py4j call, so a served model is ready in
-  milliseconds;
+  SURVEY §4.3). :meth:`SentimentModel.save` and
+  :meth:`SentimentModel.load` run no Spark job, and ``load`` makes no
+  py4j call, so a served model is ready in milliseconds. The batch
+  path's JVM stages are built from the same parameters on its first
+  call;
 * serving: :meth:`SentimentModel.predict_one` mirrors
   ``Predictor.predict`` (`src/predict.py:73-92`) including the
   empty-message guard and the Positive/Negative/Unknown decode — but
@@ -33,9 +34,10 @@ This is the reference's whole job, re-expressed Spark-first:
 
 Scale notes: training is one aggregation (TF-IDF fit) plus Spark
 ML's distributed NB sufficient-stats pass; scoring is a pure-JVM
-``transform``. Nothing here densifies the feature matrix — the
-reference's ``.toarray()`` (`src/utils.py:13`) is exactly what caps
-it at 100k rows (SURVEY §4.3).
+``transform``: ``CountVectorizerModel → ElementwiseProduct →
+Normalizer → NaiveBayesModel``. Nothing here densifies the feature
+matrix — the reference's ``.toarray()`` (`src/utils.py:13`) is
+exactly what caps it at 100k rows (SURVEY §4.3).
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ import os
 from datetime import datetime, timezone
 
 from pyspark.ml.classification import NaiveBayes, NaiveBayesModel
+from pyspark.ml.linalg import DenseMatrix, Vectors
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,21 +75,18 @@ MAX_FEATURES = 5000
 TEXT_COL, LABEL_COL = "text", "label"
 
 #: File names inside a saved model directory.
-TFIDF_FILE, NB_FILE, NB_DIR = "tfidf.json", "nb.json", "nb"
+TFIDF_FILE, NB_FILE = "tfidf.json", "nb.json"
 
 
 class SentimentModel:
-    """Fitted sentiment classifier: TF-IDF model + NB parameters.
+    """Fitted sentiment classifier: TF-IDF model + NB parameters
+    (log-priors ``pi`` and log-likelihoods ``theta`` as lists), the one
+    state of a fitted and of a loaded model.
 
     Batch path (:meth:`transform`) is pure JVM; serving path
     (:meth:`predict_one`) is driver-local numpy-free scoring from the
-    same fitted parameters (NB log-priors ``pi`` and log-likelihoods
-    ``theta`` as lists), asserted equal to the batch path in
+    same fitted parameters, asserted equal to the batch path in
     ``tests/test_ml_pipeline.py``.
-
-    ``nb`` is the fitted ``NaiveBayesModel``, or the directory its
-    Spark ML writer saved it to; a directory is loaded on the first
-    batch call, so a loaded model that only serves never loads it.
     """
 
     def __init__(
@@ -94,17 +94,27 @@ class SentimentModel:
         tfidf_model: SklearnTfidfModel,
         pi: list[float],
         theta: list[list[float]],
-        nb: NaiveBayesModel | str,
     ) -> None:
         self.tfidf_model = tfidf_model
         self.pi = pi
         self.theta = theta
-        self._nb = nb
+        self._nb: NaiveBayesModel | None = None
 
-    @property
-    def nb_model(self) -> NaiveBayesModel:
-        if isinstance(self._nb, str):
-            self._nb = NaiveBayesModel.load(self._nb)
+    def _nb_model(self) -> NaiveBayesModel:
+        """The batch path's ``NaiveBayesModel``, built once from ``pi``
+        and ``theta`` with no Spark job. Its constructor is
+        ``private[ml]`` in Scala but public in the bytecode. ``theta``
+        goes row-major, the layout ``NaiveBayes.fit`` gives it, and
+        ``sigma`` is empty, as for every multinomial model."""
+        if self._nb is None:
+            theta = [v for row in self.theta for v in row]
+            self._nb = NaiveBayesModel._create_from_java_class(
+                "org.apache.spark.ml.classification.NaiveBayesModel",
+                NaiveBayesModel._randomUID(),
+                Vectors.dense(self.pi),
+                DenseMatrix(len(self.theta), len(self.theta[0]), theta, isTransposed=True),
+                DenseMatrix(0, 0, []),
+            )
         return self._nb
 
     # -- batch scoring (U4) --------------------------------------------
@@ -113,7 +123,7 @@ class SentimentModel:
         columns. Input needs ``TEXT_COL``; label is not required."""
         cleaned = df.withColumn("__clean", clean_text_col(TEXT_COL))
         feats = self.tfidf_model.transform(cleaned)
-        scored = self.nb_model.transform(feats)
+        scored = self._nb_model().transform(feats)
         decoded = scored.withColumn(
             "sentiment",
             F.when(F.col("prediction") == 1.0, POSITIVE)
@@ -174,25 +184,24 @@ class SentimentModel:
 
     # -- persistence (S4 + S5 run metadata) ----------------------------
     def save(self, path: str, metrics: dict | None = None) -> None:
-        """Write ``tfidf.json`` and ``nb.json`` (the fitted parameters),
-        ``nb/`` (Spark ML writer, for the batch path) and an immutable
-        ``run.json`` (params, metrics, artifact paths) — the append-only
-        replacement for the reference's shared ``config.ini``
-        (`src/train.py:63-71`)."""
+        """Write ``tfidf.json`` and ``nb.json`` (the fitted parameters,
+        each once) and an immutable ``run.json`` (params, metrics,
+        artifact paths) — the append-only replacement for the
+        reference's shared ``config.ini`` (`src/train.py:63-71`). Plain
+        file writes: no Spark job and no py4j call."""
         os.makedirs(path, exist_ok=True)
         self.tfidf_model.save(os.path.join(path, TFIDF_FILE))
         with open(os.path.join(path, NB_FILE), "w") as f:
             json.dump({"pi": self.pi, "theta": self.theta}, f)
-        self.nb_model.write().overwrite().save(os.path.join(path, NB_DIR))
         run = {
             "model": "NAIVE_BAYES",
             "params": {
-                "alpha": self.nb_model.getSmoothing(),
-                "model_type": self.nb_model.getModelType(),
+                "alpha": NB_ALPHA,
+                "model_type": "multinomial",
                 "max_features": len(self.tfidf_model.idf_),
             },
             "metrics": metrics or {},
-            "paths": {"tfidf": TFIDF_FILE, "nb": NB_DIR, "nb_params": NB_FILE},
+            "paths": {"tfidf": TFIDF_FILE, "nb_params": NB_FILE},
             "saved_at": datetime.now(timezone.utc).isoformat(),
         }
         with open(os.path.join(path, "run.json"), "w") as f:
@@ -201,9 +210,10 @@ class SentimentModel:
     @classmethod
     def load(cls, path: str) -> "SentimentModel":
         """Read the JSON parameter files :meth:`save` wrote: no Spark job
-        and no py4j call. ``nb/`` is loaded only by the batch path. A
-        directory without them (the older Spark-ML-only layout) raises
-        ``FileNotFoundError`` naming the missing file."""
+        and no py4j call. An ``nb/`` directory that older saves also
+        wrote (the Spark ML writer's copy of ``nb.json``) is ignored. A
+        directory without the JSON files (the older Spark-ML-only
+        layout) raises ``FileNotFoundError`` naming the missing file."""
         try:
             tfidf = SklearnTfidfModel.load(os.path.join(path, TFIDF_FILE))
             with open(os.path.join(path, NB_FILE)) as f:
@@ -213,7 +223,7 @@ class SentimentModel:
                 f"model file {e.filename} is missing: a model saved by Spark ML "
                 "writers alone (a tfidf/ directory) must be trained and saved again"
             ) from e
-        return cls(tfidf, nb["pi"], nb["theta"], os.path.join(path, NB_DIR))
+        return cls(tfidf, nb["pi"], nb["theta"])
 
 
 class SentimentPipeline:
@@ -249,9 +259,7 @@ class SentimentPipeline:
             featuresCol="features",
             labelCol="__label_d",
         ).fit(train_feats)
-        return SentimentModel(
-            tfidf, nb.pi.toArray().tolist(), nb.theta.toArray().tolist(), nb
-        )
+        return SentimentModel(tfidf, nb.pi.toArray().tolist(), nb.theta.toArray().tolist())
 
 
 def train_test_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -30,8 +30,12 @@ fitted transform is the tokenizer expression, then a pure-JVM
 → Normalizer(p=2)`` — no Python in the transform path, so scoring
 100 TB of text never leaves codegen'd JVM operators. The model itself
 is its fitted parameters (vocabulary, idf) as Python values, saved as
-one JSON file: the ``PipelineModel`` is built from them on the first
-``transform``, so loading a model runs no Spark job and no py4j call.
+one JSON file, so loading a model runs no Spark job and no py4j call.
+The ``PipelineModel`` is built from them on the first ``transform``,
+in a few dozen py4j calls and no job: the vocabulary crosses to the
+JVM as one newline-joined string, split there into the ``String[]``
+that ``CountVectorizerModel``'s public constructor takes, and idf as
+one pickled vector.
 
 Stop words are always English, as in the reference; the fit drops
 them, so the vocabulary holds none and scoring needs no stop filter.
@@ -50,6 +54,7 @@ import math
 from pyspark.ml import PipelineModel
 from pyspark.ml.feature import CountVectorizerModel, ElementwiseProduct, Normalizer, StopWordsRemover
 from pyspark.ml.linalg import Vectors
+from pyspark.ml.util import _jvm
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,6 +67,9 @@ class SklearnTfidfModel:
 
     ``vocabulary_`` (term → index, in index order) and ``idf_`` mirror
     the sklearn attribute names; the vocabulary holds no stop word.
+    An empty vocabulary, or a term that is empty or holds a newline,
+    raises ``ValueError``: a fit never makes one, and the JVM
+    vocabulary is built by splitting the terms joined on newlines.
 
     The parameters are plain Python values, saved and loaded as one
     JSON file, so building or loading a model touches no JVM. The
@@ -76,6 +84,8 @@ class SklearnTfidfModel:
         input_col: str,
         output_col: str,
     ) -> None:
+        if not vocabulary or any(not t or "\n" in t for t in vocabulary):
+            raise ValueError("the vocabulary is empty, or a term is empty or holds a newline")
         self.vocabulary_ = {t: i for i, t in enumerate(vocabulary)}
         self.idf_ = list(idf)
         self.input_col = input_col
@@ -86,11 +96,14 @@ class SklearnTfidfModel:
         """``CountVectorizerModel → ElementwiseProduct(idf) →
         Normalizer(p=2)`` over the ``__tokens`` column, built once."""
         if self._pm is None:
+            split = _jvm().java.util.regex.Pattern.compile("\n").split
+            terms = split("\n".join(self.vocabulary_))
+            counts = CountVectorizerModel._create_from_java_class(
+                "org.apache.spark.ml.feature.CountVectorizerModel", terms
+            )
             self._pm = PipelineModel(
                 [
-                    CountVectorizerModel.from_vocabulary(
-                        list(self.vocabulary_), inputCol="__tokens", outputCol="__counts"
-                    ),
+                    counts.setInputCol("__tokens").setOutputCol("__counts"),
                     ElementwiseProduct(
                         scalingVec=Vectors.dense(self.idf_),
                         inputCol="__counts",

@@ -350,7 +350,8 @@ def a08_term_frequency(spark, sf_dir):
     """,
     doc="A9 document frequency + sklearn-smooth IDF: ln((1+N)/(1+df))+1 "
     "(ref: TfidfVectorizer default; SURVEY §7.5 notes Spark IDF differs — "
-    "this query IS the sklearn formula, used by the ml/ pipeline shim).",
+    "this query IS the sklearn formula; ml/tfidf.py's SklearnTfidf.fit applies "
+    "the same formula to the df of its own term-keyed aggregation).",
 )
 def a09_idf(spark, sf_dir):
     from bigdata_lab4_spark.functions.text import tokens_col

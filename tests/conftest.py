@@ -4,6 +4,7 @@ import contextlib
 import os
 
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
@@ -71,12 +72,18 @@ def job_group(spark, name: str):
 
 @contextlib.contextmanager
 def py4j_calls(spark):
-    """Yield a list that collects every py4j command the body sends."""
+    """Yield a list that collects every py4j command the body sends.
+
+    py4j's finalizer thread releases the JVM objects of garbage-collected
+    proxies on its own schedule, so a release (``m``emory ``d``elete) can
+    land inside any body; releases are not counted. A body that makes a
+    JVM object sends the command that made it, which is counted."""
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
 
     def counting(command, *args, **kwargs):
-        calls.append(command)
+        if not command.startswith(MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME):
+            calls.append(command)
         return send(command, *args, **kwargs)
 
     client.send_command = counting

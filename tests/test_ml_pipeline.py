@@ -21,9 +21,8 @@ import random
 import shutil
 
 import pytest
-from pyspark.ml.classification import NaiveBayesModel
 
-from bigdata_lab4_spark.ml import SentimentModel, SentimentPipeline
+from bigdata_lab4_spark.ml import SentimentModel, SentimentPipeline, SklearnTfidfModel
 from bigdata_lab4_spark.ml.pipeline import (
     NEGATIVE,
     POSITIVE,
@@ -103,10 +102,20 @@ def test_save_load_roundtrip_and_run_metadata(fitted, tmp_path):
     )
 
 
+def test_save_writes_each_parameter_once(fitted, spark, tmp_path):
+    """Saving runs no Spark job and writes the two parameter files and
+    ``run.json``, nothing else."""
+    model, _ = fitted
+    path = tmp_path / "sentiment"
+    with job_group(spark, "test.model_save") as shape:
+        model.save(str(path))
+    assert shape() == (0, 0)
+    assert sorted(os.listdir(path)) == ["nb.json", "run.json", "tfidf.json"]
+
+
 def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
     """Loading runs no Spark job and sends no py4j command, and gives
-    back exactly the fitted parameters; ``nb.json`` equals the Spark ML
-    writer's ``nb/``, which only the batch path loads."""
+    back exactly the fitted parameters."""
     model, _ = fitted
     path = str(tmp_path / "sentiment")
     model.save(path)
@@ -118,13 +127,50 @@ def test_load_reads_the_fitted_parameters_only(fitted, spark, tmp_path):
     assert list(b.vocabulary_.items()) == list(a.vocabulary_.items())
     assert b.idf_ == a.idf_
     assert (loaded.pi, loaded.theta) == (model.pi, model.theta)
-    nb = NaiveBayesModel.load(os.path.join(path, "nb"))
-    assert nb.pi.toArray().tolist() == loaded.pi
-    assert nb.theta.toArray().tolist() == loaded.theta
-    # the counter sees py4j traffic: the batch path's first use loads nb/
-    with py4j_calls(spark) as calls:
-        loaded.nb_model
-    assert calls
+
+
+def test_batch_path_scores_from_nb_json(fitted, tmp_path):
+    """The JVM ``NaiveBayesModel`` of a loaded model holds exactly the
+    doubles of ``nb.json``, and a loaded model predicts what the fitted
+    one does on every test row. The directory also holds an ``nb/`` as
+    older saves wrote it, with the classes swapped: load ignores it,
+    where reading it would flip every prediction."""
+    model, test = fitted
+    path = str(tmp_path / "sentiment")
+    model.save(path)
+    swapped = SentimentModel(model.tfidf_model, model.pi[::-1], model.theta[::-1])
+    swapped._nb_model().write().save(os.path.join(path, "nb"))
+    loaded = SentimentModel.load(path)
+    with open(os.path.join(path, "nb.json")) as f:
+        saved = json.load(f)
+    nb = loaded._nb_model()
+    assert nb.pi.toArray().tolist() == saved["pi"]
+    assert nb.theta.toArray().tolist() == saved["theta"]
+
+    def predictions(m):
+        return [tuple(r) for r in m.transform(test).select("id", "prediction").orderBy("id").collect()]
+
+    expect = predictions(model)
+    assert len(expect) == N_DOCS // 5 and {p for _, p in expect} == {0.0, 1.0}
+    assert predictions(loaded) == expect
+
+
+def test_loaded_model_builds_its_batch_path_without_a_job(spark, tmp_path):
+    """Building ``transform`` on a loaded 5,000-term model runs no Spark
+    job and sends fewer than 1,000 py4j commands: the vocabulary and
+    the NB parameters cross to the JVM whole, not term by term."""
+    rng = random.Random(0)
+    terms = [f"term{i:04d}" for i in range(5000)]
+    tfidf = SklearnTfidfModel(terms, [1.0 + rng.random() for _ in terms], "__clean", "features")
+    theta = [[-1.0 - rng.random() for _ in terms] for _ in range(2)]
+    path = str(tmp_path / "sentiment")
+    SentimentModel(tfidf, [-0.7, -0.69], theta).save(path)
+    loaded = SentimentModel.load(path)
+    df = spark.createDataFrame([("term0001 term4999",)], ["text"])
+    with job_group(spark, "test.build_transform") as shape, py4j_calls(spark) as calls:
+        scored = loaded.transform(df)
+    assert shape() == (0, 0) and len(calls) < 1000
+    assert scored.first()["sentiment"] == POSITIVE
 
 
 def test_loaded_predict_one_matches_batch_path(fitted, spark, tmp_path):

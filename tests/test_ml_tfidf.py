@@ -13,7 +13,7 @@ import pytest
 from pyspark.ml.feature import StopWordsRemover
 
 from bigdata_lab4_spark.ml import SklearnTfidf, SklearnTfidfModel
-from tests.conftest import job_group
+from tests.conftest import job_group, py4j_calls
 
 DOCS = [
     ("apple banana apple",),
@@ -131,6 +131,28 @@ def test_saved_model_is_its_parameters(spark, corpus, tmp_path):
     params = json.loads(path.read_text())
     path.write_text(json.dumps({**params, "stop_words": ["the", "and"]}))
     assert SklearnTfidfModel.load(str(path)).vocabulary_ == model.vocabulary_
+
+
+def test_vocabulary_crosses_to_the_jvm_whole(spark, tmp_path):
+    """The ``CountVectorizerModel`` gets the vocabulary, in index order
+    and non-ASCII terms intact, in a few py4j commands, not one per
+    term. A ``tfidf.json`` term holding a newline, which would split
+    into two JVM terms, is refused at load, as are an empty term and
+    an empty vocabulary."""
+    terms = ["naïve", "日本語", "ß_2"] + [f"term{i:04d}" for i in range(5000)]
+    model = SklearnTfidfModel(terms, [1.0] * len(terms), "text", "features")
+    with job_group(spark, "test.tfidf_build") as shape, py4j_calls(spark) as calls:
+        stages = model._pipeline_model().stages
+    assert shape() == (0, 0) and len(calls) < 1000
+    assert stages[0].vocabulary == terms
+
+    path = tmp_path / "tfidf.json"
+    model.save(str(path))
+    params = json.loads(path.read_text())
+    for vocab in (["ab", "two\nterms"], ["ab", "", "cd"], []):
+        path.write_text(json.dumps({**params, "vocabulary": vocab}))
+        with pytest.raises(ValueError, match="the vocabulary is empty, or a term"):
+            SklearnTfidfModel.load(str(path))
 
 
 def test_empty_corpus_raises(spark):
