@@ -176,9 +176,9 @@ def insert_prediction(message: str, prediction: str, path: str) -> None:
     reference. On a 4-core host the append's median was 0.54–0.63 ms
     (over 10 and over 1,000 appends in one process), against 11–16 ms
     through Hadoop's FileSystem over py4j and ~120 ms as a one-task
-    Spark job. A high-QPS deployment batches through the streaming sink
-    (`bigdata_lab4_spark.streaming`) instead, amortizing a file over a
-    micro-batch (SURVEY §4.3, row-at-a-time insert anti-pattern).
+    Spark job. Nothing merges the files yet, so the store's file count
+    grows with the appends (SURVEY §4.3, row-at-a-time insert
+    anti-pattern).
     """
     now = datetime.datetime.now(datetime.timezone.utc)
     _write_store_file(path, {"timestamp": now, "message": message, "prediction": prediction})

@@ -58,16 +58,20 @@ MINHASH_COEFFS = (
 
 NUM_FEATURES = 1 << 18
 
+#: The murmur3 seed Spark ML's ``HashingTF`` hashes terms with, pinned
+#: by tests/test_minhash_compat.py::test_index_matches_hashing_tf.
+HASHING_TF_SEED = 42
+
 FINGERPRINT_SCHEMA = "struct<idx: array<int>, sig: array<bigint>>"
 
 
-def _make_kernel(coeffs, prime, num_features):
+def _make_kernel(coeffs, prime, num_features, seed):
     """Build the (token → index, tokens → fingerprint) kernel. Nested
     defs only — cloudpickle cannot resolve them as module attributes, so
     any closure referencing them is shipped by value."""
     mask32 = 0xFFFFFFFF
 
-    def murmur3_32(data: bytes, seed: int = 42) -> int:
+    def murmur3_32(data: bytes) -> int:
         # Canonical murmur3_x86_32 (word body + single tail mix) —
         # matches Murmur3_x86_32.hashUnsafeBytes2 / HashingTF.
         c1, c2 = 0xCC9E2D51, 0x1B873593
@@ -135,7 +139,7 @@ def _make_kernel(coeffs, prime, num_features):
 
 #: Driver-side/test API — same kernel the UDF ships.
 hashing_tf_index, doc_fingerprint = _make_kernel(
-    MINHASH_COEFFS, MINHASH_PRIME, NUM_FEATURES
+    MINHASH_COEFFS, MINHASH_PRIME, NUM_FEATURES, HASHING_TF_SEED
 )
 
 

@@ -90,11 +90,13 @@ def clean_text_py(text: str) -> str:
 def word_tokens_col(c: Column | str) -> Column:
     """sklearn's tokenization as one Catalyst expression: lowercase,
     then every run of two or more word characters. A null text raises
-    (``raise_error``) instead of yielding no tokens."""
+    (``raise_error``) instead of yielding no tokens. ``c`` appears once
+    in the expression, so a text expression passed in, such as
+    ``clean_text_col(...)``, runs once per row: Catalyst does not share
+    an expression between a ``CASE`` condition and its ``ELSE``."""
     c = F.col(c) if isinstance(c, str) else c
-    return F.when(
-        c.isNull(), F.raise_error("word_tokens_col: the text is null")
-    ).otherwise(F.regexp_extract_all(F.lower(c), F.lit(f"{_WORD}{{2,}}"), 0))
+    text = F.coalesce(c, F.raise_error("word_tokens_col: the text is null"))
+    return F.regexp_extract_all(F.lower(text), F.lit(f"{_WORD}{{2,}}"), 0)
 
 
 def word_tokens_py(text: str) -> list[str]:

@@ -2,13 +2,13 @@
 
 This is the reference's whole job, re-expressed Spark-first:
 
-* cleaning: ``clean_text`` (`/root/reference/src/utils.py:5-10`) —
-  here the codegen'd Catalyst expression chain from
-  ``functions.text.clean_text_col`` instead of ``pandas.apply``;
-* vectorization: ``TfidfVectorizer(max_features=5000,
-  stop_words="english")`` (`src/preprocess.py:40`) — here
-  :class:`~bigdata_lab4_spark.ml.tfidf.SklearnTfidf`, sparse
-  end-to-end, tokenizing with ``functions.text.word_tokens_col``;
+* cleaning and vectorization: ``clean_text`` (the reference's
+  `src/utils.py:5-10`) feeding ``TfidfVectorizer(max_features=5000,
+  stop_words="english")`` (`src/preprocess.py:40,48`) — here
+  :class:`~bigdata_lab4_spark.ml.tfidf.SklearnTfidf`, which reads the
+  ``text`` column and cleans and tokenizes it as one codegen'd Catalyst
+  expression (``functions.text.clean_text_col`` inside
+  ``word_tokens_col``) instead of ``pandas.apply``, sparse end-to-end;
 * estimator: ``MultinomialNB(alpha=1.0, fit_prior=True)``
   (`src/train.py:36-42`) — here
   ``pyspark.ml.classification.NaiveBayes(smoothing=alpha,
@@ -52,8 +52,8 @@ from pyspark.ml.linalg import DenseMatrix, Vectors
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_lab4_spark.functions.text import clean_text_col, clean_text_py, word_tokens_py
-from bigdata_lab4_spark.ml.tfidf import SklearnTfidf, SklearnTfidfModel
+from bigdata_lab4_spark.functions.text import clean_text_py, word_tokens_py
+from bigdata_lab4_spark.ml.tfidf import TEXT_COL, SklearnTfidf, SklearnTfidfModel
 
 #: Decode map from `/root/reference/src/predict.py:84-92`.
 POSITIVE, NEGATIVE, UNKNOWN = (
@@ -66,13 +66,9 @@ POSITIVE, NEGATIVE, UNKNOWN = (
 #: (`src/train.py:36-42`).
 NB_ALPHA = 1.0
 
-#: Vocabulary cap of the reference's ``TfidfVectorizer(max_features=5000)``
-#: (`src/preprocess.py:40`).
-MAX_FEATURES = 5000
-
-#: Input columns the pipeline reads: the message and its 0/1 label, as
-#: :func:`load_tweets_csv` names them.
-TEXT_COL, LABEL_COL = "text", "label"
+#: The 0/1 label column the pipeline reads beside ``TEXT_COL``, as
+#: :func:`load_tweets_csv` names it.
+LABEL_COL = "label"
 
 #: File names inside a saved model directory.
 TFIDF_FILE, NB_FILE = "tfidf.json", "nb.json"
@@ -121,8 +117,7 @@ class SentimentModel:
     def transform(self, df: DataFrame) -> DataFrame:
         """Append ``prediction`` (double) and decoded ``sentiment``
         columns. Input needs ``TEXT_COL``; label is not required."""
-        cleaned = df.withColumn("__clean", clean_text_col(TEXT_COL))
-        feats = self.tfidf_model.transform(cleaned)
+        feats = self.tfidf_model.transform(df)
         scored = self._nb_model().transform(feats)
         decoded = scored.withColumn(
             "sentiment",
@@ -130,9 +125,7 @@ class SentimentModel:
             .when(F.col("prediction") == 0.0, NEGATIVE)
             .otherwise(UNKNOWN),
         )
-        return decoded.drop(
-            "__clean", "features", "rawPrediction", "probability"
-        )
+        return decoded.drop("features", "rawPrediction", "probability")
 
     def evaluate(self, df: DataFrame) -> dict:
         """Accuracy of the batch path against ``LABEL_COL`` — the
@@ -150,10 +143,10 @@ class SentimentModel:
 
     # -- online scoring (U5) -------------------------------------------
     def predict_one(self, message: str) -> str:
-        """Single-message serving — `/root/reference/src/predict.py:73-92`
+        """Single-message serving — the reference's `src/predict.py:73-92`
         semantics: empty-guard, clean, vectorize, NB argmax, decode.
         Scores from the driver-side parameters, O(classes ×
-        max_features) floats — the standard broadcast-model serving
+        ``MAX_FEATURES``) floats — the standard broadcast-model serving
         pattern."""
         if not message:
             raise ValueError(
@@ -230,29 +223,23 @@ class SentimentPipeline:
     """Unfitted pipeline with the reference's hyperparameters
     (`src/preprocess.py:40`, `src/train.py:36`, `config.ini`
     NAIVE_BAYES section): ``MAX_FEATURES``, English stop words and
-    ``NB_ALPHA``."""
+    ``NB_ALPHA``. It reads ``TEXT_COL`` and ``LABEL_COL``; cleaning
+    happens inside the vectorizer, so the frames are passed as
+    loaded."""
 
-    def fit(
-        self, train_df: DataFrame, tfidf_fit_df: DataFrame | None = None
-    ) -> SentimentModel:
-        """Fit TF-IDF then NB.
+    def fit(self, train_df: DataFrame, tfidf_fit_df: DataFrame) -> SentimentModel:
+        """Fit TF-IDF on ``tfidf_fit_df``, then NB on ``train_df``.
 
-        ``tfidf_fit_df`` reproduces the reference's leakage quirk on
-        demand: it fits the vectorizer on the FULL dataset before the
-        train/test split (`src/preprocess.py:50-55`, SURVEY §4.3).
-        Pass the full frame there for metric parity; omit it for the
-        leak-free mode (vectorizer fit on train only).
+        The reference fits its vectorizer on the FULL dataset before
+        the train/test split (`src/preprocess.py:50-55`, SURVEY §4.3),
+        a leakage quirk: pass the full frame as ``tfidf_fit_df`` for
+        metric parity. For the leak-free mode, pass the train frame as
+        ``tfidf_fit_df``.
         """
-        fit_src = tfidf_fit_df if tfidf_fit_df is not None else train_df
-        tfidf = SklearnTfidf(
-            input_col="__clean",
-            output_col="features",
-            max_features=MAX_FEATURES,
-        ).fit(fit_src.withColumn("__clean", clean_text_col(TEXT_COL)))
-
-        train_feats = tfidf.transform(
-            train_df.withColumn("__clean", clean_text_col(TEXT_COL))
-        ).withColumn("__label_d", F.col(LABEL_COL).cast("double"))
+        tfidf = SklearnTfidf().fit(tfidf_fit_df)
+        train_feats = tfidf.transform(train_df).withColumn(
+            "__label_d", F.col(LABEL_COL).cast("double")
+        )
         nb = NaiveBayes(
             smoothing=NB_ALPHA,
             modelType="multinomial",
@@ -295,7 +282,7 @@ def load_tweets_csv(spark: SparkSession, path: str) -> DataFrame:
         .csv(path)
         .select(
             F.col("ItemID").cast("long").alias("id"),
-            F.col("Sentiment").cast("int").alias("label"),
-            F.col("SentimentText").cast("string").alias("text"),
+            F.col("Sentiment").cast("int").alias(LABEL_COL),
+            F.col("SentimentText").cast("string").alias(TEXT_COL),
         )
     )

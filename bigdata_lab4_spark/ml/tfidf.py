@@ -2,18 +2,26 @@
 
 The reference vectorizes with
 ``TfidfVectorizer(max_features=5000, stop_words="english")``
-(`/root/reference/src/preprocess.py:40`) and fits/transforms through
-``prepare_text`` (`/root/reference/src/utils.py:12-13`) — which also
+(`src/preprocess.py:40`), fed ``clean_text`` output
+only (`src/preprocess.py:48`), and fits/transforms through
+``prepare_text`` (`src/utils.py:12-13`) — which also
 calls ``.toarray()``, densifying a ~0.1%-sparse matrix into ~4 GB at
 100k rows.  That densification is the reference's actual scale
 ceiling (SURVEY §4.3); here vectors stay sparse end-to-end.
+
+The vectorizer has that one shape: it reads ``TEXT_COL``, cleans and
+tokenizes it as one Catalyst expression,
+``word_tokens_col(clean_text_col(TEXT_COL))`` (sklearn's
+``preprocessor=clean_text``; serving's twin is
+``word_tokens_py(clean_text_py(message))``), keeps ``MAX_FEATURES``
+terms and writes ``features``.
 
 sklearn semantics reproduced (all public, from the sklearn docs):
 
 * tokenization: lowercase, then ``(?u)\\b\\w\\w+\\b`` (tokens of two
   or more word chars): ``functions.text.word_tokens_col``, whose
   serving twin is ``word_tokens_py``;
-* vocabulary: top ``max_features`` terms by **corpus term
+* vocabulary: top ``MAX_FEATURES`` terms by **corpus term
   frequency**, ties at the cut broken by term; indices alphabetical,
   like sklearn's ``vocabulary_``. Spark's ``CountVectorizer(vocabSize=…)``
   ranks by corpus tf too, but indexes by rank and breaks ties by
@@ -24,13 +32,14 @@ sklearn semantics reproduced (all public, from the sklearn docs):
 * L2 row normalization.
 
 Execution is Spark-first: fitting is one term-keyed aggregation
-(corpus term frequency and document frequency together), and the
-fitted transform is the tokenizer expression, then a pure-JVM
-``PipelineModel`` of ``CountVectorizerModel → ElementwiseProduct(idf)
-→ Normalizer(p=2)`` — no Python in the transform path, so scoring
-100 TB of text never leaves codegen'd JVM operators. The model itself
-is its fitted parameters (vocabulary, idf) as Python values, saved as
-one JSON file, so loading a model runs no Spark job and no py4j call.
+(corpus term frequency and document frequency together) over the
+tokenizer expression, and the fitted transform is the same expression,
+then a pure-JVM ``PipelineModel`` of ``CountVectorizerModel →
+ElementwiseProduct(idf) → Normalizer(p=2)`` — no Python in the
+transform path, so scoring 100 TB of text never leaves codegen'd JVM
+operators. The model itself is its fitted parameters (vocabulary, idf)
+as Python values, saved as one JSON file, so loading a model runs no
+Spark job and no py4j call.
 The ``PipelineModel`` is built from them on the first ``transform``,
 in a few dozen py4j calls and no job: the vocabulary crosses to the
 JVM as one newline-joined string, split there into the ``String[]``
@@ -58,7 +67,14 @@ from pyspark.ml.util import _jvm
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_lab4_spark.functions.text import word_tokens_col
+from bigdata_lab4_spark.functions.text import clean_text_col, word_tokens_col
+
+#: The message column the vectorizer reads, as ``load_tweets_csv``
+#: names it.
+TEXT_COL = "text"
+
+#: Vocabulary cap of the reference's ``TfidfVectorizer(max_features=5000)``.
+MAX_FEATURES = 5000
 
 
 class SklearnTfidfModel:
@@ -77,19 +93,11 @@ class SklearnTfidfModel:
     from them on the first ``transform``.
     """
 
-    def __init__(
-        self,
-        vocabulary: list[str],
-        idf: list[float],
-        input_col: str,
-        output_col: str,
-    ) -> None:
+    def __init__(self, vocabulary: list[str], idf: list[float]) -> None:
         if not vocabulary or any(not t or "\n" in t for t in vocabulary):
             raise ValueError("the vocabulary is empty, or a term is empty or holds a newline")
         self.vocabulary_ = {t: i for i, t in enumerate(vocabulary)}
         self.idf_ = list(idf)
-        self.input_col = input_col
-        self.output_col = output_col
         self._pm: PipelineModel | None = None
 
     def _pipeline_model(self) -> PipelineModel:
@@ -109,15 +117,16 @@ class SklearnTfidfModel:
                         inputCol="__counts",
                         outputCol="__tfidf_raw",
                     ),
-                    Normalizer(inputCol="__tfidf_raw", outputCol=self.output_col, p=2.0),
+                    Normalizer(inputCol="__tfidf_raw", outputCol="features", p=2.0),
                 ]
             )
         return self._pm
 
     def transform(self, df: DataFrame) -> DataFrame:
-        """L2-normalized TF-IDF ``SparseVector`` column; intermediate
-        token/count columns are dropped."""
-        tokens = df.withColumn("__tokens", word_tokens_col(self.input_col))
+        """Append the L2-normalized TF-IDF ``SparseVector`` of
+        ``TEXT_COL`` as ``features``; intermediate token/count columns
+        are dropped."""
+        tokens = df.withColumn("__tokens", word_tokens_col(clean_text_col(TEXT_COL)))
         out = self._pipeline_model().transform(tokens)
         return out.drop("__tokens", "__counts", "__tfidf_raw")
 
@@ -129,61 +138,44 @@ class SklearnTfidfModel:
         Floats are written as their shortest round-trip repr, so
         :meth:`load` reads back exactly the values saved."""
         with open(path, "w") as f:
-            json.dump(
-                {
-                    "input_col": self.input_col,
-                    "output_col": self.output_col,
-                    "vocabulary": list(self.vocabulary_),
-                    "idf": self.idf_,
-                },
-                f,
-            )
+            json.dump({"vocabulary": list(self.vocabulary_), "idf": self.idf_}, f)
 
     @classmethod
     def load(cls, path: str) -> "SklearnTfidfModel":
         """Read a model :meth:`save` wrote; no Spark job, no py4j call.
-        The ``stop_words`` key of older files is ignored."""
+        The ``stop_words``, ``input_col`` and ``output_col`` keys of
+        older files are ignored."""
         with open(path) as f:
             p = json.load(f)
-        return cls(p["vocabulary"], p["idf"], p["input_col"], p["output_col"])
+        return cls(p["vocabulary"], p["idf"])
 
 
 class SklearnTfidf:
-    """TF-IDF estimator with sklearn ``TfidfVectorizer`` semantics
-    (`/root/reference/src/preprocess.py:40`, `src/utils.py:12-13`).
+    """TF-IDF estimator with the reference's one vectorizer,
+    ``TfidfVectorizer(max_features=5000, stop_words="english")`` over
+    ``clean_text`` output (`src/preprocess.py:40,48`,
+    `src/utils.py:12-13`); it takes no arguments.
 
     Fit plan (all distributed, shuffle-light):
 
-    1. tokenize (map-only, codegen);
+    1. clean and tokenize ``TEXT_COL`` (map-only, codegen);
     2. one term-keyed aggregation: each document emits
        ``(term, tf=1, df=0)`` per token and ``(term, tf=0, df=1)``
        per distinct token, stop words are filtered out (an ``InSet``
        hash lookup), and ``groupBy(term)`` sums both —
        partial aggregation map-side, so the one shuffle carries one
        row per term per partition, never document bodies;
-    3. top-``max_features`` by ``(corpus_tf desc, term asc)`` —
+    3. top-``MAX_FEATURES`` by ``(corpus_tf desc, term asc)`` —
        ``TakeOrderedAndProject``, no global sort.
 
     The only driver-side materialization is the fitted parameter set
-    itself — ≤ ``max_features`` (term, df) rows, the same bounded
+    itself — ≤ ``MAX_FEATURES`` (term, df) rows, the same bounded
     collect ``pyspark.ml``'s own ``CountVectorizer.fit`` performs.
     """
 
-    def __init__(
-        self,
-        input_col: str = "text",
-        output_col: str = "features",
-        max_features: int = 5000,
-    ) -> None:
-        if max_features < 1:
-            raise ValueError("max_features must be >= 1")
-        self.input_col = input_col
-        self.output_col = output_col
-        self.max_features = max_features
-
     def fit(self, df: DataFrame) -> SklearnTfidfModel:
         stop_words = StopWordsRemover.loadDefaultStopWords("english")
-        tokens = df.select(word_tokens_col(self.input_col).alias("__tokens"))
+        tokens = df.select(word_tokens_col(clean_text_col(TEXT_COL)).alias("__tokens"))
 
         n_docs = tokens.count()
         if n_docs == 0:
@@ -208,10 +200,10 @@ class SklearnTfidf:
             .groupBy("term")
             .agg(F.sum("tf").alias("corpus_tf"), F.sum("df").alias("df"))
         )
-        # Fitted-parameter collect: ≤ max_features rows (see class doc).
+        # Fitted-parameter collect: ≤ MAX_FEATURES rows (see class doc).
         top = (
             term_stats.orderBy(F.desc("corpus_tf"), F.asc("term"))
-            .limit(self.max_features)
+            .limit(MAX_FEATURES)
             .collect()
         )
         if not top:
@@ -224,4 +216,4 @@ class SklearnTfidf:
             math.log((1.0 + n_docs) / (1.0 + vocab_df[t])) + 1.0 for t in vocab
         ]
 
-        return SklearnTfidfModel(vocab, idf, self.input_col, self.output_col)
+        return SklearnTfidfModel(vocab, idf)

@@ -24,7 +24,7 @@ constructor arguments), so the route is intentionally absent.
 
 Scale notes: serving is a *driver-side* concern. ``predict_one``
 scores against the broadcast-sized local parameter copy (O(classes ×
-max_features) floats) — no Spark job per request, so request latency
+``MAX_FEATURES``) floats) — no Spark job per request, so request latency
 is microseconds of Python, not a cluster round-trip. Only the audit
 trail touches storage: the per-request parquet append mirrors the
 reference's per-request ClickHouse insert. Each append is one parquet
@@ -35,21 +35,19 @@ newest ``limit`` of those files. No route runs a Spark job or makes a
 py4j call. The store is created once, when the API starts, so
 ``/predictions/`` on a fresh store is an empty list. A failed append is
 logged and counted (``failed_appends``), and the prediction is still
-served; every 500 is logged with its traceback. A high-QPS deployment
-replaces the per-request append with the micro-batching streaming sink
-(:mod:`bigdata_lab4_spark.streaming`).
+served; every 500 is logged with its traceback. Every append adds a
+file and nothing merges them, so the store's file count grows with the
+requests served.
 
 Threads: each request runs on one long-lived ``ThreadPoolExecutor`` of
-default size, not on a new thread of its own as in
-``ThreadingHTTPServer``, which saves a thread start per request. In the
-serve benchmark (``perfbench/run.py --workload serve --seconds 5``, 4
-cores, interleaved pairs), a plain ``ThreadingHTTPServer`` made
-``wall_s`` worse in 5 of 6 pairs (seeds 911–916, median 0.0130 →
-0.0153 s) and in 8 of 10 on a rerun (seeds 911–920, 0.0176 → 0.0185 s,
-a gap inside the run-to-run spread), and served fewer requests (8,405
-against 8,730 over those ten runs). The pool bounds the
-requests in flight: a client that holds its connection open without
-sending holds a pool thread. ``server_close()`` shuts the pool down.
+default size (``min(32, cpus + 4)`` threads), not on a new thread of
+its own as in ``ThreadingHTTPServer``. Scoring takes microseconds, so a
+thread start is a large share of a request; the pool saves it. Its
+known limit: the pool bounds the requests in flight, and a client that
+holds its connection open without sending holds a pool thread until it
+closes. As many such clients as the pool has threads (8 on a 4-core
+host) stop the service; a new thread per connection would keep
+answering. ``server_close()`` shuts the pool down.
 """
 
 from __future__ import annotations

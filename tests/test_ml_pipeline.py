@@ -161,7 +161,7 @@ def test_loaded_model_builds_its_batch_path_without_a_job(spark, tmp_path):
     the NB parameters cross to the JVM whole, not term by term."""
     rng = random.Random(0)
     terms = [f"term{i:04d}" for i in range(5000)]
-    tfidf = SklearnTfidfModel(terms, [1.0 + rng.random() for _ in terms], "__clean", "features")
+    tfidf = SklearnTfidfModel(terms, [1.0 + rng.random() for _ in terms])
     theta = [[-1.0 - rng.random() for _ in terms] for _ in range(2)]
     path = str(tmp_path / "sentiment")
     SentimentModel(tfidf, [-0.7, -0.69], theta).save(path)
@@ -238,7 +238,7 @@ def test_null_text_raises_in_fit_and_transform(fitted, spark):
     model, _ = fitted
     df = spark.createDataFrame([(1, 1, "glad0 glad1"), (2, 0, None)], "id long, label int, text string")
     with pytest.raises(Exception, match="word_tokens_col: the text is null"):
-        SentimentPipeline().fit(df)
+        SentimentPipeline().fit(df, tfidf_fit_df=df)
     with pytest.raises(Exception, match="word_tokens_col: the text is null"):
         model.transform(df).collect()
 
@@ -249,7 +249,7 @@ def test_pipeline_on_tweets_fixture(spark, tmp_path):
     and scores end-to-end."""
     df = load_tweets_csv(spark, os.path.join(FIXTURES, "tweets.csv"))
     assert df.columns == ["id", "label", "text"]
-    model = SentimentPipeline().fit(df)
+    model = SentimentPipeline().fit(df, tfidf_fit_df=df)
     scored = model.transform(df)
     assert scored.count() == df.count()
     assert set(r["sentiment"] for r in scored.collect()) <= {POSITIVE, NEGATIVE}

@@ -12,7 +12,7 @@ import math
 import pytest
 from pyspark.ml.feature import StopWordsRemover
 
-from bigdata_lab4_spark.ml import SklearnTfidf, SklearnTfidfModel
+from bigdata_lab4_spark.ml import SklearnTfidf, SklearnTfidfModel, tfidf
 from tests.conftest import job_group, py4j_calls
 
 DOCS = [
@@ -27,12 +27,8 @@ def corpus(spark):
     return spark.createDataFrame(DOCS, ["text"])
 
 
-def _fit(corpus, **kw):
-    return SklearnTfidf(input_col="text", output_col="features", **kw).fit(corpus)
-
-
 def test_idf_matches_sklearn_formula(corpus):
-    model = _fit(corpus)
+    model = SklearnTfidf().fit(corpus)
     # N=3; df: apple 1, banana 2, cherry 2, durian 1
     expect = {
         "apple": math.log(4 / 2) + 1,
@@ -49,8 +45,12 @@ def test_idf_matches_sklearn_formula(corpus):
 
 
 def test_transform_l2_normalized_tfidf(corpus):
-    model = _fit(corpus)
-    rows = {r["text"]: r["features"] for r in model.transform(corpus).collect()}
+    model = SklearnTfidf().fit(corpus)
+    out = model.transform(corpus)
+    # the cleaning chain (one translate) runs once per row, not once
+    # per reference to it in the tokenizer
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("translate(") == 1
+    rows = {r["text"]: r["features"] for r in out.collect()}
     v = rows["apple banana apple"].toArray()
     raw = [2 * (math.log(2) + 1), 1 * (math.log(4 / 3) + 1), 0.0, 0.0]
     norm = math.sqrt(sum(x * x for x in raw))
@@ -59,11 +59,12 @@ def test_transform_l2_normalized_tfidf(corpus):
     assert sum(x * x for x in v) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_max_features_ranked_by_corpus_tf(corpus):
+def test_max_features_ranked_by_corpus_tf(corpus, monkeypatch):
     # corpus_tf: cherry 3, apple 2, banana 2, durian 1.
     # top-2 = cherry + (tf tie apple<banana → apple); NOT by doc
     # frequency, which would prefer banana (df 2) over apple (df 1).
-    model = _fit(corpus, max_features=2)
+    monkeypatch.setattr(tfidf, "MAX_FEATURES", 2)
+    model = SklearnTfidf().fit(corpus)
     assert model.vocabulary_ == {"apple": 0, "cherry": 1}
 
 
@@ -71,7 +72,7 @@ def test_stop_words_and_short_tokens_dropped(spark):
     # The second doc has no tokens left after stop-word removal; sklearn
     # still counts it in N, so every idf is ln((1+2)/(1+1)) + 1.
     df = spark.createDataFrame([("The cat and a dog sat",), ("The and a",)], ["text"])
-    model = _fit(df)
+    model = SklearnTfidf().fit(df)
     vocab = set(model.vocabulary_)
     assert "the" not in vocab and "and" not in vocab  # stop words
     assert "a" not in vocab  # sklearn token pattern needs >=2 chars
@@ -85,21 +86,21 @@ def test_vocabulary_holds_no_stop_word(spark):
     terms."""
     stop = StopWordsRemover.loadDefaultStopWords("english")
     df = spark.createDataFrame([(" ".join(stop),), (" ".join(stop) + " cat dog",)], ["text"])
-    vocab = set(_fit(df).vocabulary_)
+    vocab = set(SklearnTfidf().fit(df).vocabulary_)
     assert {"cat", "dog"} <= vocab and not vocab & set(stop)
 
 
 def test_fit_runs_one_aggregation(spark, corpus):
     """``tokens.count()`` and the term-keyed aggregation with its
-    top-``max_features`` collect run a shuffle-map job and a result job
+    top-``MAX_FEATURES`` collect run a shuffle-map job and a result job
     each; a second aggregation joined on term would add two more."""
     with job_group(spark, "test.tfidf_fit") as shape:
-        _fit(corpus)
+        SklearnTfidf().fit(corpus)
     assert shape()[0] == 4
 
 
 def test_save_load_roundtrip(corpus, tmp_path):
-    model = _fit(corpus)
+    model = SklearnTfidf().fit(corpus)
     path = str(tmp_path / "tfidf")
     model.save(path)
     loaded = SklearnTfidfModel.load(path)
@@ -115,22 +116,25 @@ def test_saved_model_is_its_parameters(spark, corpus, tmp_path):
     """The model saves as one JSON file of its fitted parameters; loading
     it runs no Spark job, and the PipelineModel is built on the first
     transform."""
-    model = _fit(corpus)
+    model = SklearnTfidf().fit(corpus)
     path = tmp_path / "tfidf.json"
     model.save(str(path))
-    assert json.loads(path.read_text())["vocabulary"] == ["apple", "banana", "cherry", "durian"]
+    params = json.loads(path.read_text())
+    assert params.keys() == {"vocabulary", "idf"}
+    assert params["vocabulary"] == ["apple", "banana", "cherry", "durian"]
     with job_group(spark, "test.tfidf_load") as shape:
         loaded = SklearnTfidfModel.load(str(path))
     assert shape() == (0, 0) and loaded._pm is None
     assert list(loaded.vocabulary_.items()) == list(model.vocabulary_.items())
     assert loaded.idf_ == model.idf_
-    assert (loaded.input_col, loaded.output_col) == ("text", "features")
 
-    # files written before the stop list left the model carry it; load
-    # ignores it
-    params = json.loads(path.read_text())
-    path.write_text(json.dumps({**params, "stop_words": ["the", "and"]}))
-    assert SklearnTfidfModel.load(str(path)).vocabulary_ == model.vocabulary_
+    # files written before the stop list and the column names left the
+    # model carry them; load ignores them
+    old = {**params, "stop_words": ["the", "and"], "input_col": "__clean", "output_col": "features"}
+    path.write_text(json.dumps(old))
+    loaded = SklearnTfidfModel.load(str(path))
+    assert list(loaded.vocabulary_.items()) == list(model.vocabulary_.items())
+    assert loaded.idf_ == model.idf_
 
 
 def test_vocabulary_crosses_to_the_jvm_whole(spark, tmp_path):
@@ -140,7 +144,7 @@ def test_vocabulary_crosses_to_the_jvm_whole(spark, tmp_path):
     into two JVM terms, is refused at load, as are an empty term and
     an empty vocabulary."""
     terms = ["naïve", "日本語", "ß_2"] + [f"term{i:04d}" for i in range(5000)]
-    model = SklearnTfidfModel(terms, [1.0] * len(terms), "text", "features")
+    model = SklearnTfidfModel(terms, [1.0] * len(terms))
     with job_group(spark, "test.tfidf_build") as shape, py4j_calls(spark) as calls:
         stages = model._pipeline_model().stages
     assert shape() == (0, 0) and len(calls) < 1000
@@ -158,4 +162,4 @@ def test_vocabulary_crosses_to_the_jvm_whole(spark, tmp_path):
 def test_empty_corpus_raises(spark):
     empty = spark.createDataFrame([], "text string")
     with pytest.raises(ValueError):
-        SklearnTfidf(input_col="text").fit(empty)
+        SklearnTfidf().fit(empty)

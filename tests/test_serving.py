@@ -57,7 +57,7 @@ def tiny_model(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, ["id", "label", "text"])
-    return SentimentPipeline().fit(df)
+    return SentimentPipeline().fit(df, tfidf_fit_df=df)
 
 
 @pytest.fixture()
