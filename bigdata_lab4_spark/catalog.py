@@ -20,20 +20,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: The driver's synthetic tables (TESTDATA.md / FIXTURES.md §2).
-TABLES: tuple[str, ...] = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 #: Declared schemas of the tables, in Spark DDL: what Spark infers from
 #: every testdata generation's footers (tests/test_catalog.py pins
 #: this), except ``events.ts``. pyarrow's zone-less ``timestamp[us]``
@@ -59,6 +45,9 @@ SCHEMAS: dict[str, str] = {
     "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
     "embeddings": "vec_id bigint, embedding array<float>, label int",
 }
+
+#: The synthetic tables (TESTDATA.md / FIXTURES.md §2), in declaration order.
+TABLES: tuple[str, ...] = tuple(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

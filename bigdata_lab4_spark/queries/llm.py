@@ -123,19 +123,39 @@ def l02_jaccard_pairs(spark, sf_dir):
     return scored.orderBy(F.desc("jaccard"), "d1", "d2").limit(20)
 
 
-def _salted_band_join(spark, probe, build):
-    """Salted shuffled hash join of two band tables on (band, val) — the
-    candidate join of l02b and l07b (guide §2.5/§3.1). Each ``probe`` row
-    takes one salt from its ``d1``; each ``build`` row is replicated over
-    all k salts; the join key becomes (band, val, salt).
+def _first_band(key: str, n: int, differ) -> str:
+    """SQL predicate: emit a candidate pair only from the FIRST of its
+    ``n`` bands whose values agree. A pair collides in several bands but
+    must be emitted once; keying the emission to the first colliding
+    band (``key``, 0-based) reproduces a pair-``distinct`` without a
+    second shuffle. ``differ(b)`` is SQL saying band ``b``'s values
+    differ. Short-circuits after ~1 probe on average; all native,
+    codegen'd. Used by l02b, l07b and l03b, and by l03b's oracle."""
+    return " AND ".join(f"({key} < {b + 1} OR {differ(b)})" for b in range(n - 1))
 
-    A hot (band, val) bucket is a single join key, and AQE skew handling
-    splits oversized partitions, never one key: unsalted, one reducer
-    would do a hot bucket's whole probe×build work. Every candidate pair
-    still meets exactly once (on its probe row's salt), so the pair set is
-    the unsalted join's — tests/test_minhash_compat.py checks both callers
-    against independent DuckDB references at sf0.1. k is the power of two
-    at or below clamp(defaultParallelism, 4, 16): it multiplies the build
+
+def _band_pairs(spark, bands, carry, n_bands, differ):
+    """The candidate pairs of a banded LSH self-join, each emitted once —
+    the candidate stage of l02b and l07b (guide §2.5/§3.1).
+
+    ``bands`` holds ``(doc_id, band, val, *carry)`` rows, one per band
+    of each document. Two documents are a candidate pair when they agree
+    in some band. The result has ``d1 < d2``, band, val, salt and each
+    carry column ``c`` as ``c1`` (d1's) and ``c2`` (d2's); ``differ(b)``
+    is SQL over those saying band ``b``'s signature values differ, so
+    each pair comes from its first colliding band only (:func:`_first_band`).
+    Callers add their verify step.
+
+    The join is salted: each ``d1`` row takes one salt from its doc id,
+    each ``d2`` row is replicated over all k salts, and the join key is
+    (band, val, salt). A hot (band, val) bucket is a single join key,
+    and AQE skew handling splits oversized partitions, never one key:
+    unsalted, one reducer would do a hot bucket's whole probe×build
+    work. Every candidate pair still meets exactly once (on its ``d1``
+    row's salt), so the pair set is the unsalted join's —
+    tests/test_minhash_compat.py checks both callers against
+    independent DuckDB references at sf0.1. k is the power of two at or
+    below clamp(defaultParallelism, 4, 16): it multiplies the build
     side's shuffle bytes (band metadata, never payloads), so it stays
     bounded and is not a function of cluster size.
 
@@ -152,34 +172,39 @@ def _salted_band_join(spark, probe, build):
       coalescing, which sees only the few MB of band rows — not the
       millions of candidate probes downstream — and would merge the
       verify stage onto a few cores.
-    * The SHUFFLE_HASH hint makes the probe side (k× smaller than the
+    * The SHUFFLE_HASH hint makes the ``d1`` side (k× smaller than the
       replicated side) the hash table. The scale it assumes: one task's
       memory holds a hot bucket's probe rows split k ways. The hint also
       stops AQE from turning the join into a broadcast of the whole band
       table, which is O(corpus) on every executor.
+    * ``d1 < d2`` and the first-band test are one filter, with ``d1 <
+      d2`` first, so it leads the join condition and runs before the
+      per-band compares.
     """
     par = spark.sparkContext.defaultParallelism
     k = max(4, min(16, par))
     while k & (k - 1):  # round down to a power of two
         k &= k - 1
-    probe = probe.withColumn(
+
+    def side(i):
+        return bands.select(
+            F.col("doc_id").alias(f"d{i}"),
+            *[F.col(c).alias(f"{c}{i}") for c in carry],
+            "band",
+            "val",
+        )
+
+    probe = side(1).withColumn(
         "salt", F.xxhash64("d1").bitwiseAND(F.lit(k - 1)).cast("int")
     )
-    build = build.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1))))
+    build = side(2).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1))))
     probe = probe.repartition(par, "band", "val", "salt")
     build = build.repartition(par, "band", "val", "salt")
-    return probe.hint("shuffle_hash").join(build, ["band", "val", "salt"])
-
-
-def _first_band(key: str, n: int, differ) -> str:
-    """SQL predicate: emit a candidate pair only from the FIRST of its
-    ``n`` bands whose values agree. A pair collides in several bands but
-    must be emitted once; keying the emission to the first colliding
-    band (``key``, 0-based) reproduces a pair-``distinct`` without a
-    second shuffle. ``differ(b)`` is SQL saying band ``b``'s values
-    differ. Short-circuits after ~1 probe on average; all native,
-    codegen'd. Used by l02b, l07b and l03b, and by l03b's oracle."""
-    return " AND ".join(f"({key} < {b + 1} OR {differ(b)})" for b in range(n - 1))
+    return (
+        probe.hint("shuffle_hash")
+        .join(build, ["band", "val", "salt"])
+        .filter(F.expr(f"d1 < d2 AND {_first_band('band', n_bands, differ)}"))
+    )
 
 
 #: ``approxSimilarityJoin``'s distance threshold: pairs with Jaccard
@@ -198,9 +223,9 @@ def minhash_lsh_pairs(spark, sf_dir):
     doubles): tests/test_minhash_compat.py pins it against the model at
     sf0.001 and against an independent DuckDB reference at sf0.1. The
     per-document fingerprint is computed once, Arrow-batched
-    (functions/minhash.py); candidates come from ``_salted_band_join``,
-    with first-band dedup and the index-set Jaccard as native
-    expressions, so only true result pairs materialize."""
+    (functions/minhash.py); candidates come from ``_band_pairs``, and
+    the index-set Jaccard verify is a native expression, so only true
+    result pairs materialize."""
     from bigdata_lab4_spark.functions.minhash import (
         MINHASH_COEFFS,
         minhash_fingerprint_udf,
@@ -244,20 +269,12 @@ def minhash_lsh_pairs(spark, sf_dir):
     # row that can never match the equi-join.
     # 64-bit SET MASKS for the per-pair verify: when the GLOBAL index
     # dictionary fits 64 bits, each doc's index set becomes one BIGINT
-    # and |A∩B| one codegen'd ``bit_count(m1 & m2)`` — the same integers,
-    # hence bit-identical Jaccard doubles. The dictionary probe is
+    # and |A∩B| one codegen'd ``bit_count(mask1 & mask2)`` — the same
+    # integers, hence bit-identical Jaccard doubles. The dictionary probe is
     # bounded at any scale: the 65 smallest distinct indices via
     # distinct + TakeOrdered; 65 rows ⇒ vocabulary > 64 ⇒ masks stay
     # null and the exact array path runs (pinned by
     # tests/test_minhash_compat.py::test_mask_fallback_above_64_vocab).
-    # explode_OUTER + nulls-last, not explode: the non-outer generator
-    # infers size(idx)>0 / isnotnull(idx) filters that push below the
-    # fingerprint exchange, making this subtree differ from the band
-    # branches' and disabling the exchange reuse that keeps the Arrow
-    # fingerprint pass single-evaluated. The one null row an empty
-    # corpus contributes sorts last, so it can only occupy a limit slot
-    # when fewer than 65 distinct indices exist — and collect_list drops
-    # it — so the dictionary stays complete exactly when it is trusted.
     # The when() is a value-level no-op (doc_id is non-null by the fp
     # filter, sig is never null from the UDF) whose only job is to
     # REFERENCE doc_id and sig: column pruning otherwise narrows this
@@ -266,7 +283,7 @@ def minhash_lsh_pairs(spark, sf_dir):
     # fingerprint pass runs again just to list distinct indices.
     vocab = (
         fp.select(
-            F.explode_outer(
+            F.explode(
                 F.when(
                     F.col("doc_id").isNotNull() & F.col("sig").isNotNull(),
                     F.col("idx"),
@@ -274,7 +291,7 @@ def minhash_lsh_pairs(spark, sf_dir):
             ).alias("i")
         )
         .distinct()
-        .orderBy(F.col("i").asc_nulls_last())
+        .orderBy("i")
         .limit(65)
         .agg(F.sort_array(F.collect_list("i")).alias("dict"))
     )
@@ -303,24 +320,6 @@ def minhash_lsh_pairs(spark, sf_dir):
         "doc_id", "nset", "mask", "idx", "sig",
         F.posexplode_outer("sig").alias("band", "val"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("d1"),
-        F.col("nset").alias("n1"),
-        F.col("mask").alias("m1"),
-        F.col("idx").alias("i1"),
-        F.col("sig").alias("s1"),
-        "band",
-        "val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("d2"),
-        F.col("nset").alias("n2"),
-        F.col("mask").alias("m2"),
-        F.col("idx").alias("i2"),
-        F.col("sig").alias("s2"),
-        "band",
-        "val",
-    )
     # |A∩B| / |A∪B| over HashingTF index sets — exactly
     # MinHashLSHModel.keyDistance (intersection/union sizes as doubles,
     # 1 - i/u), exact integers so the doubles are bit-identical —
@@ -328,35 +327,18 @@ def minhash_lsh_pairs(spark, sf_dir):
     # intersection otherwise (lazy CASE branch, never both).
     inter = (
         F.when(
-            F.col("m1").isNull(), F.size(F.array_intersect("i1", "i2"))
+            F.col("mask1").isNull(), F.size(F.array_intersect("idx1", "idx2"))
         )
-        .otherwise(F.bit_count(F.col("m1").bitwiseAND(F.col("m2"))))
+        .otherwise(F.bit_count(F.col("mask1").bitwiseAND(F.col("mask2"))))
         .cast("double")
     )
-    union = F.col("n1") + F.col("n2") - inter
-    scored = (
-        _salted_band_join(spark, a, b)
-        .filter(F.col("d1") < F.col("d2"))
-        .filter(
-            F.expr(_first_band("band", len(MINHASH_COEFFS), lambda b: f"s1[{b}] != s2[{b}]"))
-        )
-        .select(
-            "d1",
-            "d2",
-            (F.lit(1.0) - inter / union).alias("jaccard_dist"),
-            # Pushdown barrier (guide §4.4's duplication trap, native
-            # flavor): without it the threshold filter is pushed below
-            # this projection and the O(|A|+|B|) array_intersect runs
-            # TWICE per candidate — once for the filter, once for the
-            # rounded output (no cross-operator CSE). One unused
-            # non-deterministic column keeps the filter above, so the
-            # intersection is evaluated exactly once per pair.
-            F.monotonically_increasing_id().alias("_no_pushdown"),
-        )
+    dist = F.lit(1.0) - inter / (F.col("nset1") + F.col("nset2") - inter)
+    pairs = _band_pairs(
+        spark, bands, ["nset", "mask", "idx", "sig"], len(MINHASH_COEFFS),
+        lambda b: f"sig1[{b}] != sig2[{b}]",
     )
-    return (
-        scored.filter(F.col("jaccard_dist") < MINHASH_THRESHOLD)
-        .select("d1", "d2", F.round("jaccard_dist", 6).alias("jaccard_dist"))
+    return pairs.filter(dist < MINHASH_THRESHOLD).select(
+        "d1", "d2", F.round(dist, 6).alias("jaccard_dist")
     )
 
 
@@ -772,14 +754,39 @@ def l06_embedding_math(spark, sf_dir):
 
 # -- L7: SimHash near-dup (deterministic LSH — no seed, oracle-able) ----
 
-#: 60-bit SimHash from md5-derived token hashes. md5 is computed
-#: identically by Spark and DuckDB (UTF-8 bytes), and 15 hex chars =
-#: 60 bits fit a signed BIGINT on both engines, so the whole
-#: fingerprint — unlike seeded MinHash (l02b) — is bit-for-bit
-#: reproducible in the oracle.
-def simhash_fingerprints(spark, sf_dir):
-    """(doc_id, fp) for every non-null document — shared by l07,
-    l07b and the recall tests.
+_SIMHASH_ORACLE_FP = """
+        SELECT doc_id,
+               CAST(coalesce(list_sum(list_transform(range(0, 60), i ->
+                   CASE WHEN 2 * len(list_filter(hs, h -> (h >> i) & 1 = 1)) > len(hs)
+                        THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)), 0)
+                    AS BIGINT) AS fp
+        FROM (
+            SELECT doc_id,
+                   list_transform(
+                       list_distinct(list_filter(regexp_split_to_array(text, '\\s+'),
+                                                 t -> t != '')),
+                       t -> CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)) AS hs
+            FROM documents WHERE text IS NOT NULL
+        )
+"""
+
+
+@query(
+    "l07_simhash",
+    oracle=_SIMHASH_ORACLE_FP,
+    doc="L2/SimHash fingerprints — 60-bit per-doc signature via per-bit "
+    "token-hash majority vote: a map-side partial aggregate, then one "
+    "shuffle of 61 longs per document. Deterministic, so bit-for-bit "
+    "oracle-checked, unlike seeded MinHash.",
+)
+def l07_simhash(spark, sf_dir):
+    """(doc_id, fp) for every non-null document — l07, and l07b's input.
+
+    60-bit SimHash from md5-derived token hashes. md5 is computed
+    identically by Spark and DuckDB (UTF-8 bytes), and 15 hex chars =
+    60 bits fit a signed BIGINT on both engines, so the whole
+    fingerprint — unlike seeded MinHash (l02b) — is bit-for-bit
+    reproducible in the oracle.
 
     Bit-identical to the per-bit majority definition (``2*|{h: bit i
     set}| > |hs|`` over the distinct-token md5 hashes), but computed
@@ -817,32 +824,10 @@ def simhash_fingerprints(spark, sf_dir):
     return counted.select("doc_id", F.expr(fp_expr).alias("fp"))
 
 
-_SIMHASH_ORACLE_FP = """
-        SELECT doc_id,
-               CAST(coalesce(list_sum(list_transform(range(0, 60), i ->
-                   CASE WHEN 2 * len(list_filter(hs, h -> (h >> i) & 1 = 1)) > len(hs)
-                        THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)), 0)
-                    AS BIGINT) AS fp
-        FROM (
-            SELECT doc_id,
-                   list_transform(
-                       list_distinct(list_filter(regexp_split_to_array(text, '\\s+'),
-                                                 t -> t != '')),
-                       t -> CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)) AS hs
-            FROM documents WHERE text IS NOT NULL
-        )
-"""
-
-
-@query(
-    "l07_simhash",
-    oracle=_SIMHASH_ORACLE_FP,
-    doc="L2/SimHash fingerprints — 60-bit per-doc signature via per-bit "
-    "token-hash majority vote. Map-only (no shuffle); deterministic, so "
-    "bit-for-bit oracle-checked, unlike seeded MinHash.",
-)
-def l07_simhash(spark, sf_dir):
-    return simhash_fingerprints(spark, sf_dir)
+def _simhash_band_differs(b: int) -> str:
+    # band 0 needs no shift; Catalyst would keep a shiftright(…, 0)
+    xor = "(fp1 ^ fp2)" if b == 0 else f"shiftright(fp1 ^ fp2, {15 * b})"
+    return f"({xor} & 32767) != 0"
 
 
 @query(
@@ -871,27 +856,13 @@ def l07_simhash(spark, sf_dir):
     "deterministic LSH, so the oracle checks the complete pipeline.",
 )
 def l07b_simhash_neardup(spark, sf_dir):
-    return simhash_neardup_pairs(spark, sf_dir)
-
-
-def _simhash_band_differs(b: int) -> str:
-    # band 0 needs no shift; Catalyst would keep a shiftright(…, 0)
-    xor = "(fp1 ^ fp2)" if b == 0 else f"shiftright(fp1 ^ fp2, {15 * b})"
-    return f"({xor} & 32767) != 0"
-
-
-def simhash_neardup_pairs(spark, sf_dir):
-    # Banded candidate JOIN on (band, val): 4 band rows of 16 bytes per
-    # document — keys and metadata, never payloads (guide §2.3, §8).
-    # The Hamming ≤ 6 verify and the first-band dedup (a pair is
-    # emitted only from the FIRST band the two fingerprints collide
-    # in — replaces a pair-distinct shuffle) run as join residual
-    # conditions: codegen'd bit ops, evaluated per probe match, so
-    # only final result pairs materialize. Both join branches hang below
-    # the fingerprint aggregate's exchange, which runs once (see
-    # _salted_band_join).
-    fp = simhash_fingerprints(spark, sf_dir)
-    bands = fp.select(
+    # 4 band rows of 16 bytes per document — keys and metadata, never
+    # payloads (guide §2.3, §8). The Hamming ≤ 6 verify runs in the join
+    # condition after _band_pairs' own filter: codegen'd bit ops per
+    # probe match, so only final result pairs materialize. Both join
+    # sides hang below the fingerprint aggregate's exchange, which runs
+    # once (see _band_pairs).
+    bands = l07_simhash(spark, sf_dir).select(
         "doc_id", "fp", F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band")
     ).select(
         "doc_id",
@@ -899,28 +870,11 @@ def simhash_neardup_pairs(spark, sf_dir):
         "band",
         F.expr("shiftright(fp, 15 * band) & 32767").alias("val"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("d1"), F.col("fp").alias("fp1"), "band", "val"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("fp").alias("fp2"), "band", "val"
-    )
-    cand = (
-        _salted_band_join(spark, a, b)
-        .filter(F.col("d1") < F.col("d2"))
-        .filter(
-            F.expr(
-                "bit_count(fp1 ^ fp2) <= 6 AND "
-                + _first_band("band", 4, _simhash_band_differs)
-            )
-        )
-    )
+    hamming = F.bit_count(F.col("fp1").bitwiseXOR(F.col("fp2")))
     return (
-        cand.select(
-            "d1",
-            "d2",
-            F.bit_count(F.col("fp1").bitwiseXOR(F.col("fp2"))).alias("hamming"),
-        )
+        _band_pairs(spark, bands, ["fp"], 4, _simhash_band_differs)
+        .filter(hamming <= 6)
+        .select("d1", "d2", hamming.alias("hamming"))
         .orderBy("hamming", "d1", "d2")
     )
 

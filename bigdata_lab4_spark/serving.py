@@ -42,18 +42,25 @@ requests served.
 Threads: each request runs on one long-lived ``ThreadPoolExecutor`` of
 default size (``min(32, cpus + 4)`` threads), not on a new thread of
 its own as in ``ThreadingHTTPServer``. Scoring takes microseconds, so a
-thread start is a large share of a request; the pool saves it. Its
-known limit: the pool bounds the requests in flight, and a client that
-holds its connection open without sending holds a pool thread until it
-closes. As many such clients as the pool has threads (8 on a 4-core
-host) stop the service; a new thread per connection would keep
-answering. ``server_close()`` shuts the pool down.
+thread start is a large share of a request; the pool saves it. The pool
+bounds the requests in flight, and a client that holds its connection
+open without sending holds a pool thread. Each connection's socket
+therefore has a read timeout, :data:`READ_TIMEOUT_S` (the reference's
+uvicorn closes an idle keep-alive connection after the same 5 s): a
+client that sends nothing, or stops part-way through its request body,
+is dropped quietly when it runs out, so as many idle clients as
+the pool has threads (8 on a 4-core host) delay the service by at most
+that long instead of stopping it. Nothing yet bounds the queue of
+accepted connections or counts the dropped ones. A client that leaves
+before its response is written is logged as one warning, not as a
+failed route. ``server_close()`` shuts the pool down.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -68,6 +75,9 @@ from bigdata_lab4_spark.engine import insert_prediction, top_k_predictions
 
 logger = logging.getLogger(__name__)
 
+#: Seconds a connection may sit without sending before it is dropped.
+READ_TIMEOUT_S = 5
+
 
 class _PooledHTTPServer(ThreadingHTTPServer):
     """``ThreadingHTTPServer`` that runs each request on one long-lived
@@ -81,6 +91,17 @@ class _PooledHTTPServer(ThreadingHTTPServer):
         # process_request_thread reports the request's errors and closes
         # its socket itself, so the future holds no result to read
         self.pool.submit(self.process_request_thread, request, client_address)
+
+    def handle_error(self, request, client_address) -> None:
+        # an exception that escaped the handler, in flight: a route's
+        # own failures are answered inside it, so this is a client that
+        # left mid-request or before its response was written
+        # (socketserver's default prints a traceback to stderr)
+        exc = sys.exc_info()[1]
+        logger.warning(
+            "connection from %s:%s ended: %r", *client_address[:2], exc,
+            exc_info=not isinstance(exc, ConnectionError),
+        )
 
     def server_close(self) -> None:
         super().server_close()
@@ -166,6 +187,8 @@ class SentimentAPI:
         api = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = READ_TIMEOUT_S
+
             def log_message(self, fmt, *args):  # quiet test output
                 pass
 
@@ -194,12 +217,17 @@ class SentimentAPI:
                         n = int(self.headers.get("Content-Length", 0))
                         payload = json.loads(self.rfile.read(n) or b"{}")
                         result = api.predict(payload.get("message", ""))
-                        self._json(200, {"sentiment": result})
+                    except (ConnectionError, TimeoutError):
+                        # the body read: a client that left or stalled is
+                        # dropped (handle_error, or quietly on timeout)
+                        raise
                     except Exception:
                         # reference: any failure → 500 "Prediction
                         # failed" (`src/app.py:85-87`)
                         logger.exception("POST /predict/ failed")
                         self._json(500, {"detail": "Prediction failed"})
+                    else:
+                        self._json(200, {"sentiment": result})
                 elif route == "/predictions":
                     raw = parse_qs(parsed.query).get("limit", ["10"])[0]
                     # validation failure is the client's fault → 422,
@@ -239,12 +267,14 @@ class SentimentAPI:
                         )
                         return
                     try:
-                        self._json(200, {"predictions": api.predictions(limit)})
+                        rows = api.predictions(limit)
                     except LookupError:
                         self._json(503, {"detail": "Database not available"})
                     except Exception:
                         logger.exception("POST /predictions/ failed")
                         self._json(500, {"detail": "Failed to fetch predictions"})
+                    else:
+                        self._json(200, {"predictions": rows})
                 else:
                     self._json(404, {"detail": "Not Found"})
 

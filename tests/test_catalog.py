@@ -19,10 +19,6 @@ from bigdata_lab4_spark.registry import REGISTRY
 from tests.conftest import NEARDUP_QUERIES, SF_DIR, SF_DIR_SMOKE, job_group
 
 
-def test_schemas_cover_every_table():
-    assert set(SCHEMAS) == set(TABLES)
-
-
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_declared_schemas_match_the_data(spark, sf):
     """Each declared schema is the footers' inferred one, except that

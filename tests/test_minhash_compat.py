@@ -185,11 +185,11 @@ def test_simhash_pairs_match_oracle_sf01(spark, tmp_path):
     import duckdb
 
     import bigdata_lab4_spark.queries  # noqa: F401
-    from bigdata_lab4_spark.queries.llm import simhash_neardup_pairs
+    from bigdata_lab4_spark.queries.llm import l07b_simhash_neardup
     from bigdata_lab4_spark.registry import REGISTRY
 
     out = str(tmp_path / "pairs")
-    simhash_neardup_pairs(spark, SF01_DIR).write.parquet(out)
+    l07b_simhash_neardup(spark, SF01_DIR).write.parquet(out)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF01_DIR}/documents.parquet'"

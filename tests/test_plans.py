@@ -367,7 +367,11 @@ def test_lsh_band_joins_runtime_single_fingerprint_pass(spark):
     one subtree per branch; reuse is decided per query-stage at
     runtime). Also: no BroadcastHashJoin anywhere — the band join
     must stay shuffled+salted at runtime (AQE must not have converted
-    it back to an unbounded broadcast)."""
+    it back to an unbounded broadcast). And the join condition starts
+    with the pair order ``d1 < d2``, so one compare drops half of the
+    band matches before any per-band compare or verify runs."""
+    import re
+
     from bigdata_lab4_spark.registry import REGISTRY
     import bigdata_lab4_spark.queries  # noqa: F401
 
@@ -377,6 +381,9 @@ def test_lsh_band_joins_runtime_single_fingerprint_pass(spark):
         assert "ReusedExchange" in final, name
         assert "ShuffledHashJoin" in final, name
         assert "BroadcastHashJoin" not in final, name
+        cond = re.search(r"ShuffledHashJoin .*?, Inner, Build\w+, (.*)", final)
+        assert cond, name
+        assert re.match(r"\(*d1#\d+L < d2#\d+L\)", cond.group(1)), (name, cond.group(1))
 
 
 def test_s08_streams_the_fact_table(plans):

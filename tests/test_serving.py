@@ -9,8 +9,12 @@ import datetime
 import json
 import logging
 import os
+import re
+import socket
+import struct
 import sys
 import threading
+import time
 import urllib.request
 
 import pyarrow as pa
@@ -207,6 +211,88 @@ def test_requests_run_on_the_pool_until_close(spark, tiny_model, tmp_path, monke
     assert len(ran_on) == 20 and len(threads) <= server.pool._max_workers
     assert all(t.name.startswith("sentiment-api") for t in threads)
     assert not any(t.is_alive() for t in threads)
+
+
+def test_idle_clients_are_dropped_after_the_read_timeout(
+    spark, tiny_model, monkeypatch, caplog
+):
+    """One more idle connection than the pool has threads (each
+    connected, nothing sent but, on one, the start of a ``/predict/``
+    body) holds every thread and queues the next one; ``/predict/`` is
+    still answered once their read timeout runs out. The stalled body is
+    dropped like the silent clients: no 500 written, nothing logged. The
+    timeout is lowered only to keep the test short."""
+    assert serving.READ_TIMEOUT_S == 5  # the reference's uvicorn keep-alive
+    monkeypatch.setattr(serving, "READ_TIMEOUT_S", 1)
+    server, _ = SentimentAPI(spark, tiny_model).start_background()
+    idle = []
+    try:
+        port = server.server_address[1]
+        idle = [
+            socket.create_connection(("127.0.0.1", port))
+            for _ in range(server.pool._max_workers + 1)
+        ]
+        idle[0].sendall(
+            b"POST /predict/ HTTP/1.1\r\nHost: x\r\nContent-Length: 10\r\n\r\n{}"
+        )
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/predict/", method="POST",
+            data=json.dumps({"message": "great happy"}).encode(),
+        )
+        t0 = time.perf_counter()
+        with urllib.request.urlopen(req, timeout=15) as resp:
+            out = json.loads(resp.read())
+        waited = time.perf_counter() - t0
+        idle[0].settimeout(5)
+        stalled = idle[0].recv(4096)
+    finally:
+        for sock in idle:
+            sock.close()
+        server.shutdown()
+        server.server_close()
+    assert out == {"sentiment": POSITIVE}
+    assert waited < 1 + 3
+    assert stalled == b""
+    assert [r for r in caplog.records if r.name == serving.__name__] == []
+
+
+def test_client_that_left_is_one_warning_not_a_failed_route(
+    spark, tiny_model, monkeypatch, caplog, capfd
+):
+    """A client that closes its connection while its prediction runs:
+    the 200 it can no longer receive is logged as one warning on the
+    module logger, not as a failed route with a 500 written after it,
+    and socketserver prints nothing to stderr."""
+    api = SentimentAPI(spark, tiny_model)
+    scored = threading.Event()
+    left = threading.Event()
+
+    def slow(message):
+        scored.set()
+        left.wait(10)
+        return POSITIVE
+
+    monkeypatch.setattr(api, "predict", slow)
+    server, _ = api.start_background()
+    capfd.readouterr()
+    with caplog.at_level(logging.WARNING, logger=serving.__name__):
+        try:
+            sock = socket.create_connection(("127.0.0.1", server.server_address[1]))
+            sock.sendall(
+                b"POST /predict/ HTTP/1.1\r\nHost: x\r\nContent-Length: 2\r\n\r\n{}"
+            )
+            assert scored.wait(10)
+            # linger 0: close with a reset, so the server's first write fails
+            sock.setsockopt(socket.SOL_SOCKET, socket.SO_LINGER, struct.pack("ii", 1, 0))
+            sock.close()
+        finally:
+            left.set()
+            server.shutdown()
+            server.server_close()  # waits for the request's thread
+    records = [r for r in caplog.records if r.name == serving.__name__]
+    assert [r.levelno for r in records] == [logging.WARNING]
+    assert re.search(r"BrokenPipeError|ConnectionResetError", records[0].getMessage())
+    assert "Traceback" not in capfd.readouterr().err
 
 
 def test_failed_append_is_logged_counted_and_still_served(
